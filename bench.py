@@ -215,9 +215,11 @@ def main() -> None:
     # so measured timings reflect steady-state execution.  (Measured: the
     # minhash pipeline's generated-code compilation alone costs tens of
     # seconds on first evaluation in a loaded JVM.)
+    from signal_messenger_vector_database_spark.io.sources import warmup_dir
+
     for name in HEADLINE:
         if name in specs:
-            specs[name].fn(spark, "/root/testdata/sf0.001").write.format(
+            specs[name].fn(spark, warmup_dir(sf_dir)).write.format(
                 "noop"
             ).mode("overwrite").save()
 

@@ -37,6 +37,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def warmup_dir(sf_dir: str) -> str:
+    """The smallest fixture scale beside ``sf_dir`` (``<parent>/sf0.001``),
+    for codegen/JIT warm-up passes; ``sf_dir`` itself when there is none."""
+    small = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.001")
+    return small if os.path.isdir(small) else sf_dir
+
+
 def parquet_row_count(sf_dir: str, name: str) -> int:
     """Exact table row count from parquet FOOTER metadata — no Spark job,
     no data pages read.

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..io.materialize import materialize
+
 _PIECE_SCHEMA = StructType(
     [
         StructField("parts", ArrayType(BinaryType()), False),
@@ -115,7 +117,7 @@ def bpe_train_merges(
     merge table: (rank, token (lowercase hex of the merged bytes),
     pair_count).  Stops early when no pair reaches count 2 (the
     reference trainer's stopping rule)."""
-    corpus = piece_frequencies(docs, text_col).localCheckpoint(eager=False)
+    corpus = materialize(piece_frequencies(docs, text_col), "bpe corpus", "lazy")
     out: list[tuple[int, str, int]] = []
     for rank in range(1, n_merges + 1):
         pairs = (
@@ -143,9 +145,11 @@ def bpe_train_merges(
             break
         a, b, c = bytes(best[0].a), bytes(best[0].b), int(best[0].c)
         out.append((rank, (a + b).hex(), c))
-        corpus = corpus.select(
-            F.expr(_apply_merge(a.hex(), b.hex())).alias("parts"), "freq"
-        ).localCheckpoint(eager=False)
+        corpus = materialize(
+            corpus.select(F.expr(_apply_merge(a.hex(), b.hex())).alias("parts"), "freq"),
+            "bpe corpus",
+            "lazy",
+        )
     return spark.createDataFrame(
         out, "rank int, token string, pair_count long"
     )

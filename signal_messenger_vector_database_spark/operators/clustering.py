@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..io.materialize import materialize, release
+
 
 def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Add ``cluster`` and ``d2`` (squared L2 to that cluster).
@@ -93,7 +95,7 @@ def kmeans_fit(
     centroids are the k lowest-id vectors (k-means++ would sample;
     determinism matters more here for testability)."""
     emb = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    emb = emb.persist()
+    emb = materialize(emb, "kmeans input", "cache")
     centroids = (
         emb.orderBy("vec_id")
         .limit(k)
@@ -111,7 +113,7 @@ def kmeans_fit(
         # read it — without the cache every action re-runs the whole
         # accumulated Lloyd lineage (measured 10 s for 3 rounds over 2k
         # vectors at sf0.1; ~2 s with the cache)
-        assigned = _assign(emb, centroids).persist()
+        assigned = materialize(_assign(emb, centroids), "lloyd round", "cache")
         # tol < 0 pins the iteration count (kmeans_lloyd3, semdedup): the
         # inertia exists only for the convergence test, so skip its
         # per-round driver action entirely — the whole fixed-round DAG
@@ -119,11 +121,11 @@ def kmeans_fit(
         if tol >= 0:
             inertia = assigned.agg(F.sum("d2")).first()[0]
             history.append(float(inertia))
-        if prev is not None:
-            prev.unpersist()
+        if prev is not None:  # released now: rounds would pile up
+            release(prev)
         prev = assigned
         if len(history) >= 2 and abs(history[-2] - history[-1]) <= tol * max(history[-2], 1.0):
             break
         centroids = _update(assigned)
-    emb.unpersist()
+    release(emb)
     return assigned.select("vec_id", "cluster", "d2"), history

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io.materialize import materialize, release
+
 # ---------------------------------------------------------------------------
 # shingling
 
@@ -159,11 +161,10 @@ def lsh_candidate_pairs(
     at scale the signature build (a full pass over the corpus) must not
     run twice.  Callers whose ``signatures`` is already a projection of a
     frame THEY persist (curation_pipeline's combined minhash table) pass
-    ``persist_sigs=False`` — the internal persist is unreachable from
-    outside and would otherwise pin a duplicate cached copy for the
-    session (ADVICE r14)."""
+    ``persist_sigs=False`` — the internal cache would otherwise hold a
+    duplicate copy (ADVICE r14)."""
     if persist_sigs:
-        signatures = signatures.persist()
+        signatures = materialize(signatures, "lsh signatures", "cache")
     banded = signatures.select(F.col(id_col), *band_key_cols())
     exploded = explode_band_keys(banded, id_col)
     a = exploded.alias("a")
@@ -197,7 +198,7 @@ def jaccard_verify(
     copy per micro-batch — the internal persist is unreachable from
     outside) pass ``persist_sets=False``."""
     if persist_sets:
-        shingle_sets = shingle_sets.persist()
+        shingle_sets = materialize(shingle_sets, "shingle sets", "cache")
     sa = shingle_sets.select(
         F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a")
     )
@@ -654,12 +655,12 @@ def connected_components(
     # band join + Jaccard verify per round — measured as the bulk of
     # curation_pipeline's cost).  One eager checkpoint of the tiny
     # (2 x n_pairs) edge list runs that pipeline exactly once.
-    edges = fwd.union(rev).localCheckpoint()
-    labels = (
+    edges = materialize(fwd.union(rev), "cc edges")
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
+        .select("id", F.col("id").alias("label")),
+        "cc labels",
     )
     for it in range(max_iter):
         nbr_min = (
@@ -672,7 +673,7 @@ def connected_components(
         # extra labels-vs-labels shuffle join per round just to count
         # changes; this one counts rows of the already-checkpointed
         # frame (r15, same labels bit-for-bit).
-        new_labels = (
+        new_labels = materialize(
             labels.join(nbr_min, labels["id"] == nbr_min["nid"], "left")
             .select(
                 "id",
@@ -682,8 +683,8 @@ def connected_components(
                 (
                     F.coalesce("nbr_label", F.col("label")) < F.col("label")
                 ).alias("_changed"),
-            )
-            .localCheckpoint()
+            ),
+            "cc labels",
         )
         labels = new_labels.select("id", "label")
         # round 1 always changes a label when any edge exists (the
@@ -732,10 +733,10 @@ def strip_boilerplate(
             ).alias("seg"),
         )
         .withColumn("fp", F.md5("seg"))
-        # persisted: four consumers (hot, n_seg, n_rm, head) would each
+        # cached: four consumers (hot, n_seg, n_rm, head) would each
         # re-run the scan + normalize + explode + md5 subtree (the
         # _span_windows lesson, r8 code review both rounds)
-        .persist()
+        .transform(materialize, "boilerplate segments", "cache")
     )
     hot = (
         segs.groupBy("fp")
@@ -824,7 +825,7 @@ def lsh_dedup_batch(
     banded = (
         minhash_with_shingles(batch_df, id_col="doc_id", text_col="text")
         .select("doc_id", "shingles", *band_key_cols())
-        .persist()
+        .transform(materialize, "batch bands", "cache")
     )
     new_b = explode_band_keys(banded, "doc_id")
 
@@ -845,7 +846,7 @@ def lsh_dedup_batch(
     cand = within
     hist = None
     if _os.path.isdir(index_dir):
-        hist = spark.read.parquet(index_dir).persist()
+        hist = materialize(spark.read.parquet(index_dir), "band index", "cache")
         h = explode_band_keys(hist, "doc_id").alias("h")
         n2 = new_b.alias("n")
         cross = (
@@ -862,7 +863,7 @@ def lsh_dedup_batch(
             .distinct()
         )
         cand = within.unionByName(cross).distinct()
-    cand = cand.persist()
+    cand = materialize(cand, "batch candidates", "cache")
 
     sets = banded.select("doc_id", "shingles")
     if hist is not None:
@@ -874,7 +875,7 @@ def lsh_dedup_batch(
         sets = sets.unionByName(
             hist.select("doc_id", "shingles").join(touched, "doc_id", "semi")
         )
-    sets = sets.persist()
+    sets = materialize(sets, "batch sets", "cache")
     verified = jaccard_verify(
         cand, sets, id_col="doc_id", threshold=threshold, persist_sets=False
     )
@@ -884,6 +885,7 @@ def lsh_dedup_batch(
     if pairs_dir is not None:
         verified.write.mode("append").parquet(pairs_dir)
     banded.write.mode("append").parquet(index_dir)
+    # released per micro-batch: they would pile up across the drain
     for df in (banded, cand, sets) + ((hist,) if hist is not None else ()):
-        df.unpersist()
+        release(df)
     return stats

@@ -153,10 +153,11 @@ def send_with_sync_barrier(
     # 2. dispatch: stream the outbound rows through a foreachBatch sink
     # (one-shot AvailableNow over the staged batch) so the send is the
     # same drain-then-act sink shape the reference runs
-    import tempfile
     import uuid as _uuid
 
-    stage = tempfile.mkdtemp(prefix="smvd-outbound-") + "/batch"
+    from ..io.materialize import temp_dir
+
+    stage = temp_dir("smvd-outbound-") + "/batch"
     outbound.write.mode("overwrite").parquet(stage)
     from ..streaming.ingest import await_drained, streaming_session
 
@@ -166,7 +167,7 @@ def send_with_sync_barrier(
         stream.writeStream.foreachBatch(
             foreach_batch_dispatch(dispatcher, timestamp_ms)
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-send-"))
+        .option("checkpointLocation", temp_dir("smvd-ckpt-send-"))
         .queryName(f"send_{_uuid.uuid4().hex[:8]}")
         .trigger(availableNow=True)
         .start()

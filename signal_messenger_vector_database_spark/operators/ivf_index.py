@@ -90,6 +90,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io.materialize import hold, materialize, release
+
 _log = logging.getLogger(__name__)
 
 # observable self-heal tally (ADVICE r13): a healthy deployment sees 0
@@ -268,20 +270,12 @@ def _memo_value_healthy(val) -> bool:
     return True
 
 
-def _unpersist_memo_value(val) -> None:
-    """Best-effort EXPLICIT release of an evicted entry's checkpoint
-    blocks: a localCheckpoint'ed frame's analyzed plan is a LogicalRDD
-    whose rdd carries the MEMORY_AND_DISK blocks — unpersist it rather
+def _release_memo_value(val) -> None:
+    """EXPLICIT release of an evicted entry's checkpoint blocks, rather
     than waiting for GC + ContextCleaner to notice the dropped
-    reference.  Values are a frame or a tuple of frames (the PQ pair).
-    Failures (Spark Connect has no _jdf; a never-materialized lazy
-    checkpoint) degrade to the old behavior: blocks become reclaimable
-    when the reference drops."""
-    for jrdd in _memo_frame_jrdds(val):
-        try:
-            jrdd.unpersist(False)
-        except Exception:
-            pass
+    reference.  Values are a frame or a tuple of frames (the PQ pair)."""
+    for df in val if isinstance(val, tuple) else (val,):
+        release(df)
 
 
 def _frame_fingerprint(df_or_tuple) -> str:
@@ -340,14 +334,16 @@ def _memo_get_or_build(
             "%s — rebuilding", _MEMO_HEAL_COUNT, family[:2],
         )
     val = build()
+    # the memo's frames outlive the query that built them
+    hold(*(val if isinstance(val, tuple) else (val,)))
     if got is not None:
         del memo[family]
-        _unpersist_memo_value(got[2])
+        _release_memo_value(got[2])
     memo[family] = (stamp, fingerprint, val)
     while len(memo) > _memo_max():
         oldest = next(iter(memo))
         evicted = memo.pop(oldest)
-        _unpersist_memo_value(evicted[2])
+        _release_memo_value(evicted[2])
     return val
 
 
@@ -449,7 +445,7 @@ def shared_hier_assignment(
         )
         return _memo_get_or_build(
             spark, family, _content_stamp(corpus_token),
-            lambda: inline().localCheckpoint(eager=False),
+            lambda: materialize(inline(), "ivf assignment", "lazy"),
             fingerprint=_frame_fingerprint(emb),
         )
     key = hashlib.md5(
@@ -533,8 +529,8 @@ def shared_hier_assignment_delta(
         stamp = f"{_content_stamp(base_token)};{_content_stamp(delta_token)}"
         return _memo_get_or_build(
             spark, family, stamp,
-            lambda: assign(base.unionByName(delta)).localCheckpoint(
-                eager=False
+            lambda: materialize(
+                assign(base.unionByName(delta)), "ivf assignment", "lazy"
             ),
             fingerprint=_frame_fingerprint((base, delta)),
         )
@@ -653,7 +649,7 @@ def shared_hier_assignment_chain(
         )
         return _memo_get_or_build(
             spark, family, stamp,
-            lambda: assign(union_all()).localCheckpoint(eager=False),
+            lambda: materialize(assign(union_all()), "ivf assignment", "lazy"),
             fingerprint=_frame_fingerprint(tuple([base] + list(deltas))),
         )
     acc = shared_hier_assignment(
@@ -782,7 +778,7 @@ def shared_pq_encode_delta(
         stamp = f"{_content_stamp(base_token)};{_content_stamp(delta_token)}"
         codes = _memo_get_or_build(
             spark, family, stamp,
-            lambda: encode().localCheckpoint(eager=False),
+            lambda: materialize(encode(), "pq delta codes", "lazy"),
             fingerprint=_frame_fingerprint(delta_subs),
         )
         return af_base.unionByName(codes), cb
@@ -1232,7 +1228,8 @@ def compact_cells(
         cell_candidates(spark, path, flagged_cids)  # direct-path read:
         # only the flagged cells' directories are listed or opened
         .join(tomb, id_col, "left")
-        .localCheckpoint()  # eager: cut lineage to `path` before rewrite
+        # eager: cut lineage to `path` before rewrite
+        .transform(materialize, "compaction input")
     )
     stats = (
         tagged.groupBy("cid")
@@ -1248,7 +1245,7 @@ def compact_cells(
             "n_removed",
             (F.col("n_before") - F.col("n_removed")).alias("n_after"),
         )
-        .localCheckpoint()
+        .transform(materialize, "compaction stats")
     )
     survivors = tagged.filter(F.col("_tomb").isNull()).drop("_tomb")
     (

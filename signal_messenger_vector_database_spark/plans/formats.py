@@ -14,18 +14,18 @@ not bit-roundtrippable in general and belongs in binary formats.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.materialize import temp_dir
 from ..io.sources import load_table
 from .registry import QuerySpec
 
 
 def _csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="smvd-csv-")
+    out = temp_dir("smvd-csv-")
     path = os.path.join(out, "customer_csv")
     load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
@@ -49,7 +49,7 @@ FROM customer GROUP BY c_mktsegment
 
 
 def _jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="smvd-jsonl-")
+    out = temp_dir("smvd-jsonl-")
     path = os.path.join(out, "orders_jsonl")
     load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
@@ -87,7 +87,7 @@ SPECS: dict[str, QuerySpec] = {
 
 
 def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="smvd-orc-")
+    out = temp_dir("smvd-orc-")
     path = os.path.join(out, "lineitem_orc")
     load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
@@ -117,7 +117,7 @@ SPECS["orc_roundtrip"] = QuerySpec(
 
 
 def _schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = tempfile.mkdtemp(prefix="smvd-evo-")
+    out = temp_dir("smvd-evo-")
     path = os.path.join(out, "orders_evo")
     orders = load_table(spark, sf_dir, "orders")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from .registry import QuerySpec
 
@@ -83,8 +84,8 @@ def pagerank_rounds(edges: DataFrame, iters: int, mode: str = "auto",
 
     if mode == "shuffle":
         edges = edges.repartition("a")
-    edges = edges.persist()
-    deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).persist()
+    edges = materialize(edges, "edges", "cache")
+    deg = materialize(edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg")), "degrees", "cache")
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n"))
     # the 1-row count frame is always broadcast — that is not the gated part
     base = deg.crossJoin(F.broadcast(n_nodes))
@@ -207,7 +208,7 @@ def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _co_order_edges(spark, sf_dir).persist()
+    edges = materialize(_co_order_edges(spark, sf_dir), "edges", "cache")
     deg = (
         edges.select(F.col("a").alias("n"))
         .union(edges.select(F.col("b").alias("n")))
@@ -226,7 +227,7 @@ def _triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(a_first, F.col("da")).otherwise(F.col("db")).alias("dsrc"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).persist()
+    ).transform(materialize, "oriented edges", "cache")
     # edge-iterator counting: per oriented edge (a, b), triangles that
     # pivot on it are |N+(a) ∩ N+(b)| — each triangle x->y, x->z, y->z is
     # counted exactly once, at edge (x, y).  Materializing adjacency as
@@ -282,7 +283,7 @@ _BFS_HOPS = 3
 
 
 def _bfs_khops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _edges(spark, sf_dir).persist()
+    edges = materialize(_edges(spark, sf_dir), "edges", "cache")
     dist = edges.sparkSession.createDataFrame(
         [(_BFS_SRC, 0)], "node string, hops int"
     )

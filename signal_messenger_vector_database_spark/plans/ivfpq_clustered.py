@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
+from ..io.materialize import materialize
 from ..io.sources import load_table, parquet_row_count
 from .registry import QuerySpec
 
@@ -195,7 +196,7 @@ def _rc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         _rc_vec_expr(
             "topic", "concat('r', CAST(doc_id AS STRING))"
         ).alias("embedding"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "residual corpus", "lazy")
 
 
 # the exact squared-L2 fold is retrieval_eval's _cl_d2 (ONE definition
@@ -241,7 +242,7 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     assign = shared_hier_assignment(
         spark, vecs, f"{sf_dir}/documents|rcorpus|{n}", k, hier_super_count(k)
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "coarse assignment", "lazy")
 
     # residual subvector table: r = v - centroid(cell(v)), exact in
     # doubles (both operands are multiples of 2^-20), sliced into the
@@ -262,7 +263,7 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"j -> slice(rv, j * {_RCSUB} + 1, {_RCSUB}))"
             )
         ).alias("sub_j", "sv"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "residual subvectors", "lazy")
     from ..operators.ivf_index import shared_pq_parts
 
     af, cb = shared_pq_parts(
@@ -349,7 +350,7 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         assign.join(F.broadcast(probed_arm), "cid")
         .select("np", "qid", "vec_id", "cid")
-        .localCheckpoint(eager=False)
+        .transform(materialize, "curve candidates", "lazy")
     )
     # broadcast the candidate set (r16, guide §3.1): cand is bounded by
     # |Q| * Σnp * cell-size (the scaled-k rule caps cells), so at any

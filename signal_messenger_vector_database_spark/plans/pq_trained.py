@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from .registry import QuerySpec
 
@@ -143,7 +144,7 @@ def _op_trained_parts(spark: SparkSession, sf_dir: str):
     # sf0.1, bit-identical — io.sources.ensure_parallelism)
     from ..io.sources import ensure_parallelism
 
-    subs = ensure_parallelism(_op_sub_rows(emb)).localCheckpoint(eager=False)
+    subs = materialize(ensure_parallelism(_op_sub_rows(emb)), "pq subvectors", "lazy")
     # routed through the r11 build-once seam: the three trained-PQ
     # queries retrain IDENTICAL codebooks (inline when
     # SMVD_IVF_CACHE_DIR is unset — byte-identical)
@@ -244,9 +245,9 @@ def pq_train_inplace(
                 "code",
                 F.array(*[F.col(f"_m{i}") for i in range(d)]).alias("cw"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, "pq codebooks", "lazy")
         )
-    final = assign(cb).select("vec_id", "sub_j", "code").localCheckpoint(eager=False)
+    final = materialize(assign(cb).select("vec_id", "sub_j", "code"), "pq codes", "lazy")
     return final, cb
 
 
@@ -682,7 +683,7 @@ def _dim_ablation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             _OPTOPK,
         ).select("qid", "vec_id")
 
-    exact = topk_ids(64).localCheckpoint(eager=False)
+    exact = materialize(topk_ids(64), "exact top-k", "lazy")
     out = None
     for d in _ABLATION_DIMS:
         # the d=64 arm IS the ground truth — recall 1.0 by construction;
@@ -814,11 +815,12 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
     )
 
+    qs = _op_query_vecs()
     qfull = spark.createDataFrame(
-        [(qid, q) for qid, q in enumerate(_op_query_vecs())],
+        [(qid, q) for qid, q in enumerate(qs)],
         "qid int, qv array<double>",
     )
-    # per-query cell ranking: k cells x 5 queries (tiny — the window is
+    # per-query cell ranking: k cells x |Q| queries (tiny — the window is
     # bounded by k per query, an eval-set shape, not a corpus scan)
     wq = Window.partitionBy("qid").orderBy(F.desc("qsim"), "cid")
     probed = (
@@ -858,7 +860,7 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         assign.join(F.broadcast(probed_arm), "cid")
         .select("arm", "qid", "vec_id")
-        .localCheckpoint(eager=False)
+        .transform(materialize, "curve candidates", "lazy")
     )
 
     af, trained = _op_trained_parts(spark, sf_dir)
@@ -873,7 +875,7 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         af.join(F.broadcast(lut), ["sub_j", "code"])
         .groupBy("qid", "vec_id")
         .agg(F.sum("ld").alias("adc"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "adc distances", "lazy")
     )
     dists_bounded = adc_full.join(
         F.broadcast(cand), ["qid", "vec_id"]
@@ -906,14 +908,14 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("sum_cand")
     ).unionByName(
         spark.createDataFrame(
-            [("all", 5 * n)], "arm string, sum_cand long"
+            [("all", len(qs) * n)], "arm string, sum_cand long"
         )
     )
     return (
         perq.groupBy("arm", "np")
         .agg(
             F.sum("nh").alias("nht"),
-            F.min(F.col("nh").cast("double") / F.lit(10.0)).alias(
+            F.min(F.col("nh").cast("double") / F.lit(float(_OPTOPK))).alias(
                 "recall_min"
             ),
         )
@@ -922,11 +924,13 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "arm",
             F.col("np").cast("int").alias("nprobe_eff"),
             F.col("sum_cand").cast("long").alias("sum_cand"),
-            (F.col("sum_cand").cast("double") / F.lit(float(5 * n))).alias(
+            (F.col("sum_cand").cast("double") / F.lit(float(len(qs) * n))).alias(
                 "cand_frac"
             ),
             F.col("nht").cast("long").alias("n_hits"),
-            (F.col("nht").cast("double") / F.lit(50.0)).alias("recall_mean"),
+            (F.col("nht").cast("double") / F.lit(float(len(qs) * _OPTOPK))).alias(
+                "recall_mean"
+            ),
             "recall_min",
         )
         .orderBy("nprobe_eff", "arm")
@@ -942,6 +946,7 @@ def _ivf_pq_operating_curve_sql() -> str:
         "i -> (qs.qv[i] - t.cw[i]) * (qs.qv[i] - t.cw[i])))"
     ).format(n=_OPD + 1)
     arm_rows = ", ".join(f"('{a}', {a})" for a in _CURVE_ARMS)
+    n_q = len(_OP_QUESTIONS)
     return f"""
 WITH {HIER_ASSIGN_CTES},
 {_op_trained_cte_body()},
@@ -999,10 +1004,10 @@ candn AS (SELECT arm, COUNT(*) AS sum_cand FROM cand GROUP BY arm)
 SELECT p2.arm, p2.np AS nprobe_eff,
        CAST(c2.sum_cand AS BIGINT) AS sum_cand,
        CAST(c2.sum_cand AS DOUBLE)
-         / (5.0 * (SELECT COUNT(*) FROM embeddings)) AS cand_frac,
+         / ({float(n_q)} * (SELECT COUNT(*) FROM embeddings)) AS cand_frac,
        CAST(SUM(p2.nh) AS BIGINT) AS n_hits,
-       CAST(SUM(p2.nh) AS DOUBLE) / 50.0 AS recall_mean,
-       MIN(CAST(p2.nh AS DOUBLE) / 10.0) AS recall_min
+       CAST(SUM(p2.nh) AS DOUBLE) / {float(n_q * _OPTOPK)} AS recall_mean,
+       MIN(CAST(p2.nh AS DOUBLE) / {float(_OPTOPK)}) AS recall_min
 FROM perq p2 JOIN candn c2 USING (arm)
 GROUP BY p2.arm, p2.np, c2.sum_cand
 ORDER BY nprobe_eff, arm
@@ -1046,9 +1051,9 @@ def _pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     subs_all = _op_sub_rows(emb)
     # base subs feed the Lloyd round repeatedly: spread + checkpoint
     # (the _op_trained_parts discipline); delta subs are encoded once
-    base_subs = ensure_parallelism(
-        subs_all.filter(F.col("vec_id") < cut)
-    ).localCheckpoint(eager=False)
+    base_subs = materialize(
+        ensure_parallelism(subs_all.filter(F.col("vec_id") < cut)), "base subvectors", "lazy"
+    )
     delta_subs = subs_all.filter(F.col("vec_id") >= cut)
     codes, _cb = shared_pq_encode_delta(
         spark,

@@ -52,9 +52,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io.materialize import query_scope
+
 
 @dataclass(frozen=True)
 class QuerySpec:
+    # every call runs in a query scope (io/materialize.py): whatever the
+    # build pins is released once its result is materialized
     fn: Callable[[SparkSession, str], DataFrame]
     # str = the DuckDB SQL; zero-arg callable = built lazily on first
     # oracle_sql() access (for oracles that read snapshot fixtures —
@@ -63,6 +67,9 @@ class QuerySpec:
     # instead of just the one); None = rows-only.
     oracle: str | Callable[[], str] | None = None
     description: str = ""
+
+    def __post_init__(self):
+        object.__setattr__(self, "fn", query_scope(self.fn))
 
 
 def resolve_oracle(name: str, spec: QuerySpec) -> str | None:

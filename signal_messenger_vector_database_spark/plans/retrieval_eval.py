@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..io.materialize import materialize
 from ..io.sources import load_table, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
 from .ivf_sql import HIER_ASSIGN_CTES as _HIER_ASSIGN_CTES
@@ -579,7 +580,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cl_vec_expr(
             "topic", "concat('d', CAST(doc_id AS STRING))"
         ).alias("v"),
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "clustered corpus", "lazy")
     # Seeds and query vectors are FROZEN index/eval constants.  r15:
     # computed driver-side in PYTHON from the 32 topic strings (one
     # 32-row pushed-down scan) instead of two collect jobs over the md5
@@ -664,7 +665,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         assign.join(F.broadcast(probed_arm), "cid")
         .select("np", "qid", "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(materialize, "recall candidates", "lazy")
     )
 
     scored = (
@@ -1076,7 +1077,7 @@ def _bte_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage cut: the 32-md5 projection must materialize once, not
     # inline into the assignment cross join (the ivf_recall_clustered
     # lesson — 5.1M md5 evals without it)
-    return sides[0].unionByName(sides[1]).localCheckpoint(eager=False)
+    return sides[0].unionByName(sides[1]).transform(materialize, "bitext corpus", "lazy")
 
 
 def _bitext_mining_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1098,8 +1099,8 @@ def _bitext_mining_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, corpus, f"{sf_dir}/documents|bte|{2 * n_docs}", k, hier_super_count(k)
     ).withColumnRenamed("cid", "cluster")
     split = capped_cell_split(
-        assign.withColumn("pair", F.expr("vec_id DIV 2")).localCheckpoint(
-            eager=False
+        assign.withColumn("pair", F.expr("vec_id DIV 2")).transform(
+            materialize, "bitext assignment", "lazy"
         ),
         cap=_KNN_CAP,
         hash_col="pair",
@@ -1115,7 +1116,7 @@ def _bitext_mining_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             l2_norm("embedding").alias("nrm"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "bitext vectors", "lazy")
     )
     x = vecs.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("src"),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from ..operators.ann import exact_cosine_pairs, ivf_assign, lsh_cosine_pairs
 from ..operators.dedup import (
@@ -113,7 +114,9 @@ def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(load_table(spark, sf_dir, "documents"))
     # sets + signatures from ONE explode/shuffle, persisted once; banding
     # and the Jaccard verify are projections of the same materialization
-    combined = minhash_with_shingles(docs, id_col="doc_id", text_col="text").persist()
+    combined = materialize(
+        minhash_with_shingles(docs, id_col="doc_id", text_col="text"), "minhash", "cache"
+    )
     sh = combined.select("doc_id", "shingles")
     sigs = combined.drop("shingles")
     cands = lsh_candidate_pairs(sigs, id_col="doc_id")
@@ -475,7 +478,9 @@ def _minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_with_shingles
 
     docs = _augmented_docs(load_table(spark, sf_dir, "documents"))
-    combined = minhash_with_shingles(docs, id_col="doc_id", text_col="text").persist()
+    combined = materialize(
+        minhash_with_shingles(docs, id_col="doc_id", text_col="text"), "minhash", "cache"
+    )
     sigs = combined.drop("shingles")
     cands = lsh_candidate_pairs(sigs, id_col="doc_id")
     a = combined.select(
@@ -704,7 +709,7 @@ def _sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = (
         d.withColumn("rn", rn)
         .withColumn("bk", F.floor((F.col("rn") - 1) / _SN_WINDOW))
-        .persist()
+        .transform(materialize, "sorted neighborhood", "cache")
     )
     # y.rn in (x.rn, x.rn + w] can only live in x's bucket or the next
     # one, so x probes both and the join key carries the bucket
@@ -801,7 +806,7 @@ def _shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(df_counts.filter(F.col("df") > _NGRAM_MAX_DF)),
         "shingle",
         "left_anti",
-    ).persist()
+    ).transform(materialize, "pruned shingles", "cache")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     x, y = sh.alias("x"), sh.alias("y")
     inter = (
@@ -1161,7 +1166,7 @@ def _knn_graph_fenced(
         # capped_cell_split consumes the assignment TWICE (cell-size agg
         # + tagged join) — cut the lineage so the assignment runs once
         assign = capped_cell_split(
-            assign.localCheckpoint(eager=False), cap=cap
+            materialize(assign, "fenced assignment", "lazy"), cap=cap
         )
     fence_cols = ["cluster"] + (["sub"] if cap is not None else [])
     vecs = (
@@ -1170,7 +1175,7 @@ def _knn_graph_fenced(
             "vec_id", *fence_cols, "embedding",
             l2_norm("embedding").alias("nrm"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "fenced vectors", "lazy")
     )
     a = vecs.select(
         F.col("vec_id").alias("src"),
@@ -1336,7 +1341,7 @@ def _bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = shared_hier_assignment(
         spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
     ).withColumnRenamed("cid", "cluster")
-    assign = capped_cell_split(assign.localCheckpoint(eager=False), cap=_KNN_CAP)
+    assign = capped_cell_split(materialize(assign, "knn assignment", "lazy"), cap=_KNN_CAP)
     # the two collections: rank langs by document count IN-PLAN (a
     # broadcast 5-row aggregate over a 2-row window — plan construction
     # stays job-free), then tag each vector with its document's lang
@@ -1369,7 +1374,7 @@ def _bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             l2_norm("embedding").alias("nrm"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "knn vectors", "lazy")
     )
     # lang labels deliberately NOT selected here: cand carries only the
     # sufficient statistics, and the labels re-attach after
@@ -1440,7 +1445,7 @@ def bt_margin_core(cand: DataFrame) -> DataFrame:
     # the pair set feeds four branches (two neighborhood aggregates, the
     # two mutual-rank windows) — cut the lineage so the candidate join
     # runs once
-    cand = cand.localCheckpoint(eager=False)
+    cand = materialize(cand, "knn candidates", "lazy")
     wx = Window.partitionBy("src").orderBy(F.desc("ci"), "tgt")
     wy = Window.partitionBy("tgt").orderBy(F.desc("ci"), "src")
     ranked = cand.withColumn("rk_x", F.row_number().over(wx)).withColumn(

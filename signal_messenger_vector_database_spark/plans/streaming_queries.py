@@ -11,11 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.materialize import materialize, temp_dir
 from ..io.sources import load_table
 from ..streaming.ingest import (
     await_drained,
     dedup_ingest_availablenow,
     dedup_within_watermark_availablenow,
+    drain_to_memory,
     read_events_stream,
     streaming_session,
     windowed_counts_availablenow,
@@ -28,8 +30,6 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming, which is exactly the reference's per-event contact lookup
     (src/signal/format.rs:58-68 called from the receive loop).  The static
     dim is broadcast once; every micro-batch joins against it."""
-    import uuid
-
     spark = streaming_session(spark)
     stream = read_events_stream(spark, sf_dir)
     dim = (
@@ -41,19 +41,7 @@ def _stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy(
         F.coalesce(F.col("c_mktsegment"), F.lit("<unknown>")).alias("segment")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    sink = f"stream_static_{uuid.uuid4().hex[:8]}"
-    import tempfile
-
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-ss-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(sink)
+    return drain_to_memory(agg, "stream_static", "complete")
 
 
 _STREAM_STATIC_JOIN_SQL = """
@@ -117,9 +105,6 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     older than (watermark - 1 hour) can never match a future purchase and
     is evicted.  Over a drained AvailableNow run the result equals the
     batch time-range join, which is the oracle."""
-    import tempfile
-    import uuid
-
     spark = streaming_session(spark)
     clicks = (
         read_events_stream(spark, sf_dir)
@@ -152,17 +137,7 @@ def _stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    sink = f"stream_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-ssj-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(sink)
+    return drain_to_memory(joined, "stream_stream", "append")
 
 
 _STREAM_STREAM_JOIN_SQL = """
@@ -235,8 +210,6 @@ SPECS: dict[str, QuerySpec] = {
 
 
 def _stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid
 
     spark = streaming_session(spark)
     stream = read_events_stream(spark, sf_dir)
@@ -254,17 +227,7 @@ def _stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-    sink = f"stream_sessionize_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-sess-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(sink)
+    return drain_to_memory(agg, "stream_sessionize", "complete")
 
 
 def _stream_sessionize_sql() -> str:
@@ -293,9 +256,6 @@ def _stream_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     history).  Oracle: the batch sketch SQL verbatim — a drained
     AvailableNow run over the same rows must land the identical
     histogram, hence identical quantiles."""
-    import tempfile
-    import uuid
-
     from .analytics import _qsk_bin_expr, _qsk_inputs, _qsk_quantile_pick
 
     spark = streaming_session(spark)
@@ -309,17 +269,7 @@ def _stream_sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = binned.groupBy("event_type", "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
-    sink = f"stream_qsk_{uuid.uuid4().hex[:8]}"
-    q = (
-        hist.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-qsk-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return _qsk_quantile_pick(spark.table(sink), rng)
+    return _qsk_quantile_pick(drain_to_memory(hist, "stream_qsk", "complete"), rng)
 
 
 def _stream_sketch_quantiles_sql() -> str:
@@ -421,7 +371,6 @@ def _md5_featurize(col):
 def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See the block comment above.  Returns per-cluster index accounting
     after the drain: (cid, n_chunks, n_docs, sum_tokens)."""
-    import tempfile
     import uuid
 
     from ..operators.chunking import chunk_text
@@ -433,7 +382,7 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream them with maxFilesPerTrigger=1: four real micro-batches, so
     # the delta-index path crosses trigger boundaries even in the driver
     # run (the multibatch-test pattern promoted into the query itself).
-    stage = tempfile.mkdtemp(prefix="smvd-ingest-idx-") + "/src"
+    stage = temp_dir("smvd-ingest-idx-") + "/src"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     for i in range(3):
         docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
@@ -460,7 +409,7 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = spark.createDataFrame(
         _ingest_centroids(), "cid int, cv array<double>"
     )
-    index_dir = tempfile.mkdtemp(prefix="smvd-ingest-idx-") + "/index"
+    index_dir = temp_dir("smvd-ingest-idx-") + "/index"
 
     def _delta_assign(batch_df, batch_id: int) -> None:
         # delta IVF maintenance: assign THIS batch's chunks, append to
@@ -491,7 +440,7 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedded.writeStream.foreachBatch(_delta_assign)
         .queryName(f"ingest_index_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-idx-"))
+        .option("checkpointLocation", temp_dir("smvd-ckpt-idx-"))
         .trigger(availableNow=True)
         .start()
     )
@@ -643,12 +592,31 @@ SPECS["stream_ingest_index"] = QuerySpec(
 
 
 def _stream_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    st = _drain_op_log(spark, sf_dir, "smvd-ivf-maint-")
+    # occupancy from the STREAMED state only (shared occupancy_cells);
+    # the query scope materializes it before it removes the staged
+    # delta-index/tombstone parquet this frame reads
+    return _occupancy_from_streamed(st["base_assign"], st["delta_assign"], st["tombs"])
+
+
+def _drain_op_log(spark: SparkSession, sf_dir: str, prefix: str) -> dict:
+    """Stage the insert+delete op log, stream it through foreachBatch
+    against the FROZEN base quantizer, and return the resulting state
+    frames ``base_assign``, ``delta_assign`` and ``tombs`` with the
+    streaming session, corpus, seeds, super-cell count and staging dir
+    they came from — the shared first half of the streaming maintenance
+    family (``stream_ivf_maintain`` computes occupancy flags from them;
+    ``stream_ivf_compact`` goes on to ACT: materialize the disk index,
+    compact the flagged cells, and serve off the result).  ``tombs``
+    carries a ``_tomb=True`` marker column; both log reads are
+    deduplicated against at-least-once replay."""
+    import os
+    import uuid
 
     from ..io.sources import parquet_row_count
     from ..operators.ann import (
         hier_super_count,
+        ivf_assign_hier,
         ivf_seed_centroids,
         scaled_cluster_count,
     )
@@ -660,51 +628,10 @@ def _stream_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = streaming_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") < cut)
-    seeds = ivf_seed_centroids(base, k)
-
     # ONE parent tempdir for the query's corpus-scale staging (op log,
-    # delta index, tombstone log, checkpoint), removed in the finally
-    # below once the occupancy frame is materialized — 3 bench repeats
-    # per round were accumulating corpus-sized /tmp state (ADVICE r14).
-    parent = tempfile.mkdtemp(prefix="smvd-ivf-maint-")
-    try:
-        return _stream_ivf_maintain_run(
-            spark, emb, base, seeds, cut, k, ns, parent
-        )
-    finally:
-        # under SMVD_PLAN_ONLY the returned frame is LAZY and still
-        # reads these files (dump_plans explains it later) — leak the
-        # tempdir for that tool run instead of deleting under the plan
-        import os
-
-        seeds.unpersist()  # pinned by _drain_op_log for the drain
-        if os.environ.get("SMVD_PLAN_ONLY") != "1":
-            shutil.rmtree(parent, ignore_errors=True)
-
-
-def _drain_op_log(
-    spark: SparkSession,
-    emb: DataFrame,
-    base: DataFrame,
-    seeds: DataFrame,
-    cut: int,
-    k: int,
-    ns: int,
-    parent: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Stage the insert+delete op log, stream it through foreachBatch
-    against the FROZEN base quantizer, and return the resulting state
-    frames ``(base_assign, delta_assign, tombs)`` — the shared first
-    half of the streaming maintenance family (``stream_ivf_maintain``
-    computes occupancy flags from them; ``stream_ivf_compact`` goes on
-    to ACT: materialize the disk index, compact the flagged cells, and
-    serve off the result).  ``tombs`` carries a ``_tomb=True`` marker
-    column; both log reads are deduplicated against at-least-once
-    replay."""
-    import os
-    import uuid
-
-    from ..operators.ann import ivf_assign_hier
+    # delta index, tombstone log, checkpoint), removed by the query
+    # scope once the result is materialized (ADVICE r14)
+    parent = temp_dir(prefix)
 
     # Stage the op log as FOUR files split on vec_id % 4: every
     # micro-batch carries inserts AND deletes (maxFilesPerTrigger=1).
@@ -721,14 +648,14 @@ def _drain_op_log(
                 F.lit("del").alias("op"),
             )
         )
-        .persist()  # r15: the 4 staging writes below each re-scanned
-        # the embeddings parquet + union without it
+        # r15: the 4 staging writes below each re-scanned the
+        # embeddings parquet + union without it
+        .transform(materialize, "op log", "cache")
     )
     for i in range(4):
         ops.filter(F.col("vec_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(stage)
-    ops.unpersist()
 
     idx_dir = os.path.join(parent, "delta_idx")
     tomb_dir = os.path.join(parent, "tomb_log")
@@ -736,7 +663,7 @@ def _drain_op_log(
     # r15: pin the tiny seed table for the drain — every micro-batch's
     # frozen-quantizer assignment (and the base assignment below)
     # otherwise re-scans the embeddings parquet to rebuild it
-    seeds = seeds.persist()
+    seeds = materialize(ivf_seed_centroids(base, k), "seeds", "cache")
 
     def _cycle(batch_df, batch_id: int) -> None:
         # frozen quantizer: assign ONLY this micro-batch's inserts —
@@ -789,7 +716,10 @@ def _drain_op_log(
         .distinct()
         .withColumn("_tomb", F.lit(True))
     )
-    return base_assign, delta_assign, tombs
+    return {
+        "spark": spark, "emb": emb, "seeds": seeds, "ns": ns, "parent": parent,
+        "base_assign": base_assign, "delta_assign": delta_assign, "tombs": tombs,
+    }
 
 
 def _occupancy_from_streamed(
@@ -810,34 +740,6 @@ def _occupancy_from_streamed(
         )
     )
     return occupancy_cells(tagged)
-
-
-def _stream_ivf_maintain_run(
-    spark: SparkSession,
-    emb: DataFrame,
-    base: DataFrame,
-    seeds: DataFrame,
-    cut: int,
-    k: int,
-    ns: int,
-    parent: str,
-) -> DataFrame:
-    import os
-
-    base_assign, delta_assign, tombs = _drain_op_log(
-        spark, emb, base, seeds, cut, k, ns, parent
-    )
-    # occupancy from the STREAMED state only (shared occupancy_cells).
-    # materialize NOW (localCheckpoint is eager): the caller's finally
-    # removes the staged delta-index/tombstone parquet this frame reads —
-    # the k-row occupancy table must be computed before that happens.
-    # SMVD_PLAN_ONLY=1 (tools/dump_plans.py) skips the checkpoint so
-    # EXPLAIN.md shows the real occupancy plan, not a checkpoint scan
-    # (the drain above already ran; the scan nodes listed their files)
-    occ = _occupancy_from_streamed(base_assign, delta_assign, tombs)
-    if os.environ.get("SMVD_PLAN_ONLY") == "1":
-        return occ
-    return occ.localCheckpoint()
 
 
 # Shared oracle fragments of the streaming maintenance family: the
@@ -921,49 +823,6 @@ SPECS["stream_ivf_maintain"] = QuerySpec(
 
 
 def _stream_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
-
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
-    ns = hier_super_count(k)
-    spark = streaming_session(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < cut)
-    seeds = ivf_seed_centroids(base, k)
-    parent = tempfile.mkdtemp(prefix="smvd-ivf-compact-")
-    try:
-        return _stream_ivf_compact_run(
-            spark, emb, base, seeds, cut, k, ns, parent
-        )
-    finally:
-        # see _stream_ivf_maintain: under SMVD_PLAN_ONLY the lazy frame
-        # still reads the disk index — leak the tool run's tempdir
-        import os
-
-        seeds.unpersist()  # pinned by _drain_op_log for the drain
-        if os.environ.get("SMVD_PLAN_ONLY") != "1":
-            shutil.rmtree(parent, ignore_errors=True)
-
-
-def _stream_ivf_compact_run(
-    spark: SparkSession,
-    emb: DataFrame,
-    base: DataFrame,
-    seeds: DataFrame,
-    cut: int,
-    k: int,
-    ns: int,
-    parent: str,
-) -> DataFrame:
     import os
 
     from ..functions.text import portable_round
@@ -976,16 +835,16 @@ def _stream_ivf_compact_run(
         write_cell_index,
     )
 
-    base_assign, delta_assign, tombs = _drain_op_log(
-        spark, emb, base, seeds, cut, k, ns, parent
-    )
+    st = _drain_op_log(spark, sf_dir, "smvd-ivf-compact-")
+    spark, emb, seeds, tombs = st["spark"], st["emb"], st["seeds"], st["tombs"]
+    base_assign, delta_assign = st["base_assign"], st["delta_assign"]
     # flags from the STREAMED state (shared occupancy_cells), computed
     # BEFORE the rewrite and pinned eagerly — compact_cells is about to
     # mutate the very directories this plan would otherwise re-read
-    occ = _occupancy_from_streamed(
-        base_assign, delta_assign, tombs
-    ).localCheckpoint()
-    idx_path = os.path.join(parent, "cell_idx")
+    occ = materialize(
+        _occupancy_from_streamed(base_assign, delta_assign, tombs), "occupancy"
+    )
+    idx_path = os.path.join(st["parent"], "cell_idx")
     write_cell_index(base_assign.unionByName(delta_assign), idx_path)
     stats = compact_cells(
         spark,
@@ -1003,7 +862,7 @@ def _stream_ivf_compact_run(
     # (cell_candidates opens only the 2 routed directories), tombstone
     # anti-join for unflagged cells' remaining deletes, exact re-rank
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    qcells = route_query_cells(q, seeds, ns, n_cells=2)
+    qcells = route_query_cells(q, seeds, st["ns"], n_cells=2)
     cids = [r.cid for r in qcells.select("cid").collect()]  # bounded: 2 rows
     cand = cell_candidates(spark, idx_path, cids).select("vec_id")
     live = exclude_tombstones(cand, tombs.select("vec_id"))
@@ -1020,12 +879,8 @@ def _stream_ivf_compact_run(
         .limit(5)
         .crossJoin(F.broadcast(comp))
     )
-    # materialize before the caller's finally removes the disk index;
-    # SMVD_PLAN_ONLY keeps it lazy for plan dumps (the compaction above
-    # already ran — the explained plan is the real served shape)
-    if os.environ.get("SMVD_PLAN_ONLY") == "1":
-        return served.orderBy(F.desc("sim"), F.col("vec_id"))
-    return served.localCheckpoint().orderBy(F.desc("sim"), F.col("vec_id"))
+    # the query scope materializes it before it removes the disk index
+    return served.orderBy(F.desc("sim"), F.col("vec_id"))
 
 
 def _stream_ivf_compact_sql() -> str:
@@ -1131,7 +986,6 @@ SPECS["stream_ivf_compact"] = QuerySpec(
 #     planted pairs in one batch because 1e6 % 4 = 0).
 
 def _stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     from ..operators.dedup import lsh_dedup_batch
@@ -1140,7 +994,7 @@ def _stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark = streaming_session(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
-    stage = tempfile.mkdtemp(prefix="smvd-lsh-stream-") + "/src"
+    stage = temp_dir("smvd-lsh-stream-") + "/src"
     docs = _augmented_docs(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
@@ -1155,8 +1009,8 @@ def _stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage)
     )
 
-    index_dir = tempfile.mkdtemp(prefix="smvd-lsh-stream-") + "/index"
-    pairs_dir = tempfile.mkdtemp(prefix="smvd-lsh-stream-") + "/pairs"
+    index_dir = temp_dir("smvd-lsh-stream-") + "/index"
+    pairs_dir = temp_dir("smvd-lsh-stream-") + "/pairs"
 
     # the batch body is THE shared lsh_dedup_batch (operators/dedup.py)
     # — the same code the x64 marginal-cost probe times (r12; the
@@ -1174,7 +1028,7 @@ def _stream_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream.writeStream.foreachBatch(_dedup_batch)
         .queryName(f"lsh_dedup_{uuid.uuid4().hex[:8]}")
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-lsh-"))
+        .option("checkpointLocation", temp_dir("smvd-ckpt-lsh-"))
         .trigger(availableNow=True)
         .start()
     )

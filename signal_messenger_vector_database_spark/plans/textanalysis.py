@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from ..operators.textanalysis import (
     LANG_MARKERS,
@@ -325,7 +326,7 @@ def _bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.withColumn("v", F.lag("w").over(wn))
         .filter(F.col("v").isNotNull())
         .select("doc_id", "v", "w")
-    ).persist()
+    ).transform(materialize, "bigrams", "cache")
     c_pair = bigrams.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw"))
     # C(v) = sum over w of C(v,w): derived from the pair table, not a
     # third pass over the corpus
@@ -410,7 +411,7 @@ def _collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.withColumn("v", F.lag("w").over(wn))
         .filter(F.col("v").isNotNull())
         .select("v", "w")
-    ).persist()
+    ).transform(materialize, "bigrams", "cache")
     c_pair = bigrams.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw"))
     c_left = bigrams.groupBy("v").agg(F.count(F.lit(1)).alias("c_v"))
     c_right = bigrams.groupBy("w").agg(F.count(F.lit(1)).alias("c_w"))

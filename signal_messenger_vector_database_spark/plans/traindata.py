@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import fingerprint_md5, portable_round, token_count
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from ..operators.chunking import chunk_text
 from ..operators.dedup import shingle_rows
@@ -1243,7 +1244,7 @@ def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang", F.explode(feats).alias("f"))
         .groupBy("doc_id", "lang", bucket.alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .transform(materialize, "dsir bucket counts", "cache")
     )
     # r16 (guide §2.3/§2.4): raw + target bucket counts from ONE
     # conditional aggregation over bc, corpus totals as window sums over
@@ -1383,7 +1384,7 @@ def _ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 -F.sum(F.log(F.col("c") / F.col("_n"))) / F.count(F.lit(1)), 4
             ).alias("xent")
         )
-        .persist()
+        .transform(materialize, "ccnet per-doc xent", "cache")
     )
     ranked = global_rank_family(
         perdoc,
@@ -1541,7 +1542,7 @@ def _span_windows(docs: DataFrame, with_pos: bool = False) -> DataFrame:
     string comparison on the md5 hex head — byte-identical across
     engines, no numeric conversion to disagree on.
 
-    Callers that consume the result more than once must .persist() it:
+    Callers that consume the result more than once must cache it:
     the per-position md5 Generate is the dominant compute and Catalyst
     re-runs it per consumer otherwise (.explain showed two Generate
     nodes; 3.91 s -> 2.91 s at 16x from pinning).  Materializing
@@ -1586,7 +1587,7 @@ def _dup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _span_docs(spark, sf_dir)
     # persisted: feeds BOTH the dup-set aggregate and the per-doc flag
     # join (see _span_windows' docstring)
-    wins = _span_windows(docs).persist()
+    wins = materialize(_span_windows(docs), "span windows", "cache")
     # >= 2 distinct docs ⟺ min(doc_id) != max(doc_id) (doc_id is never
     # null): same filter, but min/max partial-aggregate map-side where
     # count_distinct pays a per-(h, doc_id) distinct expansion (r16,
@@ -1929,7 +1930,7 @@ def _dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: feeds BOTH the owners aggregate and the removable join —
     # unpinned, the per-position md5 Generate runs once per consumer
     # (code-review r8 finding; see _span_windows' docstring)
-    wins = _span_windows(docs, with_pos=True).persist()
+    wins = materialize(_span_windows(docs, with_pos=True), "span windows", "cache")
     owners = (
         wins.groupBy("h")
         .agg(
@@ -2540,11 +2541,9 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
     """The stage chain docs0..docs5 built ONCE — the shared definition
     behind ``curation_pipeline`` (the funnel) and ``curation_attrition``
     (the per-reason removal report).  Returns every stage frame plus the
-    intermediates attrition attributes removals to, and ``persisted`` —
-    the frames this builder pinned, which the CALLER must unpersist once
-    its (small) output is materialized: bench runs each headline query
-    3x in one session, and stage frames left pinned accumulate across
-    the 55-query run (ADVICE r14)."""
+    intermediates attrition attributes removals to.  The stage frames
+    it pins are released by the query scope once the caller's (small)
+    output is materialized (io/materialize.py)."""
     from ..io.sources import ensure_parallelism, parquet_row_count
     from ..operators.dedup import (
         connected_components,
@@ -2592,12 +2591,12 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
         base.unionByName(planted_near)
         .unionByName(planted_exact)
         .withColumn("tokens", token_count("text"))
-        .persist()
+        .transform(materialize, "docs0", "cache")
     )
 
     # 1: Gopher quality rules (shared definition).  Persisted: the keep
     # filter and (in attrition) the per-rule reason split both read it.
-    g = _gopher_frame(docs0).persist()
+    g = materialize(_gopher_frame(docs0), "gopher", "cache")
     docs1 = docs0.join(g.filter(F.col("keep")).select("doc_id"), "doc_id")
 
     # 2: exact dedup, keep-first by fingerprint.  r15: ONE exchange (a
@@ -2612,18 +2611,23 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
     docs2 = (
         d1r.filter(F.col("_rn") == 1)
         .select("doc_id", "text", "source", "tokens")
-        .persist()  # consumers: LSH sets+sigs, the decontam gram arm,
-        # and the fate frame's joins
+        # consumers: LSH sets+sigs, the decontam gram arm, and the fate
+        # frame's joins
+        .transform(materialize, "docs2", "cache")
     )
 
     # 3: near-dup clusters, keep the component's min id.  combined is
     # the ONE persisted minhash materialization; the sig/shingle
     # projections inside the pair join read it from cache, so the
-    # operators' internal persists are turned OFF (they would pin
-    # unreachable duplicate copies for the session — ADVICE r14).
-    combined = minhash_with_shingles(
-        docs2.select("doc_id", "text"), id_col="doc_id", text_col="text"
-    ).persist()
+    # operators' internal caches are turned OFF (they would cache
+    # duplicate copies — ADVICE r14).
+    combined = materialize(
+        minhash_with_shingles(
+            docs2.select("doc_id", "text"), id_col="doc_id", text_col="text"
+        ),
+        "minhash",
+        "cache",
+    )
     pairs = jaccard_verify(
         lsh_candidate_pairs(
             combined.drop("shingles"), id_col="doc_id", persist_sigs=False
@@ -2635,12 +2639,8 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
     )
 
     # 4: decontaminate the train split against the ORIGINAL test split.
-    # r16 (guide §2.6 — overlap independent jobs): the gram arm is
-    # computed over DOCS2's train split, not docs3's, which decouples
-    # it from the LSH/CC arm entirely; a background thread materializes
-    # it while the connected-components loop below runs its eager
-    # propagation rounds (the two arms were the two largest serial
-    # blocks of the chain — ~2.3 s + ~1.9 s at sf0.1, measured).
+    # The gram arm is computed over DOCS2's train split, not docs3's
+    # (r16), which decouples it from the LSH/CC arm entirely.
     # FLAG-IDENTICAL: contaminated is only ever read through the fate
     # frame's s4 = s3 & _train & no-contam (and the attrition victim
     # chain, which tests !s1..!s3 first) — the extra members of the
@@ -2667,43 +2667,9 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
         .distinct()  # the only distinct needed: the final doc_id set
         # absorbs within-doc gram multiplicity, so the old (doc_id, g)
         # pre-join distinct was a full extra exchange for nothing (r15)
-        .persist()  # prefetched below; read once by the fate join
+        .transform(materialize, "contaminated", "cache")
     )
-
-    import os as _os
-    import threading
-
-    prefetch: threading.Thread | None = None
-    if _os.environ.get("SMVD_PLAN_ONLY") != "1":
-        # serialize the shared prefix first (one cache fill, no
-        # duplicate-compute race between the two arms), then overlap
-        docs2.count()
-        from pyspark import inheritable_thread_target
-
-        def _prefetch_contaminated() -> None:
-            try:
-                spark.sparkContext.setJobDescription(
-                    "curation: decontam arm prefetch"
-                )
-                contaminated.count()
-            except Exception as e:  # non-fatal: lineage is intact and
-                # the fate join recomputes it (and surfaces any real
-                # error) if the prefetch died
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "curation decontam prefetch failed (benign): %s", e
-                )
-
-        prefetch = threading.Thread(
-            target=inheritable_thread_target(spark)(_prefetch_contaminated),
-            daemon=True,
-        )
-        prefetch.start()
-
     labels = connected_components(pairs)
-    if prefetch is not None:
-        prefetch.join()
     # 5: per-source mixture sampling (domain_mixture's keep rule)
     rate = F.coalesce(
         *[
@@ -2766,7 +2732,7 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
             "s4", F.col("s3") & F.col("_train") & F.col("_contam").isNull()
         )
         .withColumn("s5", F.col("s4") & F.col("_mix"))
-        .persist()
+        .transform(materialize, "fate", "cache")
     )
     return {
         "docs0": docs0,
@@ -2779,7 +2745,6 @@ def _curation_chain(spark: SparkSession, sf_dir: str) -> dict:
         "mix_keep": mix_keep,
         "fate": fate,
         "n_corpus": n_corpus,
-        "persisted": [docs0, g, docs2, combined, contaminated, fate],
     }
 
 
@@ -2868,20 +2833,7 @@ def _curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "n_tokens",
     ).unionByName(pack_row)
-    # materialize the 7-row funnel NOW (localCheckpoint is eager), then
-    # release the stage frames: the persists exist for the multi-consumer
-    # build, not for the session's lifetime (ADVICE r14 — 3 bench runs
-    # per query were accumulating pinned stage frames across the run).
-    # SMVD_PLAN_ONLY=1 (tools/dump_plans.py) skips the materialization so
-    # EXPLAIN.md shows the real funnel plan, not a checkpoint scan.
-    import os
-
-    if os.environ.get("SMVD_PLAN_ONLY") == "1":
-        return funnel.orderBy("stage_id")
-    out = funnel.localCheckpoint()
-    for fr in c["persisted"]:
-        fr.unpersist()
-    return out.orderBy("stage_id")
+    return funnel.orderBy("stage_id")
 
 
 def _curation_chain_ctes_sql() -> str:
@@ -3145,17 +3097,7 @@ def _curation_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         )
     )
-    # same persist lifecycle as the funnel: materialize the small
-    # report, release the stage frames (ADVICE r14); SMVD_PLAN_ONLY
-    # skips it for plan dumps
-    import os
-
-    if os.environ.get("SMVD_PLAN_ONLY") == "1":
-        return report.orderBy("stage_id", "reason")
-    out = report.localCheckpoint()
-    for fr in c["persisted"]:
-        fr.unpersist()
-    return out.orderBy("stage_id", "reason")
+    return report.orderBy("stage_id", "reason")
 
 
 def _curation_attrition_sql() -> str:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..io.materialize import materialize
 from ..io.sources import load_table
 from .registry import QuerySpec
 
@@ -824,7 +825,7 @@ def _semdedup_fenced(
         # aggregate and the tagged join) — cut the lineage so the
         # n*(1+nprobe)*sqrt(k) assignment runs once, not per branch
         assigned = capped_cell_split(
-            assigned.localCheckpoint(eager=False), cap=cap
+            materialize(assigned, "fenced assignment", "lazy"), cap=cap
         )
     fence_cols = ["cluster"] + (["sub"] if cap is not None else [])
     # Lineage cut + per-vector norms computed ONCE (n fold passes, not
@@ -837,7 +838,7 @@ def _semdedup_fenced(
         .select(
             "vec_id", *fence_cols, "embedding", l2_norm("embedding").alias("nrm")
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "fenced vectors", "lazy")
     )
     a = vecs.select(
         F.col("vec_id").alias("id_a"),
@@ -952,7 +953,7 @@ def _semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", "cluster", "embedding", l2_norm("embedding").alias("nrm")
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "cluster vectors", "lazy")
     )
     a = vecs.select(
         F.col("vec_id").alias("id_a"),
@@ -1089,7 +1090,7 @@ def _pq_trained_parts(spark: SparkSession, sf_dir: str):
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    subs = _pq_sub_rows(emb).localCheckpoint(eager=False)
+    subs = materialize(_pq_sub_rows(emb), "pq subvectors", "lazy")
     books = _pq_codebooks()
     cb0 = spark.createDataFrame(
         [(j, k, books[j][k]) for j in range(_PQ_M) for k in range(_PQ_K)],
@@ -1419,7 +1420,7 @@ def _centroid_outlier_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "csim"
             ),
         )
-        .persist()
+        .transform(materialize, "pair similarities", "cache")
     )
     hist = scored.groupBy("label", "csim").agg(F.count(F.lit(1)).alias("c"))
     wl = Window.partitionBy("label").orderBy("csim")

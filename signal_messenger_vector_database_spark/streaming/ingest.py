@@ -19,7 +19,6 @@ Reference semantics mapped (SURVEY §2.10):
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +31,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ..io.materialize import temp_dir
+
 
 def _events_stream_schema(sf_dir: str) -> tuple[StructType, bool]:
     """Probe the fixture's parquet footer (driver-side, one metadata read)
@@ -108,6 +110,23 @@ def await_drained(q, timeout: int = 120) -> None:
         )
 
 
+def drain_to_memory(df: DataFrame, tag: str, mode: str, timeout: int = 120) -> DataFrame:
+    """Drain a streaming frame with AvailableNow into a memory sink
+    (``mode`` is its output mode) and return the sink's table; the
+    stream's checkpoint is a scratch dir of the query scope."""
+    sink = f"{tag}_{uuid.uuid4().hex[:8]}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", temp_dir(f"smvd-ckpt-{tag}-"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_drained(q, timeout)
+    return df.sparkSession.table(sink)
+
+
 def streaming_session(spark: SparkSession, state_partitions: int = 8) -> SparkSession:
     """Cloned session (shared SparkContext, independent SQLConf) with the
     stateful-shuffle partition count sized for the stream.
@@ -121,10 +140,6 @@ def streaming_session(spark: SparkSession, state_partitions: int = 8) -> SparkSe
     s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     return s
-
-
-def _tmpdir(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"smvd-{tag}-")
 
 
 def windowed_counts_availablenow(
@@ -144,17 +159,7 @@ def windowed_counts_availablenow(
             "cnt",
         )
     )
-    sink = f"win_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", _tmpdir("ckpt-win"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q)
-    return spark.table(sink)
+    return drain_to_memory(agg, "win_counts", "complete")
 
 
 def dedup_ingest_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,14 +172,14 @@ def dedup_ingest_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = read_events_stream(spark, sf_dir)
     s2 = read_events_stream(spark, sf_dir)
     deduped = s1.union(s2).dropDuplicates(["event_id"])
-    out_dir = _tmpdir("ingest-out")
+    out_dir = temp_dir("smvd-ingest-out-")
 
     def append_batch(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(os.path.join(out_dir, "events"))
 
     q = (
         deduped.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", _tmpdir("ckpt-dedup"))
+        .option("checkpointLocation", temp_dir("smvd-ckpt-dedup-"))
         .trigger(availableNow=True)
         .start()
     )
@@ -198,14 +203,14 @@ def dedup_within_watermark_availablenow(spark: SparkSession, sf_dir: str) -> Dat
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    out_dir = _tmpdir("ingest-wm-out")
+    out_dir = temp_dir("smvd-ingest-wm-out-")
 
     def append_batch(batch: DataFrame, batch_id: int) -> None:
         batch.write.mode("append").parquet(os.path.join(out_dir, "events"))
 
     q = (
         deduped.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", _tmpdir("ckpt-wmdedup"))
+        .option("checkpointLocation", temp_dir("smvd-ckpt-wmdedup-"))
         .trigger(availableNow=True)
         .start()
     )

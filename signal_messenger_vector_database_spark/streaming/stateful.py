@@ -14,8 +14,6 @@ with one file per trigger => two batches).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -30,7 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .ingest import await_drained, read_events_stream
+from ..io.materialize import temp_dir
+from .ingest import drain_to_memory
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -72,7 +71,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     # stage the same file twice so state demonstrably carries across batches
-    stage_dir = tempfile.mkdtemp(prefix="smvd-stateful-src-")
+    stage_dir = temp_dir("smvd-stateful-src-")
     import shutil
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -93,17 +92,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-state-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q, 180)
-    emitted = spark.table(sink)
+    emitted = drain_to_memory(totals, "stateful", "update", 180)
     return emitted.groupBy("user_id").agg(
         F.max("total_events").alias("total_events"),
         F.round(F.max("total_value"), 2).alias("total_value"),
@@ -134,7 +123,7 @@ def tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    stage_dir = tempfile.mkdtemp(prefix="smvd-tws-src-")
+    stage_dir = temp_dir("smvd-tws-src-")
     import shutil
 
     src = os.path.join(sf_dir, "events.parquet")
@@ -174,17 +163,7 @@ def tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    sink = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="smvd-ckpt-tws-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_drained(q, 180)
-    emitted = spark.table(sink)
+    emitted = drain_to_memory(totals, "tws", "update", 180)
     return emitted.groupBy("user_id").agg(
         F.max("total_events").alias("total_events"),
         F.round(F.max("total_value"), 2).alias("total_value"),

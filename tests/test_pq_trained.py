@@ -114,3 +114,18 @@ def test_ivf_pq_trained_topk_is_subset_of_probed_clusters(spark):
     }
     cid_of = {r.vec_id: r.cid for r in assign.collect()}
     assert all(cid_of[r.vec_id] in probed for r in out)
+
+
+def test_operating_curve_counts_follow_the_query_set(spark, monkeypatch):
+    """The 'all' arm's candidate count and the recall denominators come
+    from the evaluation query set and the top-k constant, not literals:
+    with three queries the flat arm scores 3 * n candidates."""
+    from signal_messenger_vector_database_spark.io.sources import parquet_row_count
+    from signal_messenger_vector_database_spark.plans import pq_trained
+
+    qs = pq_trained._op_query_vecs()[:3]
+    monkeypatch.setattr(pq_trained, "_op_query_vecs", lambda: qs)
+    rows = {r.arm: r for r in pq_trained._ivf_pq_operating_curve(spark, SF).collect()}
+    n = parquet_row_count(SF, "embeddings")
+    assert rows["all"].sum_cand == 3 * n and rows["all"].cand_frac == 1.0
+    assert all(r.recall_mean == r.n_hits / (3.0 * pq_trained._OPTOPK) for r in rows.values())

@@ -68,26 +68,26 @@ def test_fate_s2_membership_matches_window_rank(spark):
     row_number-based formulation s1 & (_rn == 1) for every doc."""
     from pyspark.sql import Window
 
+    from signal_messenger_vector_database_spark.io.materialize import scope
     from signal_messenger_vector_database_spark.plans.traindata import (
         _curation_chain,
         fingerprint_md5,
     )
 
-    c = _curation_chain(spark, SF_SMALL)
-    w_fp = Window.partitionBy(fingerprint_md5("text")).orderBy("doc_id")
-    d1r_old = c["docs1"].withColumn("_rn", F.row_number().over(w_fp))
-    old_s2 = (
-        c["fate"]
-        .select("doc_id", "s1", "s2")
-        .join(d1r_old.select("doc_id", "_rn"), "doc_id", "left")
-        .withColumn("s2_old", F.col("s1") & (F.col("_rn") == 1))
-    )
-    bad = old_s2.filter(
-        ~F.col("s2").eqNullSafe(F.coalesce(F.col("s2_old"), F.lit(False)))
-    ).count()
+    with scope():  # releases the chain's stage frames at the end
+        c = _curation_chain(spark, SF_SMALL)
+        w_fp = Window.partitionBy(fingerprint_md5("text")).orderBy("doc_id")
+        d1r_old = c["docs1"].withColumn("_rn", F.row_number().over(w_fp))
+        old_s2 = (
+            c["fate"]
+            .select("doc_id", "s1", "s2")
+            .join(d1r_old.select("doc_id", "_rn"), "doc_id", "left")
+            .withColumn("s2_old", F.col("s1") & (F.col("_rn") == 1))
+        )
+        bad = old_s2.filter(
+            ~F.col("s2").eqNullSafe(F.coalesce(F.col("s2_old"), F.lit(False)))
+        ).count()
     assert bad == 0
-    for fr in c["persisted"]:
-        fr.unpersist()
 
 
 def test_decontam_superset_changes_no_flag(spark):
@@ -96,20 +96,20 @@ def test_decontam_superset_changes_no_flag(spark):
     s3-DEAD docs — for which s4 is False under the s3 conjunction either
     way.  Assert the invariant directly: every fate row has
     s4 == (s3 & _train & not contaminated-member)."""
+    from signal_messenger_vector_database_spark.io.materialize import scope
     from signal_messenger_vector_database_spark.plans.traindata import (
         _curation_chain,
     )
 
-    c = _curation_chain(spark, SF_SMALL)
-    fate = c["fate"]
-    joined = fate.join(
-        c["contaminated"].withColumn("_c2", F.lit(True)), "doc_id", "left"
-    )
-    bad = joined.filter(
-        ~F.col("s4").eqNullSafe(
-            F.col("s3") & F.col("_train") & F.col("_c2").isNull()
+    with scope():  # releases the chain's stage frames at the end
+        c = _curation_chain(spark, SF_SMALL)
+        fate = c["fate"]
+        joined = fate.join(
+            c["contaminated"].withColumn("_c2", F.lit(True)), "doc_id", "left"
         )
-    ).count()
+        bad = joined.filter(
+            ~F.col("s4").eqNullSafe(
+                F.col("s3") & F.col("_train") & F.col("_c2").isNull()
+            )
+        ).count()
     assert bad == 0
-    for fr in c["persisted"]:
-        fr.unpersist()

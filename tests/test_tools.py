@@ -23,11 +23,11 @@ sys.path.insert(0, REPO)
 
 def test_window_rotate_matches_pinned_window(monkeypatch):
     """The committed _WINDOW must be exactly what the tool generates
-    from the r01-r14 CORRECTNESS history (the documented input state in
+    from the r01-r16 CORRECTNESS history (the documented input state in
     the catalog comment block) and the documented --changed list — the
     rotation rule is executable, so the pinned list must not drift from
-    it.  History is pinned to <= r14 so the test stays true after the
-    r15 driver row lands.  This regeneration check is ALSO the
+    it.  History is pinned to <= r16 so the test stays true after the
+    r17 driver row lands.  This regeneration check is ALSO the
     displaced-entry enforcement (ADVICE r13): adding a round's queries
     without re-rotating fails it, and the rotation rule itself puts
     last round's displaced names at the head of the stale queue.
@@ -43,31 +43,73 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
 
     real = window_rotate.latest_rounds
 
-    def r14_history():
+    def r16_history():
         import glob
         import re
 
         hist = {}
         for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
             rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-            if rnd > 14:
+            if rnd > 16:
                 continue
             for name in json.load(open(f)):
                 hist[name] = max(rnd, hist.get(name, 0))
         return hist
 
-    monkeypatch.setattr(window_rotate, "latest_rounds", r14_history)
-    assert real is not r14_history  # sanity: we really swapped it
+    monkeypatch.setattr(window_rotate, "latest_rounds", r16_history)
+    assert real is not r16_history  # sanity: we really swapped it
 
     changed = [
-        "topk_ivf_binary",
-        "stream_ivf_compact",
-        "curation_attrition",
-        "topk_ivf_cascade",
-        "topk_ivf_batch",
-        "quant_recall_matrix",
+        "dsir_weights",
+        "dup_substring_spans",
+        "boilerplate_strip",
+        "pq_operating_point",
+        "ivf_pq_operating_curve",
+        "ivf_pq_clustered_curve",
+        "ivf_recall_clustered",
+        "topk_ivf_pq_trained",
         "curation_pipeline",
+        "curation_attrition",
+        "stream_ivf_compact",
         "stream_ivf_maintain",
+        "dim_ablation_recall",
+        "knn_graph_ivf",
+        "knn_graph_uncapped",
+        "bigram_logprob",
+        "collocations_pmi",
+        "neardup_clusters",
+        "minhash_lsh_pairs",
+        "minhash_jaccard_estimate",
+        "sorted_neighborhood",
+        "shingle_containment",
+        "dedup_quality_keep",
+        "bitext_margin_pairs",
+        "stream_stream_join",
+        "stream_static_join",
+        "stream_sessionize",
+        "stream_sketch_quantiles",
+        "stream_ingest_index",
+        "stream_lsh_dedup",
+        "assoc_rules",
+        "ccnet_buckets",
+        "dup_span_removal",
+        "semdedup",
+        "semdedup_uncapped",
+        "semdedup_trained",
+        "semdedup_capped",
+        "pq_encode_trained",
+        "centroid_outlier_prune",
+        "pq_recall_trained",
+        "csv_roundtrip",
+        "jsonl_roundtrip",
+        "orc_roundtrip",
+        "schema_evolution",
+        "bitext_mining_eval",
+        "pq_encode_delta",
+        "pagerank3",
+        "pagerank3_shuffle",
+        "triangle_count",
+        "bfs_khops",
     ]
     window, prov = window_rotate.compute_window(changed, 50)
     assert window == _WINDOW
@@ -294,3 +336,20 @@ def test_connect_smoke_gate_and_slice_names():
     assert {"semdedup", "decontaminate", "embedding_neardup_exact_baseline"} <= set(
         connect_smoke.SLICE
     )
+
+
+# --- warm-up fixture path ---------------------------------------------------
+
+
+def test_warmup_dir_sits_beside_the_target_scale(tmp_path):
+    """Warm-up passes (bench.py, tools/decomp_probe.py, tools/opt_probe.py)
+    read the sf0.001 fixture beside $SPARK_GRAFT_SF_DIR, not a fixed
+    path; with no such sibling they warm up on the target itself."""
+    from signal_messenger_vector_database_spark.io.sources import warmup_dir
+
+    (tmp_path / "sf0.1").mkdir()
+    assert warmup_dir(str(tmp_path / "sf0.1")) == str(tmp_path / "sf0.1")
+    (tmp_path / "sf0.001").mkdir()
+    assert warmup_dir(str(tmp_path / "sf0.1")) == str(tmp_path / "sf0.001")
+    for path in ("bench.py", "tools/decomp_probe.py", "tools/opt_probe.py"):
+        assert "testdata/sf0.001" not in open(os.path.join(REPO, path)).read(), path

@@ -26,6 +26,7 @@ def main() -> None:
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from signal_messenger_vector_database_spark.io.sources import warmup_dir
     from signal_messenger_vector_database_spark.plans.catalog import all_specs
     from signal_messenger_vector_database_spark.session import get_spark
 
@@ -38,7 +39,7 @@ def main() -> None:
             print(f"{name}: NOT IN CATALOG", flush=True)
             continue
         # codegen warmup (bench methodology)
-        specs[name].fn(spark, "/root/testdata/sf0.001").write.format(
+        specs[name].fn(spark, warmup_dir(sf_dir)).write.format(
             "noop"
         ).mode("overwrite").save()
         for i in range(runs):

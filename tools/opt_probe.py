@@ -45,6 +45,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from signal_messenger_vector_database_spark.io.materialize import scope
+    from signal_messenger_vector_database_spark.io.sources import warmup_dir
     from signal_messenger_vector_database_spark.plans.catalog import all_specs
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -83,20 +85,17 @@ def main() -> None:
             print(f"{name}: NOT IN CATALOG", flush=True)
             continue
         # codegen warmup at the smallest sf (bench methodology)
-        specs[name].fn(spark, "/root/testdata/sf0.001").write.format(
+        specs[name].fn(spark, warmup_dir(sf_dir)).write.format(
             "noop"
         ).mode("overwrite").save()
         if explain:
-            os.environ["SMVD_PLAN_ONLY"] = "1"
-            try:
+            with scope():  # plan only: catalog calls return lazy frames
                 df = specs[name].fn(spark, sf_dir)
                 plan = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                         "formatted"
                     )
                 )
-            finally:
-                del os.environ["SMVD_PLAN_ONLY"]
             with open(
                 os.path.join(plandir, f"{name}_{explain}.txt"), "w"
             ) as f:

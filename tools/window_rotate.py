@@ -9,7 +9,8 @@ round's window is generated from recorded state instead of hand-sorted:
      round, plus brand-new entries), in the order given;
   2. oracle-paired entries with NO driver CORRECTNESS row yet;
   3. every other oracle-paired entry, stalest latest-driver-round
-     first (ties broken by catalog order).
+     first (ties broken by catalog order); a bench-retired query that
+     is overdue for a driver row always gets a slot here.
 
 Rows-only entries (oracle is None) are excluded: they can never turn
 hash-green, and the driver records their weaker rows-only check from
@@ -97,13 +98,15 @@ def compute_window(
         and n not in window
         and hist.get(n, -(10**6)) <= cur - 2
     ]
-    window += overdue[: size - len(window)]
+    overdue = overdue[: size - len(window)]
     stale = sorted(
-        (n for n in paired if n in hist and n not in window),
+        (n for n in paired if n in hist and n not in window and n not in overdue),
         key=lambda n: (hist[n], order[n]),
     )
-    cut = stale[: size - len(window)]
-    window += cut
+    cut = stale[: size - len(window) - len(overdue)]
+    # the overdue retirees take their slots ahead of the cut, but sit in
+    # the stale tail in staleness order like every other entry
+    window += sorted(overdue + cut, key=lambda n: (hist.get(n, 0), order[n]))
     left_out = stale[len(cut) :]
     prov = {
         "n_catalog": len(specs),
