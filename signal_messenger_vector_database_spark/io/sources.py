@@ -37,6 +37,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def local_rows(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small constant table built in Python (query vectors, arm
+    grids, planted rows) as a DataFrame that plans as a JVM
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>, ddl)`` builds a ``LogicalRDD``
+    over a pickled ``parallelize``: every stage that reads it runs Python
+    worker tasks, and Catalyst sees no size statistics.  An Arrow table
+    goes to the JVM once, as columns, and lands as a ``LocalRelation`` —
+    no Python worker, doubles bit-exact, row count known to the planner.
+    ``rows`` are tuples in ``ddl`` column order; an empty list gives an
+    empty frame of that schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def warmup_dir(sf_dir: str) -> str:
     """The smallest fixture scale beside ``sf_dir`` (``<parent>/sf0.001``),
     for codegen/JIT warm-up passes; ``sf_dir`` itself when there is none."""

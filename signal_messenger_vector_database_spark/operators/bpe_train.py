@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..io.materialize import materialize
+from ..io.sources import local_rows
 
 _PIECE_SCHEMA = StructType(
     [
@@ -150,6 +151,7 @@ def bpe_train_merges(
             "bpe corpus",
             "lazy",
         )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         out, "rank int, token string, pair_count long"
     )

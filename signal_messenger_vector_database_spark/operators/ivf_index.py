@@ -91,6 +91,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io.materialize import hold, materialize, release
+from ..io.sources import local_rows
 
 _log = logging.getLogger(__name__)
 
@@ -1176,7 +1177,7 @@ def cell_candidates(spark: SparkSession, path: str, cids) -> DataFrame:
         # root that does not exist at all is a caller bug, not an
         # empty index: fail loudly.
         if os.path.isdir(path):
-            return spark.createDataFrame([], "vec_id long, cid int")
+            return local_rows(spark, [], "vec_id long, cid int")
         raise FileNotFoundError(f"cell index root does not exist: {path}")
     return read_cell_index(spark, path).filter(F.col("cid").isin(cids))
 
@@ -1218,7 +1219,7 @@ def compact_cells(
     flagged_cids = sorted({int(c) for c in flagged_cids})
     stats_schema = "cid long, n_before long, n_removed long, n_after long"
     if not flagged_cids:
-        return spark.createDataFrame([], stats_schema)
+        return local_rows(spark, [], stats_schema)
     tomb = (
         tombstones.select(F.col(id_col))
         .distinct()

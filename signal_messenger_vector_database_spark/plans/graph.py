@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
 from ..io.materialize import materialize
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from .registry import QuerySpec
 
 _DAMP = 0.85
@@ -284,8 +284,8 @@ _BFS_HOPS = 3
 
 def _bfs_khops(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = materialize(_edges(spark, sf_dir), "edges", "cache")
-    dist = edges.sparkSession.createDataFrame(
-        [(_BFS_SRC, 0)], "node string, hops int"
+    dist = local_rows(
+        edges.sparkSession, [(_BFS_SRC, 0)], "node string, hops int"
     )
     frontier = dist
     for k in range(1, _BFS_HOPS + 1):

@@ -64,7 +64,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
 from ..io.materialize import materialize
-from ..io.sources import load_table, parquet_row_count
+from ..io.sources import load_table, local_rows, parquet_row_count
 from .registry import QuerySpec
 
 SPECS: dict[str, QuerySpec] = {}
@@ -282,7 +282,7 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["doc_id"]), _rc_vec_py(r["topic"], f"q{r['doc_id']}"))
         for r in docs.filter(F.col("doc_id") < _RC_NQ).collect()
     ]
-    queries = spark.createDataFrame(q_rows, "qid int, qv array<double>")
+    queries = local_rows(spark, q_rows, "qid int, qv array<double>")
 
     # cell routing: rank ALL k cells per query by cosine (the assignment
     # metric), keep the union of arms (rk <= max nprobe); the probed set
@@ -308,7 +308,8 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # query-residual subvectors per probed cell: qr = qv - cv (exact
     # dyadic subtraction, Python == engine doubles), sliced 16x4
-    qsub = spark.createDataFrame(
+    qsub = local_rows(
+        spark,
         [
             (
                 qid,
@@ -336,8 +337,9 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ld"),
     )
 
-    arms = spark.createDataFrame([(a,) for a in _RC_ARMS], "np int")
-    probed_arm = spark.createDataFrame(
+    arms = local_rows(spark, [(a,) for a in _RC_ARMS], "np int")
+    probed_arm = local_rows(
+        spark,
         [
             (np, qid, cid)
             for np in _RC_ARMS

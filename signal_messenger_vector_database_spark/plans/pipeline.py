@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import TOKEN_PATTERN, fingerprint_md5, token_count
 from ..functions.vector import cosine_similarity, l2_distance
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from ..operators.chunking import chunk_text
 from ..operators.embed import with_embeddings
 from ..operators.topk import cosine_topk
@@ -102,7 +102,8 @@ def _suppression_values_sql() -> str:
 
 def _suppression_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    synth = spark.createDataFrame(
+    synth = local_rows(
+        spark,
         [
             (10_000_000 + i, s)
             for i, s in enumerate(

@@ -58,7 +58,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
 from ..io.materialize import materialize
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from .registry import QuerySpec
 
 SPECS: dict[str, QuerySpec] = {}
@@ -333,7 +333,8 @@ def _op_lut(trained: DataFrame, spark: SparkSession) -> DataFrame:
     BIGINT per (query, codeword) — the only FLOOR between the grid
     centroids and the final integer ranking key."""
     qs = _op_query_vecs()
-    qdf = spark.createDataFrame(
+    qdf = local_rows(
+        spark,
         [
             (qid, j, q[j * _OPD : (j + 1) * _OPD])
             for qid, q in enumerate(qs)
@@ -392,7 +393,8 @@ def _pq_operating_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         dists, "qid", [F.asc("adc"), F.asc("vec_id")], _OPSHORT
     ).select("qid", "vec_id")
 
-    qfull = spark.createDataFrame(
+    qfull = local_rows(
+        spark,
         [(qid, q) for qid, q in enumerate(_op_query_vecs())],
         "qid int, qv array<double>",
     )
@@ -661,7 +663,8 @@ def _dim_ablation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    qfull = spark.createDataFrame(
+    qfull = local_rows(
+        spark,
         [(qid, q) for qid, q in enumerate(_op_query_vecs())],
         "qid int, qv array<double>",
     )
@@ -816,7 +819,8 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qs = _op_query_vecs()
-    qfull = spark.createDataFrame(
+    qfull = local_rows(
+        spark,
         [(qid, q) for qid, q in enumerate(qs)],
         "qid int, qv array<double>",
     )
@@ -834,7 +838,8 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rk", F.row_number().over(wq))
     )
-    arms = spark.createDataFrame(
+    arms = local_rows(
+        spark,
         [(str(a), a) for a in _CURVE_ARMS] + [("all", k)], "arm string, np int"
     )
     # r16 (guide §3.1): the 'all' arm (np = k — every cell probed) made
@@ -907,9 +912,7 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     candn = cand.groupBy("arm").agg(
         F.count(F.lit(1)).alias("sum_cand")
     ).unionByName(
-        spark.createDataFrame(
-            [("all", len(qs) * n)], "arm string, sum_cand long"
-        )
+        local_rows(spark, [("all", len(qs) * n)], "arm string, sum_cand long")
     )
     return (
         perq.groupBy("arm", "np")

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
 from ..io.materialize import materialize
-from ..io.sources import load_table, parquet_row_count
+from ..io.sources import load_table, local_rows, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
 from .ivf_sql import HIER_ASSIGN_CTES as _HIER_ASSIGN_CTES
 from .registry import QuerySpec
@@ -603,7 +603,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in sorted(topics)
         if i < _CL_NQ
     ]
-    queries = spark.createDataFrame(q_rows, "qid int, qv array<double>")
+    queries = local_rows(spark, q_rows, "qid int, qv array<double>")
 
     # assignment: n x K exact-d2 argmin, IN PLACE (the kmeans_lloyd3
     # pattern, applied here in r15): the 32 seed cells collapse to one
@@ -649,8 +649,9 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         qid: sorted((_d2(qv, cv), cid) for cid, cv in seed_rows)
         for qid, qv in q_rows
     }
-    arms = spark.createDataFrame([(a,) for a in _CL_ARMS], "np int")
-    probed_arm = spark.createDataFrame(
+    arms = local_rows(spark, [(a,) for a in _CL_ARMS], "np int")
+    probed_arm = local_rows(
+        spark,
         [
             (np, qid, cid)
             for np in _CL_ARMS
@@ -886,7 +887,7 @@ def _filtered_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="qid",
         with_rank=True,
     )
-    arms = spark.createDataFrame([(a,) for a in _FRC_ARMS], "arm int")
+    arms = local_rows(spark, [(a,) for a in _FRC_ARMS], "arm int")
     short = assign.join(F.broadcast(routed), "cid").join(
         F.broadcast(arms), F.col("cell_rank") <= F.col("arm")
     )
@@ -1151,7 +1152,7 @@ def _bitext_mining_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("margin"),
         )
     )
-    arms = spark.createDataFrame([(t,) for t in _BTE_ARMS], "th double")
+    arms = local_rows(spark, [(t,) for t in _BTE_ARMS], "th double")
     # per-lang stratification (r11, VERDICT r10 #4): a mined pair is
     # attributed to its SOURCE document's lang (src = view 2d of doc d);
     # recall denominators are per-lang planted-pair counts.  The grid is

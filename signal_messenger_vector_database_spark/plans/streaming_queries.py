@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.materialize import materialize, temp_dir
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from ..streaming.ingest import (
     await_drained,
     dedup_ingest_availablenow,
@@ -308,13 +308,17 @@ SPECS["stream_sketch_quantiles"] = QuerySpec(
 # vanish and one 60-word text that must explode into 3 chunks, shared
 # as literals with the oracle's UNION ALL.
 #
-# Scale shape: suppression and chunking are stream-side JVM expressions
-# (Catalyst keeps the cheap filter before everything); the featurizer is
-# per-row expressions; the foreachBatch assignment joins each batch
-# against a BROADCAST 8-row centroid table and appends — state is the
-# index itself, not the stream (no unbounded streaming state).  At
-# 100 TB the sink append is a partitioned table write keyed by cid; the
-# per-batch work is O(batch).
+# Scale shape: the source is staged as exactly FOUR parquet files (the
+# doc_id % 3 slices and the planted rows, one write job) and streamed
+# with maxFilesPerTrigger=1, so the delta index crosses FOUR real
+# micro-batch boundaries even in a one-shot catalog run (pinned by
+# tests/test_multibatch_streaming.py).  Suppression and chunking are
+# stream-side JVM expressions (Catalyst keeps the cheap filter before
+# everything); the featurizer is per-row expressions; the foreachBatch
+# assignment is an in-row argmin over the 8 literal centroids (no join,
+# no shuffle) and appends — state is the index itself, not the stream
+# (no unbounded streaming state).  At 100 TB the sink append is a
+# partitioned table write keyed by cid; the per-batch work is O(batch).
 
 _INGEST_IDX_DIM = 8
 _INGEST_IDX_K = 8
@@ -368,6 +372,47 @@ def _md5_featurize(col):
     return F.array(*dims)
 
 
+def _nearest_ingest_centroid(emb):
+    """cid of the nearest literal centroid, computed in the row:
+    ``array_min`` over the 8 ``(d2, cid)`` structs replays min_by's
+    ``(d2, cid)`` tie-break with no join and no shuffle.  Squared L2
+    directly (NOT l2_distance squared — a sqrt would forfeit the exact
+    dyadic arithmetic the argmin tie-break relies on): every term is a
+    dyadic rational < 2^53, so the left-to-right fold from 0.0 is exact
+    and the (d2, cid) ordering has no FP seam."""
+    scored = [
+        F.struct(
+            F.aggregate(
+                F.zip_with(emb, F.lit(cv), lambda a, b: (a - b) * (a - b)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ).alias("d2"),
+            F.lit(cid).alias("cid"),
+        )
+        for cid, cv in _ingest_centroids()
+    ]
+    return F.array_min(F.array(*scored))["cid"]
+
+
+def _stage_ingest_source(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the fixture documents plus the planted rows as exactly FOUR
+    parquet files in ONE write job: ``_f`` = doc_id % 3 for fixture rows
+    and 3 for the planted rows.  ``repartition("_f")`` puts every ``_f``
+    value in a single task, so ``partitionBy("_f")`` writes one file per
+    directory — streamed with maxFilesPerTrigger=1, four non-empty
+    micro-batches.  Returns the staging root."""
+    stage = temp_dir("smvd-ingest-idx-") + "/src"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", (F.col("doc_id") % 3).alias("_f")
+    )
+    planted = local_rows(
+        spark, _INGEST_PLANTED, "doc_id long, text string"
+    ).withColumn("_f", F.lit(3).cast("long"))
+    src = docs.unionByName(planted).repartition("_f")
+    src.write.partitionBy("_f").parquet(stage)
+    return stage
+
+
 def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See the block comment above.  Returns per-cluster index accounting
     after the drain: (cid, n_chunks, n_docs, sum_tokens)."""
@@ -378,24 +423,10 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark = streaming_session(spark)
 
-    # Stage fixture documents + planted rows as FOUR parquet files and
-    # stream them with maxFilesPerTrigger=1: four real micro-batches, so
-    # the delta-index path crosses trigger boundaries even in the driver
-    # run (the multibatch-test pattern promoted into the query itself).
-    stage = temp_dir("smvd-ingest-idx-") + "/src"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-    spark.createDataFrame(
-        _INGEST_PLANTED, "doc_id long, text string"
-    ).coalesce(1).write.mode("append").parquet(stage)
-
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+        .parquet(_stage_ingest_source(spark, sf_dir))
     )
     kept = filter_control_messages(stream, body_col="text")  # F1
     chunked = chunk_text(
@@ -405,36 +436,18 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_words=_INGEST_CHUNK_WORDS,
     ).select("doc_id", "chunk_id", "chunk_text", "chunk_tokens")
     embedded = chunked.withColumn("emb", _md5_featurize(F.col("chunk_text")))
-
-    cents = spark.createDataFrame(
-        _ingest_centroids(), "cid int, cv array<double>"
-    )
     index_dir = temp_dir("smvd-ingest-idx-") + "/index"
 
     def _delta_assign(batch_df, batch_id: int) -> None:
         # delta IVF maintenance: assign THIS batch's chunks, append to
-        # the index.  Squared L2 directly (NOT l2_distance squared — a
-        # sqrt would forfeit the exact dyadic arithmetic the argmin
-        # tie-break relies on): every term is a dyadic rational < 2^53,
-        # so d2 is exact and the (d2, cid) ordering has no FP seam.
-        d2 = F.aggregate(
-            F.zip_with("emb", "cv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        assigned = (
-            batch_df.join(F.broadcast(cents))
-            .select(
-                "doc_id",
-                "chunk_id",
-                "chunk_tokens",
-                "cid",
-                d2.alias("d2"),
-            )
-            .groupBy("doc_id", "chunk_id", "chunk_tokens")
-            .agg(F.min_by(F.col("cid"), F.struct("d2", "cid")).alias("cid"))
-        )
-        assigned.write.mode("append").parquet(index_dir)
+        # the index.  One row per chunk in, one row per chunk out
+        # (doc_id is unique, chunk_id unique within it).
+        batch_df.select(
+            "doc_id",
+            "chunk_id",
+            "chunk_tokens",
+            _nearest_ingest_centroid(F.col("emb")).alias("cid"),
+        ).write.mode("append").parquet(index_dir)
 
     q = (
         embedded.writeStream.foreachBatch(_delta_assign)
@@ -452,9 +465,9 @@ def _stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
         F.sum("chunk_tokens").cast("long").alias("sum_tokens"),
     )
+    cids = local_rows(spark, [(cid,) for cid, _ in _ingest_centroids()], "cid int")
     return (
-        cents.select("cid")
-        .join(per_cid, "cid", "left")
+        cids.join(per_cid, "cid", "left")
         .select(
             "cid",
             F.coalesce("n_chunks", F.lit(0)).cast("long").alias("n_chunks"),

@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import fingerprint_md5, portable_round, token_count
 from ..io.materialize import materialize
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from ..operators.chunking import chunk_text
 from ..operators.dedup import shingle_rows
 from .registry import QuerySpec
@@ -3074,7 +3074,8 @@ def _curation_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for an EMPTY class (agg with no groupBy), while the gopher stage
     # was a groupBy (absent classes stay absent) — replay that exactly:
     # left-join the five fixed classes and coalesce to 0
-    const_classes = spark.createDataFrame(
+    const_classes = local_rows(
+        spark,
         [
             (2, "exact_dedup", "exact_dup"),
             (3, "neardup", "near_dup"),

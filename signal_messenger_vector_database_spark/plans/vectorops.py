@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
 from ..io.materialize import materialize
-from ..io.sources import load_table
+from ..io.sources import load_table, local_rows
 from .registry import QuerySpec
 
 
@@ -1092,7 +1092,8 @@ def _pq_trained_parts(spark: SparkSession, sf_dir: str):
     )
     subs = materialize(_pq_sub_rows(emb), "pq subvectors", "lazy")
     books = _pq_codebooks()
-    cb0 = spark.createDataFrame(
+    cb0 = local_rows(
+        spark,
         [(j, k, books[j][k]) for j in range(_PQ_M) for k in range(_PQ_K)],
         "sub_j int, code int, cw array<double>",
     )
@@ -2611,7 +2612,8 @@ _EXACT_L2_TOP10_CTE_TMPL = """exact AS (
 def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     a2, trained = _pq_trained_parts(spark, sf_dir)
     q = _pq_query_vec()
-    qdf = spark.createDataFrame(
+    qdf = local_rows(
+        spark,
         [(j, [float(x) for x in q[j * _PQ_D : (j + 1) * _PQ_D]]) for j in range(_PQ_M)],
         "sub_j int, qv array<double>",
     )

@@ -34,21 +34,75 @@ BENCH_OPS = [
 ]
 
 
-def test_only_the_owner_module_pins():
-    """No code under plans/, operators/ or streaming/ persists,
-    checkpoints, unpersists or makes a temp dir itself — the IVF memo
-    (operators/ivf_index.py) included: its cross-query frames go through
-    materialize/hold/release too."""
-    banned = re.compile(
-        r"\.persist\(|\.localCheckpoint\(|\.unpersist\(|tempfile\.mkdtemp\(|SMVD_PLAN_ONLY"
-    )
+def _engine_lines(pattern: str) -> list[str]:
+    """``path:line: text`` of every line under plans/, operators/ or
+    streaming/ that matches ``pattern``."""
+    banned = re.compile(pattern)
     hits = []
     for sub in ("plans", "operators", "streaming"):
         for path in sorted(glob.glob(os.path.join(PKG, sub, "*.py"))):
             for i, line in enumerate(open(path), 1):
                 if banned.search(line):
                     hits.append(f"{os.path.relpath(path, REPO)}:{i}: {line.strip()}")
+    return hits
+
+
+def test_only_the_owner_module_pins():
+    """No code under plans/, operators/ or streaming/ persists,
+    checkpoints, unpersists or makes a temp dir itself — the IVF memo
+    (operators/ivf_index.py) included: its cross-query frames go through
+    materialize/hold/release too."""
+    hits = _engine_lines(
+        r"\.persist\(|\.localCheckpoint\(|\.unpersist\(|tempfile\.mkdtemp\(|SMVD_PLAN_ONLY"
+    )
     assert not hits, "\n".join(hits)
+
+
+def test_constant_tables_come_from_local_rows():
+    """No code under plans/, operators/ or streaming/ calls
+    createDataFrame itself: a constant table built in Python is
+    io.sources.local_rows, which plans as a JVM LocalRelation instead of
+    a pickled parallelize read by Python worker tasks."""
+    hits = _engine_lines(r"createDataFrame\(")
+    assert not hits, "\n".join(hits)
+
+
+def test_local_rows_is_an_exact_local_relation(spark):
+    """local_rows frames plan as a LocalRelation and carry the list
+    path's schema and values bit for bit — int/long/string/double/
+    array<double>, nulls included — and an empty row list gives an empty
+    frame of the declared schema."""
+    import struct
+
+    from signal_messenger_vector_database_spark.io.sources import local_rows
+
+    ddl = "i int, l long, s string, d double, v array<double>"
+    rows = [
+        (1, 2**53 + 1, "a", 0.1, [0.1, -0.0, 5e-324, 2.0**-40]),
+        (-2**31, -(2**63), "", 1.7976931348623157e308, []),
+        (None, None, None, None, None),
+        (7, 0, "é中", -0.0, [None, 1.0 / 3.0]),
+    ]
+    df = local_rows(spark, rows, ddl)
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    ref = spark.createDataFrame(rows, ddl)
+    assert df.schema == ref.schema
+
+    def bits(v):
+        if isinstance(v, float):
+            return struct.pack("<d", v)
+        if isinstance(v, list):
+            return [bits(x) for x in v]
+        return v
+
+    assert [bits(list(r)) for r in df.collect()] == [
+        bits(list(r)) for r in rows
+    ]
+
+    empty = local_rows(spark, [], ddl)
+    assert empty._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert empty.schema == ref.schema
+    assert empty.collect() == []
 
 
 def _memo_rdd_ids() -> set[int]:

@@ -166,9 +166,12 @@ def test_sketch_histogram_accumulates_across_micro_batches(spark):
 
 def test_stream_ingest_index_multibatch_equals_batch_twin(spark):
     """stream_ingest_index drains FOUR real micro-batches
-    (maxFilesPerTrigger=1 over 4 staged files); its per-cluster index
-    accounting must equal the same pipeline run as ONE batch DataFrame —
-    the delta-append index is trigger-boundary-invariant.  Also pins the
+    (maxFilesPerTrigger=1 over exactly 4 staged files — pinned by
+    test_stream_ingest_index_stages_four_micro_batches below); its
+    per-cluster index accounting must equal the same pipeline run as ONE
+    batch DataFrame — the delta-append index is trigger-boundary-
+    invariant, and the batch twin's broadcast join + min_by is the
+    independent reference for the stream's in-row argmin.  Also pins the
     planted arms: the 3 control rows vanish, the 60-word planted doc
     contributes exactly 3 chunks."""
     from pyspark.sql import functions as F
@@ -240,6 +243,48 @@ def test_stream_ingest_index_multibatch_equals_batch_twin(spark):
     assert {-1, -2, -3}.isdisjoint(kept_ids) and -4 in kept_ids
     n_chunks_planted = chunked.filter(F.col("doc_id") == -4).count()
     assert n_chunks_planted == 3
+
+
+def test_stream_ingest_index_stages_four_micro_batches(spark, tmp_path):
+    """stream_ingest_index's staging job writes exactly 4 non-empty
+    parquet files, one per ``_f`` slice (doc_id % 3 and the planted
+    rows), so the query's maxFilesPerTrigger=1 stream drains exactly 4
+    non-empty micro-batches."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from signal_messenger_vector_database_spark.io.materialize import scope
+    from signal_messenger_vector_database_spark.plans.streaming_queries import (
+        _INGEST_PLANTED,
+        _stage_ingest_source,
+    )
+
+    s = streaming_session(spark)
+    with scope():
+        stage = _stage_ingest_source(s, SF)
+        files = sorted(glob.glob(os.path.join(stage, "**", "*.parquet"), recursive=True))
+        assert [os.path.basename(os.path.dirname(f)) for f in files] == [
+            "_f=0", "_f=1", "_f=2", "_f=3"
+        ]
+        sizes = [pq.ParquetFile(f).metadata.num_rows for f in files]
+        n_docs = load_table(spark, SF, "documents").count()
+        assert min(sizes) > 0 and sum(sizes) == n_docs + len(_INGEST_PLANTED)
+        assert sizes[3] == len(_INGEST_PLANTED)
+
+        q = (
+            s.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(stage)
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_drained(q)
+        batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+        assert sorted(batches) == sorted(sizes)
 
 
 def test_stream_lsh_dedup_exercises_both_arms_and_matches_batch(spark):

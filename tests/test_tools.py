@@ -21,6 +21,22 @@ sys.path.insert(0, REPO)
 # --- window_rotate ----------------------------------------------------------
 
 
+def r16_history():
+    """window_rotate.latest_rounds over the CORRECTNESS_r01-r16 files
+    only: the input state of the pinned window."""
+    import glob
+    import re
+
+    hist = {}
+    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+        if rnd > 16:
+            continue
+        for name in json.load(open(f)):
+            hist[name] = max(rnd, hist.get(name, 0))
+    return hist
+
+
 def test_window_rotate_matches_pinned_window(monkeypatch):
     """The committed _WINDOW must be exactly what the tool generates
     from the r01-r16 CORRECTNESS history (the documented input state in
@@ -42,37 +58,31 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
     from signal_messenger_vector_database_spark.plans.catalog import _WINDOW
 
     real = window_rotate.latest_rounds
-
-    def r16_history():
-        import glob
-        import re
-
-        hist = {}
-        for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-            rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-            if rnd > 16:
-                continue
-            for name in json.load(open(f)):
-                hist[name] = max(rnd, hist.get(name, 0))
-        return hist
-
     monkeypatch.setattr(window_rotate, "latest_rounds", r16_history)
     assert real is not r16_history  # sanity: we really swapped it
 
     changed = [
-        "dsir_weights",
-        "dup_substring_spans",
-        "boilerplate_strip",
+        "stream_ingest_index",
+        "suppression_filter",
         "pq_operating_point",
         "ivf_pq_operating_curve",
         "ivf_pq_clustered_curve",
         "ivf_recall_clustered",
         "topk_ivf_pq_trained",
-        "curation_pipeline",
         "curation_attrition",
         "stream_ivf_compact",
-        "stream_ivf_maintain",
         "dim_ablation_recall",
+        "pq_encode_trained",
+        "pq_recall_trained",
+        "bitext_mining_eval",
+        "bfs_khops",
+        "bpe_train",
+        "filtered_recall_curve",
+        "dsir_weights",
+        "dup_substring_spans",
+        "boilerplate_strip",
+        "curation_pipeline",
+        "stream_ivf_maintain",
         "knn_graph_ivf",
         "knn_graph_uncapped",
         "bigram_logprob",
@@ -88,7 +98,6 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
         "stream_static_join",
         "stream_sessionize",
         "stream_sketch_quantiles",
-        "stream_ingest_index",
         "stream_lsh_dedup",
         "assoc_rules",
         "ccnet_buckets",
@@ -97,19 +106,12 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
         "semdedup_uncapped",
         "semdedup_trained",
         "semdedup_capped",
-        "pq_encode_trained",
         "centroid_outlier_prune",
-        "pq_recall_trained",
         "csv_roundtrip",
         "jsonl_roundtrip",
         "orc_roundtrip",
         "schema_evolution",
-        "bitext_mining_eval",
         "pq_encode_delta",
-        "pagerank3",
-        "pagerank3_shuffle",
-        "triangle_count",
-        "bfs_khops",
     ]
     window, prov = window_rotate.compute_window(changed, 50)
     assert window == _WINDOW
@@ -158,6 +160,38 @@ def test_window_rotate_ordering_and_validation():
     paired = [n for n, s in all_specs().items() if s.oracle is not None]
     with pytest.raises(SystemExit):
         window_rotate.compute_window(paired[:51], 50)
+
+
+def test_window_rotate_reports_dropped_overdue_retirees(monkeypatch, capsys):
+    """An overdue bench retiree that finds no slot (changed + never-run
+    names fill the window) is named in the provenance and warned about
+    on stderr, not dropped without a word; with room it gets its slot."""
+    import window_rotate
+
+    from bench import RETIRED_HEADLINE
+    from signal_messenger_vector_database_spark.plans.catalog import all_specs
+
+    monkeypatch.setattr(window_rotate, "latest_rounds", r16_history)
+    full = [
+        n
+        for n, s in all_specs().items()
+        if s.oracle is not None and n not in RETIRED_HEADLINE
+    ][:50]
+
+    window, prov = window_rotate.compute_window(full, 50)
+    assert "topk_ivf_pq" not in window
+    assert prov["overdue_retirees_dropped"] == ["topk_ivf_pq"]
+
+    window, prov = window_rotate.compute_window(full[:10], 50)
+    assert "topk_ivf_pq" in window
+    assert prov["overdue_retirees_dropped"] == []
+
+    monkeypatch.setattr(
+        sys, "argv", ["window_rotate.py", "--changed=" + ",".join(full)]
+    )
+    window_rotate.main()
+    err = capsys.readouterr().err
+    assert "warning" in err and "topk_ivf_pq" in err
 
 
 # --- bench shared_subset_normalized ----------------------------------------

@@ -16,7 +16,7 @@ ACCUMULATED state the batch must consult grows 1x -> 64x:
   the wave-20c lesson: decorrelate the DATA to measure the PLAN.
 * ``ingest`` — stream_ingest_index's shape: the chunk index is
   pre-populated at scale k, then one 500-doc batch runs
-  suppress -> chunk -> md5-featurize -> broadcast-assign -> append.
+  suppress -> chunk -> md5-featurize -> in-row assign -> append.
   Per-batch work never reads the index (append-only sink), so cost
   must be flat by construction; the row verifies it.
 * ``wm`` — stream_dedup_watermark's shape at EVERY requested scale:
@@ -128,24 +128,17 @@ def probe_ingest(spark, scales) -> dict:
     from signal_messenger_vector_database_spark.plans.streaming_queries import (
         _INGEST_CHUNK_TOKENS,
         _INGEST_CHUNK_WORDS,
-        _ingest_centroids,
         _md5_featurize,
+        _nearest_ingest_centroid,
     )
 
-    def assign_append(df, cents, index_dir):
-        d2 = F.aggregate(
-            F.zip_with("emb", "cv", lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        (
-            df.join(F.broadcast(cents))
-            .select("doc_id", "chunk_id", "chunk_tokens", "cid", d2.alias("d2"))
-            .groupBy("doc_id", "chunk_id", "chunk_tokens")
-            .agg(F.min_by(F.col("cid"), F.struct("d2", "cid")).alias("cid"))
-            .write.mode("append")
-            .parquet(index_dir)
-        )
+    def assign_append(df, index_dir):
+        df.select(
+            "doc_id",
+            "chunk_id",
+            "chunk_tokens",
+            _nearest_ingest_centroid(F.col("emb")).alias("cid"),
+        ).write.mode("append").parquet(index_dir)
 
     def pipeline(df):
         kept = filter_control_messages(df, body_col="text")
@@ -157,7 +150,6 @@ def probe_ingest(spark, scales) -> dict:
         ).select("doc_id", "chunk_id", "chunk_text", "chunk_tokens")
         return chunked.withColumn("emb", _md5_featurize(F.col("chunk_text")))
 
-    cents = spark.createDataFrame(_ingest_centroids(), "cid int, cv array<double>")
     out = {}
     batch = _fixed_batch(spark)
     for k in scales:
@@ -166,9 +158,9 @@ def probe_ingest(spark, scales) -> dict:
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
             "doc_id", "text"
         )
-        assign_append(pipeline(docs), cents, index_dir)  # pre-populate, untimed
+        assign_append(pipeline(docs), index_dir)  # pre-populate, untimed
         t0 = time.time()
-        assign_append(pipeline(batch), cents, index_dir)
+        assign_append(pipeline(batch), index_dir)
         sec = round(time.time() - t0, 2)
         row = {"scale": k, "index_docs": docs.count(), "batch_sec": sec}
         out[f"x{k}"] = row

@@ -20,7 +20,9 @@ Usage:
     python tools/window_rotate.py --changed=a,b,c [--size=50]
 
 Prints the provenance (per-round staleness histogram, what was left
-out) and the ``_WINDOW`` list ready to paste into plans/catalog.py.
+out, overdue retirees that found no slot) and the ``_WINDOW`` list ready
+to paste into plans/catalog.py; a dropped overdue retiree is also
+warned about on stderr.
 """
 
 from __future__ import annotations
@@ -81,10 +83,10 @@ def compute_window(
     never = [n for n in paired if n not in hist and n not in window]
     window += never[: size - len(window)]
     # bench-retired queries (bench.py RETIRED_HEADLINE — the HEADLINE
-    # cap policy's retirees) are guaranteed a driver row at least every
-    # 3 rounds (VERDICT r15 #8): out of the bench AND out of the
-    # window, their correctness coverage would otherwise quietly age
-    # out.  cur-2 staleness puts them in every other window.
+    # cap policy's retirees) get a correctness row at least every 3 rounds
+    # while the window has room (VERDICT r15 #8): out of the bench AND
+    # out of the window, their correctness coverage would otherwise
+    # quietly age out.  cur-2 staleness puts them in every other window.
     try:
         from bench import RETIRED_HEADLINE
     except ImportError:
@@ -98,7 +100,11 @@ def compute_window(
         and n not in window
         and hist.get(n, -(10**6)) <= cur - 2
     ]
-    overdue = overdue[: size - len(window)]
+    # a window already full of changed + never-run names has no slot
+    # left for an overdue retiree: report the ones dropped instead of
+    # letting the every-3-rounds promise lapse without a word
+    room = size - len(window)
+    overdue, dropped = overdue[:room], overdue[room:]
     stale = sorted(
         (n for n in paired if n in hist and n not in window and n not in overdue),
         key=lambda n: (hist[n], order[n]),
@@ -123,6 +129,7 @@ def compute_window(
         "oldest_left_out_round": hist[left_out[0]] if left_out else None,
         "n_left_out": len(left_out),
         "left_out": left_out,
+        "overdue_retirees_dropped": dropped,
     }
     return window[:size], prov
 
@@ -136,6 +143,13 @@ def main() -> None:
         elif a.startswith("--size="):
             size = int(a.split("=", 1)[1])
     window, prov = compute_window(changed, size)
+    if prov["overdue_retirees_dropped"]:
+        print(
+            "warning: no window slot left for overdue bench retirees "
+            f"{prov['overdue_retirees_dropped']}: their correctness row is skipped "
+            "this round",
+            file=sys.stderr,
+        )
     print("# provenance:", json.dumps(prov, indent=None))
     print("_WINDOW = [")
     for n in window:
