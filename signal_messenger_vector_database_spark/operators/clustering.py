@@ -6,7 +6,7 @@ step with the full training loop.  Per iteration:
 1. assignment — the k centroids collapse to ONE broadcast row holding
    the whole codebook as an array of structs; each vector row computes
    its argmin in place with nested higher-order functions (``transform``
-   over centroids, ``zip_with`` fold for squared-L2, ``array_min`` on a
+   over centroids, the ``squared_l2`` fold, ``array_min`` on a
    (distance, cluster) struct).  The vector table is scanned, never
    shuffled, and — unlike the explode-to-(vector, centroid)-pairs shape
    this replaced — no n*k intermediate rows ever exist.  That matters
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import squared_l2
 from ..io.materialize import materialize, release
 
 
@@ -37,7 +38,7 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     The codebook is collapsed to a single row (array of (c_id, centroid)
     structs, sorted for determinism) and broadcast; every vector row then
     folds over it in place.  d2 per centroid is the identical left fold
-    over ``zip_with`` the old pair-join shape used, and the argmin
+    (``squared_l2``) the old pair-join shape used, and the argmin
     tie-break — smallest d2, then smallest c_id — is replayed by
     ``array_min`` on a (d2, c_id) struct, so assignments (and the oracle
     parity of kmeans_lloyd3 / semdedup) are bit-unchanged.
@@ -47,11 +48,7 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
     def _score(c):
-        d2 = F.aggregate(
-            F.zip_with(F.col("embedding"), c["centroid"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        d2 = squared_l2(F.col("embedding"), c["centroid"])
         return F.struct(d2.alias("d2"), c["c_id"].alias("c_id"))
 
     best = F.array_min(F.transform(F.col("_cents"), _score))

@@ -231,10 +231,6 @@ def _hex_to_int(h: Column, n_chars: int = 4) -> Column:
     return _hex_slice_to_int(h, 1, n_chars)
 
 
-def _hex4_to_int(h: Column) -> Column:
-    return _hex_to_int(h, 4)
-
-
 def _hex_slice_to_int(h: Column, start: int, n_chars: int) -> Column:
     """Hex chars [start, start+n_chars) of an md5 (1-indexed) -> long.
     THE hex-to-long arithmetic (single copy; _hex_to_int delegates

@@ -186,9 +186,3 @@ def with_embeddings(
 
     return df.mapInPandas(run, schema=out_schema)
 
-
-def embed_pipeline_repartitioned(df: DataFrame, target_partitions: int, **kw) -> DataFrame:
-    """Scale path: repartition before the embed stage to bound per-task batch
-    size / parallelize over all executors (SURVEY §4 'repartition before
-    embed stage')."""
-    return with_embeddings(df.repartition(target_partitions), **kw)

@@ -20,7 +20,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, l2_distance
+from ..functions.vector import cosine_similarity
 
 
 def _query_vec_col(query_vec: Sequence[float]) -> Column:
@@ -43,19 +43,6 @@ def cosine_topk(
         .orderBy(F.desc("sim"), F.col(id_col))
         .limit(k)
     )
-
-
-def l2_topk(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    q = _query_vec_col(query_vec)
-    dist = F.round(l2_distance(F.col(vec_col), q), round_digits).alias("dist")
-    return df.select(id_col, dist).orderBy(F.asc("dist"), F.col(id_col)).limit(k)
 
 
 def topk_per_group(

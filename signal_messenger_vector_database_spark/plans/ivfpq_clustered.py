@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
+from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows, parquet_row_count
 from .registry import QuerySpec
@@ -199,12 +200,6 @@ def _rc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(materialize, "residual corpus", "lazy")
 
 
-# the exact squared-L2 fold is retrieval_eval's _cl_d2 (ONE definition
-# — the shared-definition rule)
-from .retrieval_eval import _cl_d2 as _rc_d2  # noqa: E402,F401
-from .retrieval_eval import d2_unrolled as _rc_d2_unrolled  # noqa: E402
-
-
 def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
     from ..operators.ann import hier_super_count, scaled_cluster_count
@@ -325,14 +320,12 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "qid int, cid long, sub_j int, qsv array<double>",
     )
-    from .pq_trained import _op_d2
-
     lut = cb.join(F.broadcast(qsub), "sub_j").select(
         "qid",
         "cid",
         "sub_j",
         "code",
-        F.floor(_op_d2("qsv", "cw") * 10000 + F.lit(0.5))
+        F.floor(squared_l2("qsv", "cw") * 10000 + F.lit(0.5))
         .cast("long")
         .alias("ld"),
     )
@@ -371,7 +364,14 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exact = two_phase_topk(
         vecs.crossJoin(F.broadcast(queries)).select(
-            "qid", "vec_id", _rc_d2_unrolled("embedding", "qv", _RC_D).alias("d2")
+            "qid",
+            "vec_id",
+            F.expr(
+                squared_l2_sql(
+                    [f"embedding[{i}]" for i in range(_RC_D)],
+                    [f"qv[{i}]" for i in range(_RC_D)],
+                )
+            ).alias("d2"),
         ),
         "qid",
         [F.asc("d2"), F.asc("vec_id")],

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import portable_round
+from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
 from .registry import QuerySpec
@@ -103,14 +104,6 @@ def _op_sub_rows(emb: DataFrame) -> DataFrame:
         f"j -> slice(embedding, j * {_OPD} + 1, {_OPD}))"
     )
     return emb.select("vec_id", F.posexplode(sub).alias("sub_j", "sv"))
-
-
-def _op_d2(sv_col: str, cw_col: str):
-    return F.aggregate(
-        F.zip_with(sv_col, cw_col, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _op_trained_parts(spark: SparkSession, sf_dir: str):
@@ -175,23 +168,14 @@ def pq_assign_codes(
         F.array_sort(F.collect_list(F.struct("code", "cw"))).alias("_cbk")
     )
 
-    def _score(e):
-        # UNROLLED d2 (small fixed d): plain getItem arithmetic, no
-        # intermediate d-element array per (row, codeword).
-        # Bit-identical to the zip_with fold: the fold computes
-        # (((0+x1)+x2)+x3)+x4 and 0+x1 == x1 exactly for the
-        # non-negative squares, so this is the same double sequence.
-        terms = [
-            (F.col("sv").getItem(i) - e["cw"].getItem(i))
-            * (F.col("sv").getItem(i) - e["cw"].getItem(i))
-            for i in range(d)
-        ]
-        d2 = terms[0]
-        for t in terms[1:]:
-            d2 = d2 + t
-        return F.struct(d2.alias("d2"), e["code"].alias("code"))
-
-    best = F.array_min(F.transform(F.col("_cbk"), _score))
+    # unrolled d2 (small fixed d): flat arithmetic, no intermediate
+    # d-element array per (row, codeword)
+    d2 = squared_l2_sql(
+        [f"sv[{i}]" for i in range(d)], [f"e.cw[{i}]" for i in range(d)]
+    )
+    best = F.expr(
+        f"array_min(transform(_cbk, e -> struct({d2} AS d2, e.code AS code)))"
+    )
     out = subs.join(F.broadcast(packed), "sub_j").select(
         "vec_id", "sub_j", F.col("sv"), F.col("_cbk"), best.alias("_b")
     )
@@ -346,7 +330,7 @@ def _op_lut(trained: DataFrame, spark: SparkSession) -> DataFrame:
         "qid",
         "sub_j",
         "code",
-        F.floor(_op_d2("qv", "cw") * 10000 + F.lit(0.5)).cast("long").alias("ld"),
+        F.floor(squared_l2("qv", "cw") * 10000 + F.lit(0.5)).cast("long").alias("ld"),
     )
 
 
@@ -358,22 +342,23 @@ def _op_exact_topk(spark: SparkSession, sf_dir: str, qfull: DataFrame) -> DataFr
     same literals both engines).  ONE copy shared by the operating-point
     measurement and the nprobe operating curve."""
     from ..io.sources import ensure_parallelism
-    from .retrieval_eval import d2_unrolled
 
     emb = ensure_parallelism(load_table(spark, sf_dir, "embeddings"))
-    # unrolled d2 (r16, see d2_unrolled): the zip_with/aggregate fold is
-    # CodegenFallback and ran interpreted on every (vector, query) row;
-    # the elementwise float->double cast is hoisted into a projected
-    # column (same element values, same left-to-right sum)
+    # unrolled d2: the fold is CodegenFallback and would run interpreted
+    # on every (vector, query) row; the elementwise float->double cast
+    # is hoisted into a projected column (same element values, same
+    # left-to-right sum)
+    d = _OPM * _OPD
+    d2 = squared_l2_sql(
+        [f"_e[{i}]" for i in range(d)], [f"qv[{i}]" for i in range(d)]
+    )
     scored = (
         emb.crossJoin(F.broadcast(qfull))
         .withColumn("_e", F.col("embedding").cast("array<double>"))
         .select(
             "qid",
             "vec_id",
-            portable_round(
-                d2_unrolled("_e", "qv", _OPM * _OPD), 4
-            ).alias("d2"),
+            portable_round(F.expr(d2), 4).alias("d2"),
         )
     )
     return _two_phase_topk(

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
@@ -469,31 +470,6 @@ def _cl_vec(topic: Column, tag: Column, d: int = _CL_D) -> Column:
     )
 
 
-def _cl_d2(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def d2_unrolled(a: str, b: str, d: int) -> Column:
-    """``_cl_d2`` with the dimension statically known, unrolled to flat
-    arithmetic (r16, guide §4.1): higher-order functions are
-    CodegenFallback, so the zip_with/aggregate fold evaluated
-    interpreted on every scored row — measured 1.7x slower per row than
-    the codegen'd unrolled form at 64 dims.  Bit-identical: the fold
-    computes (((0.0 + t0) + t1) + ...) and this renders exactly that
-    left-associated sequence, leading 0.0D included (so a -0.0 first
-    term folds identically).  ``a``/``b`` are SQL identifiers of
-    array<double> columns of length >= d (index j is 0-based, in-bounds
-    by construction — ANSI-safe)."""
-    terms = " + ".join(
-        f"(({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}]))" for i in range(d)
-    )
-    return F.expr(f"0.0D + {terms}")
-
-
 def _hex4_sql_spark(h_sql: str) -> str:
     """Spark-SQL rendering of ``_hex_slice_to_int(h, 1, 4)`` — the same
     instr-based digit arithmetic, value-identical BIGINT."""
@@ -611,21 +587,15 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the projection — no n*K cross-join row expansion and no
     # groupBy(doc_id) exchange (the old shape shuffled n pre-aggregated
     # rows).  array_min over (d2, cid) structs replays min(struct)'s
-    # tie-break; the zip_with fold is the same left-to-right double
-    # sequence as _cl_d2, so the assignment is bit-identical and the
-    # oracle's ROW_NUMBER ORDER BY d2, cid twin is unchanged.
+    # tie-break; squared_l2 is the same left-to-right double sequence
+    # as the oracle's list fold, so the assignment is bit-identical and
+    # its ROW_NUMBER ORDER BY d2, cid twin is unchanged.
     seed_lit = _literal_cells_expr(seed_rows)
     best = F.array_min(
         F.transform(
             seed_lit,
             lambda s: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"), s["cv"], lambda x, y: (x - y) * (x - y)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
+                squared_l2(F.col("v"), s["cv"]).alias("d2"),
                 s["cid"].alias("cid"),
             ),
         )
@@ -669,6 +639,9 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(materialize, "recall candidates", "lazy")
     )
 
+    d2 = squared_l2_sql(
+        [f"v[{i}]" for i in range(_CL_D)], [f"qv[{i}]" for i in range(_CL_D)]
+    )
     scored = (
         cand.join(vecs, "doc_id")
         .join(F.broadcast(queries), "qid")
@@ -676,7 +649,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
             "np",
             "qid",
             "doc_id",
-            d2_unrolled("v", "qv", _CL_D).alias("d2"),
+            F.expr(d2).alias("d2"),
             F.concat_ws("#", "np", "qid").alias("_g"),
         )
     )
@@ -686,7 +659,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     exact = two_phase_topk(
         vecs.crossJoin(F.broadcast(queries)).select(
-            "qid", "doc_id", d2_unrolled("v", "qv", _CL_D).alias("d2")
+            "qid", "doc_id", F.expr(d2).alias("d2")
         ),
         "qid",
         [F.asc("d2"), F.asc("doc_id")],

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import squared_l2
 from ..io.materialize import materialize, temp_dir
 from ..io.sources import load_table, local_rows
 from ..streaming.ingest import (
@@ -382,11 +383,7 @@ def _nearest_ingest_centroid(emb):
     and the (d2, cid) ordering has no FP seam."""
     scored = [
         F.struct(
-            F.aggregate(
-                F.zip_with(emb, F.lit(cv), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
+            squared_l2(emb, F.lit(cv)).alias("d2"),
             F.lit(cid).alias("cid"),
         )
         for cid, cv in _ingest_centroids()

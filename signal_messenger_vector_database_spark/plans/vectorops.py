@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import portable_round
+from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
 from .registry import QuerySpec
@@ -74,11 +75,7 @@ def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_label", F.col("pv.cval").alias("centroid"))
     )
     # Assignment step: squared L2 to each centroid, keep the argmin.
-    d2 = F.aggregate(
-        F.zip_with("embedding", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = squared_l2("embedding", "centroid")
     scored = (
         emb.join(F.broadcast(centroids))
         .select(
@@ -576,11 +573,11 @@ def _pq_spark_dist_array(sub_j: int, codebook: list[list[float]]) -> str:
         "array(" + ", ".join(f"CAST({c} AS DOUBLE)" for c in cw) + ")"
         for cw in codebook
     ) + ")"
-    e = lambda i: f"CAST(embedding[{base + i}] AS DOUBLE)"  # noqa: E731
-    body = " + ".join(
-        f"({e(i)} - cw[{i}]) * ({e(i)} - cw[{i}])" for i in range(_PQ_D)
+    body = squared_l2_sql(
+        [f"CAST(embedding[{base + i}] AS DOUBLE)" for i in range(_PQ_D)],
+        [f"cw[{i}]" for i in range(_PQ_D)],
     )
-    return f"transform({cb}, cw -> ({body}))"
+    return f"transform({cb}, cw -> {body})"
 
 
 def _pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1075,14 +1072,6 @@ def _pq_sub_rows(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", F.posexplode(sub).alias("sub_j", "sv"))
 
 
-def _pq_d2(sv_col: str, cw_col: str):
-    return F.aggregate(
-        F.zip_with(sv_col, cw_col, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_trained_parts(spark: SparkSession, sf_dir: str):
     """(final assignment a2, trained codebooks) — ONE build shared by
     pq_encode_trained and pq_recall_trained so the training recipe
@@ -1100,7 +1089,7 @@ def _pq_trained_parts(spark: SparkSession, sf_dir: str):
 
     def assign(cb: DataFrame) -> DataFrame:
         scored = subs.join(F.broadcast(cb), "sub_j").select(
-            "vec_id", "sub_j", "sv", "code", _pq_d2("sv", "cw").alias("d2")
+            "vec_id", "sub_j", "sv", "code", squared_l2("sv", "cw").alias("d2")
         )
         return scored.groupBy("vec_id", "sub_j").agg(
             F.min_by(F.struct("code", "sv"), F.struct("d2", "code")).alias("_w")
@@ -2482,23 +2471,7 @@ def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(100)
         .select("vec_id")
     )
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    exact = (
-        emb.select("vec_id", portable_round(d2, 4).alias("d2"))
-        .orderBy("d2", "vec_id")
-        .limit(10)
-        .select("vec_id")
-    )
+    exact = _exact_l2_top10(spark, sf_dir)
     hits = approx.join(exact, "vec_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_hits")
     )
@@ -2579,15 +2552,7 @@ def _exact_l2_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth for both PQ recall measurements."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qv,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2 = squared_l2(F.col("embedding").cast("array<double>"), qv)
     return (
         emb.select("vec_id", portable_round(d2, 4).alias("d2"))
         .orderBy("d2", "vec_id")
@@ -2620,7 +2585,7 @@ def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     lut = trained.join(F.broadcast(qdf), "sub_j").select(
         "sub_j",
         "code",
-        F.floor(_pq_d2("qv", "cw") * 10000 + F.lit(0.5))
+        F.floor(squared_l2("qv", "cw") * 10000 + F.lit(0.5))
         .cast("long")
         .alias("ld_q"),
     )

@@ -34,12 +34,14 @@ BENCH_OPS = [
 ]
 
 
-def _engine_lines(pattern: str) -> list[str]:
-    """``path:line: text`` of every line under plans/, operators/ or
-    streaming/ that matches ``pattern``."""
+def _engine_lines(
+    pattern: str, subs: tuple[str, ...] = ("plans", "operators", "streaming")
+) -> list[str]:
+    """``path:line: text`` of every line under the package dirs ``subs``
+    (default plans/, operators/ and streaming/) that matches ``pattern``."""
     banned = re.compile(pattern)
     hits = []
-    for sub in ("plans", "operators", "streaming"):
+    for sub in subs:
         for path in sorted(glob.glob(os.path.join(PKG, sub, "*.py"))):
             for i, line in enumerate(open(path), 1):
                 if banned.search(line):

@@ -9,35 +9,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 
-def test_d2_unrolled_matches_hof_fold(spark):
-    """d2_unrolled (flat codegen arithmetic) == the zip_with/aggregate
-    fold it replaced, bit-for-bit, on the real 64-dim embedding table
-    crossed with a fixture-derived query vector."""
-    from signal_messenger_vector_database_spark.io.sources import load_table
-    from signal_messenger_vector_database_spark.plans.retrieval_eval import (
-        _cl_d2,
-        d2_unrolled,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("a")
-    )
-    # second operand: the same table reversed per-row (deterministic,
-    # exercises negative diffs and -0.0 terms)
-    df = emb.withColumn("b", F.reverse(F.col("a")))
-    d = df.select(F.size("a").alias("n")).agg(F.min("n"), F.max("n")).first()
-    assert d[0] == d[1], "fixture embeddings must be fixed-width"
-    dim = d[0]
-    cmp = df.select(
-        _cl_d2("a", "b").alias("hof"),
-        d2_unrolled("a", "b", dim).alias("unrolled"),
-    )
-    bad = cmp.filter(
-        ~(F.col("hof").eqNullSafe(F.col("unrolled")))
-    ).count()
-    assert bad == 0
-
-
 def test_dup_set_minmax_matches_count_distinct(spark):
     """The dup-window filter min(doc_id) != max(doc_id) selects exactly
     the count_distinct(doc_id) >= 2 hash set on the fixture windows."""

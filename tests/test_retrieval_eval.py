@@ -248,9 +248,9 @@ def test_clustered_dyadic_arithmetic_is_exact_across_runtimes(spark):
 
     from pyspark.sql import functions as F
 
+    from signal_messenger_vector_database_spark.functions.vector import squared_l2
     from signal_messenger_vector_database_spark.plans.retrieval_eval import (
         _CL_D,
-        _cl_d2,
         _cl_vec,
     )
 
@@ -288,7 +288,7 @@ def test_clustered_dyadic_arithmetic_is_exact_across_runtimes(spark):
     )
     got_d2 = {
         r["rid"]: r["d2"]
-        for r in pairs.select("rid", _cl_d2("a", "b").alias("d2")).collect()
+        for r in pairs.select("rid", squared_l2("a", "b").alias("d2")).collect()
     }
     for i in range(len(rows) - 1):
         acc = 0.0

@@ -63,17 +63,31 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
 
     changed = [
         "stream_ingest_index",
-        "suppression_filter",
         "pq_operating_point",
         "ivf_pq_operating_curve",
         "ivf_pq_clustered_curve",
         "ivf_recall_clustered",
         "topk_ivf_pq_trained",
+        "pq_encode_trained",
+        "pq_recall_trained",
+        "semdedup_trained",
+        "pq_encode_delta",
+        "topk_l2",
+        "kmeans_fit_assign",
+        "kmeans_assign",
+        "kmeans_lloyd3",
+        "pq_encode",
+        "topk_pq_adc",
+        "topk_ivf_pq",
+        "topk_pq_rerank",
+        "pq_recall_at_k",
+        "pagerank3",
+        "pagerank3_shuffle",
+        "triangle_count",
+        "suppression_filter",
         "curation_attrition",
         "stream_ivf_compact",
         "dim_ablation_recall",
-        "pq_encode_trained",
-        "pq_recall_trained",
         "bitext_mining_eval",
         "bfs_khops",
         "bpe_train",
@@ -98,20 +112,6 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
         "stream_static_join",
         "stream_sessionize",
         "stream_sketch_quantiles",
-        "stream_lsh_dedup",
-        "assoc_rules",
-        "ccnet_buckets",
-        "dup_span_removal",
-        "semdedup",
-        "semdedup_uncapped",
-        "semdedup_trained",
-        "semdedup_capped",
-        "centroid_outlier_prune",
-        "csv_roundtrip",
-        "jsonl_roundtrip",
-        "orc_roundtrip",
-        "schema_evolution",
-        "pq_encode_delta",
     ]
     window, prov = window_rotate.compute_window(changed, 50)
     assert window == _WINDOW

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from signal_messenger_vector_database_spark.functions.vector import (
@@ -10,10 +13,26 @@ from signal_messenger_vector_database_spark.functions.vector import (
     dot_product,
     l2_distance,
     l2_norm,
+    squared_l2,
+    squared_l2_sql,
 )
 from signal_messenger_vector_database_spark.operators.topk import cosine_topk
+from tests.conftest import SF_SMALL
+from tests.test_materialize import _engine_lines
 
 SF = "/root/testdata/sf0.001"
+
+# The squared-L2 kernel spelled out anywhere: a squared-difference
+# lambda (the HOF fold body), Spark SQL text squaring a 0-based
+# Python-loop subscript or squaring two ``{placeholder}`` operands (the
+# unrolled rendering), or Column algebra squaring a getItem difference.
+# DuckDB oracle text indexes from 1 inside list lambdas and matches none.
+_SQUARED_L2_FORMS = (
+    r"lambda \w+, \w+: \((\w+) - (\w+)\) \* \(\1 - \2\)"
+    r"|\[\{\w+\}\]\) \* \("
+    r"|\(\{\w+\} - \{\w+\}\) \* \("
+    r"|getItem\(\w+\) - .*getItem\(\w+\)\)"
+)
 
 
 def _vec_df(spark, vecs):
@@ -493,3 +512,60 @@ def test_route_query_cells_matches_independent_python_model(spark):
     for qid in qids:
         want = model_route(qvecs[qid])
         assert [c for _, c in sorted(got[qid])] == want, (qid, got[qid], want)
+
+
+def test_squared_l2_has_one_owner():
+    """functions/vector.py is the only code that spells out squared L2:
+    nothing under plans/, operators/ or streaming/ defines a fold or an
+    unrolled rendering of its own, and the package holds exactly one of
+    each, both in functions/vector.py."""
+    hits = _engine_lines(_SQUARED_L2_FORMS)
+    assert not hits, "\n".join(hits)
+    owner = _engine_lines(_SQUARED_L2_FORMS, subs=("functions", "io"))
+    assert [h.split(":")[0] for h in owner] == [
+        "signal_messenger_vector_database_spark/functions/vector.py"
+    ] * 2, owner
+
+
+@pytest.mark.parametrize("d", [4, 8, 16, 64])
+def test_squared_l2_sql_matches_hof_fold(spark, d):
+    """squared_l2_sql (flat codegen arithmetic) == the squared_l2 fold,
+    bit for bit, at every dimension a caller unrolls: the fixture's
+    embeddings cut to d dims against their own per-row reversal
+    (negative diffs), plus equal operands (every term +0.0), 0.0/-0.0
+    operands in all four sign pairs and a null element."""
+    from signal_messenger_vector_database_spark.io.sources import load_table
+
+    emb = load_table(spark, SF_SMALL, "embeddings").select(
+        F.slice(F.col("embedding").cast("array<double>"), 1, d).alias("a")
+    )
+    n = emb.select(F.size("a").alias("n")).agg(F.min("n"), F.max("n")).first()
+    assert n[0] == n[1] == d, "fixture embeddings must be at least d wide"
+    v = [0.1 * (i + 1) - 0.35 for i in range(d)]
+    edge = spark.createDataFrame(
+        [
+            (v, v),
+            ([0.0] * d, [0.0] * d),
+            ([0.0] * d, [-0.0] * d),
+            ([-0.0] * d, [0.0] * d),
+            ([-0.0] * d, [-0.0] * d),
+            ([None] + v[1:], v),
+        ],
+        "a array<double>, b array<double>",
+    )
+    df = emb.withColumn("b", F.reverse(F.col("a"))).unionByName(edge)
+    unrolled = squared_l2_sql(
+        [f"a[{i}]" for i in range(d)], [f"b[{i}]" for i in range(d)]
+    )
+    cmp = df.select(
+        squared_l2("a", "b").alias("hof"), F.expr(unrolled).alias("unrolled")
+    )
+    assert cmp.filter(~F.col("hof").eqNullSafe(F.col("unrolled"))).count() == 0
+    # eqNullSafe calls 0.0 and -0.0 equal: the sign bit is pinned here
+    rows = cmp.collect()
+    assert len(rows) == emb.count() + 6
+    for r in rows:
+        if r.hof is None:
+            assert r.unrolled is None
+        else:
+            assert struct.pack("<d", r.hof) == struct.pack("<d", r.unrolled)
