@@ -67,10 +67,6 @@ Each query is forced through full evaluation with the noop sink (count()
 would let Catalyst prune the projections we mean to measure).
 
 Flags (r12):
-  --warm-index   run with SMVD_IVF_CACHE_DIR set (temp dir unless the
-                 env supplies one) and the index PRE-BUILT, writing
-                 BENCH_warm_r<N>.json — the amortized serving-mode
-                 series, compared only against prior warm sidecars.
   --stamp=<s>    free-form provenance stamp recorded in the payload.
   --single-shot  (r14) one timed run per query instead of 3 — the
                  r1-r13 loop, for quick iteration.
@@ -78,14 +74,12 @@ The payload also carries run = $SMVD_BENCH_RUN (default
 "unattributed") so a driver-overwritten sidecar is distinguishable
 from the builder's committed run (VERDICT r11 #8).
 
-Since the r12 session memo (operators/ivf_index.py) the COLD series
-also amortizes the shared IVF/PQ index within the run: the first seam
+Since the r12 session memo (operators/ivf_index.py) the series
+amortizes the shared IVF/PQ index within the run: the first seam
 consumer pays the build inside its timed window, later consumers reuse
 the session's checkpointed frames — the behavior any engine with an
-index manager gives a sequence of queries in one session.  The warm
-series differs in that the build happens BEFORE the timed window
-(cross-process disk cache, pre-built untimed), so no query pays it.
-Round-over-round, r12+ cold entries for seam consumers are therefore
+index manager gives a sequence of queries in one session.
+Round-over-round, r12+ entries for seam consumers are therefore
 expected to drop vs r11; compare via shared_subset_normalized as ever.
 """
 
@@ -187,22 +181,10 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # --warm-index (VERDICT r11 #4): run the SAME query set with the
-    # build-once IVF/PQ index cache enabled and pre-built, so the
-    # amortized serving-mode cost is a machine-recorded artifact
-    # (BENCH_warm_r<N>.json) instead of SCALING.md prose.  The cache dir
-    # must be set BEFORE the session/first plan is built.
-    warm = "--warm-index" in sys.argv[1:]
     stamp = next(
         (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--stamp=")),
         None,
     )
-    if warm and not os.environ.get("SMVD_IVF_CACHE_DIR"):
-        import tempfile
-
-        os.environ["SMVD_IVF_CACHE_DIR"] = tempfile.mkdtemp(
-            prefix="smvd_bench_warm_"
-        )
 
     from signal_messenger_vector_database_spark.session import get_spark
     from signal_messenger_vector_database_spark.plans.catalog import all_specs
@@ -222,16 +204,6 @@ def main() -> None:
             specs[name].fn(spark, warmup_dir(sf_dir)).write.format(
                 "noop"
             ).mode("overwrite").save()
-
-    if warm:
-        # index pre-build pass at the TARGET sf: the first evaluation of
-        # each consumer materializes its corpus-keyed assignment/codebook
-        # parquet; the timed loop below then measures pure serving cost.
-        for name in HEADLINE:
-            if name in specs:
-                specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
 
     # Per-query repeats (VERDICT r13 #4): every round spent a side tool
     # re-measuring cold movers that turned out to be box noise; the
@@ -274,7 +246,7 @@ def main() -> None:
         return {"query": name, "sec": sorted(runs)[1], "runs": runs}
 
     def canary_jobs() -> dict:
-        """Per-JOB scheduler-overhead canary (r13).  The first r13 warm
+        """Per-JOB scheduler-overhead canary (r13).  One r13 bench
         run hit a degraded-box window where every multi-stage query ran
         ~2.4x while BOTH data canaries read <=1.2x — the degradation was
         in per-job/stage fixed costs, which a single-job canary cannot
@@ -293,7 +265,7 @@ def main() -> None:
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     medians = {n: sorted(r)[len(r) // 2] for n, r in query_runs.items()}
     out = {
-        "metric": "headline_queries_total_warm" if warm else "headline_queries_total",
+        "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         # the self-adjudicating scalar (r15, see module docstring): the
         # sum of per-query MEDIANS — immune to the first-run memo-build
@@ -315,9 +287,7 @@ def main() -> None:
         # the per-query timings are the payload the judge reads
         "queries": timings,
     }
-    norm = _shared_subset_normalized(
-        repo_dir, timings, out, warm=warm, medians=medians
-    )
+    norm = _shared_subset_normalized(repo_dir, timings, out, medians=medians)
     if norm is not None:
         # stdout gets the small summary only; the per-query maps that
         # truncated BENCH_r10.json live in the committed sidecar below
@@ -334,7 +304,7 @@ def main() -> None:
     # the raw repeats and their medians — the in-run adjudication data
     sidecar["query_runs"] = query_runs
     sidecar["queries_median"] = medians
-    with open(os.path.join(repo_dir, _sidecar_name(repo_dir, warm=warm)), "w") as f:
+    with open(os.path.join(repo_dir, _sidecar_name(repo_dir)), "w") as f:
         json.dump(sidecar, f, indent=1)
     # stop Spark BEFORE printing so no shutdown/stage log line can land
     # after the JSON and push it out of the driver's 2000-char tail
@@ -361,11 +331,10 @@ def main() -> None:
     print(json.dumps(slim))
 
 
-def _sidecar_name(repo_dir: str, warm: bool = False) -> str:
-    """``BENCH_local_r<N>.json`` (or ``BENCH_warm_r<N>.json`` for the
-    --warm-index arm) where N = newest driver BENCH round + 1 (the
-    driver writes BENCH_r<N>.json AFTER running bench, so at run time
-    the newest existing file is the previous round's)."""
+def _sidecar_name(repo_dir: str) -> str:
+    """``BENCH_local_r<N>.json`` where N = newest driver BENCH round + 1
+    (the driver writes BENCH_r<N>.json AFTER running bench, so at run
+    time the newest existing file is the previous round's)."""
     import glob
 
     rounds = [
@@ -373,22 +342,17 @@ def _sidecar_name(repo_dir: str, warm: bool = False) -> str:
         for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
         if (m := re.search(r"BENCH_r(\d+)\.json$", os.path.basename(p)))
     ]
-    kind = "warm" if warm else "local"
-    return f"BENCH_{kind}_r{max(rounds, default=0) + 1}.json"
+    return f"BENCH_local_r{max(rounds, default=0) + 1}.json"
 
 
 def _shared_subset_normalized(
     repo_dir: str,
     timings: dict[str, float],
     out: dict,
-    warm: bool = False,
     medians: dict[str, float] | None = None,
 ) -> dict | None:
     """See the module docstring.  Returns None when no prior BENCH file
-    (or its canaries) exist — first round, or a stripped checkout.
-    Warm-index runs compare only against prior WARM sidecars: mixing
-    the cold and warm series would misread the amortization as a
-    round-over-round speedup."""
+    (or its canaries) exist — first round, or a stripped checkout."""
     import glob
 
     # newest by ROUND NUMBER, not lexicographic filename order — an
@@ -400,13 +364,8 @@ def _shared_subset_normalized(
     # driver artifact) must not kill the comparison, it should fall
     # back to the newest intact round.
     prior = []
-    own = _sidecar_name(repo_dir, warm=warm)  # this run's sidecar is not a prior
-    patterns = (
-        ((0, "BENCH_warm_r*.json"),)
-        if warm
-        else ((1, "BENCH_r*.json"), (0, "BENCH_local_r*.json"))
-    )
-    for pref, pat in patterns:
+    own = _sidecar_name(repo_dir)  # this run's sidecar is not a prior
+    for pref, pat in ((1, "BENCH_r*.json"), (0, "BENCH_local_r*.json")):
         for p in glob.glob(os.path.join(repo_dir, pat)):
             m = re.search(r"_r(\d+)\.json$", os.path.basename(p))
             if m and os.path.basename(p) != own:
@@ -457,7 +416,7 @@ def _shared_subset_normalized(
     # median-vs-prev-median ratio (r15, the self-adjudicating signal —
     # see module docstring).  Previous medians come from the parsed
     # prior if it carries them (sidecars do since r14), else from the
-    # same round's committed local/warm sidecar, else fall back to the
+    # same round's committed local sidecar, else fall back to the
     # prior's first-run timings (exact for pre-r14 single-shot rounds).
     median_ratio = None
     if medians:
@@ -465,10 +424,7 @@ def _shared_subset_normalized(
         if not isinstance(prev_med, dict):
             m = re.search(r"_r(\d+)\.json$", os.path.basename(prev_path))
             side = os.path.join(
-                repo_dir,
-                f"BENCH_{'warm' if warm else 'local'}_r{m.group(1)}.json"
-                if m
-                else "",
+                repo_dir, f"BENCH_local_r{m.group(1)}.json" if m else ""
             )
             try:
                 with open(side) as f:

@@ -1,77 +1,68 @@
-"""Build-once shared IVF assignment (VERDICT r10 #3).
+"""Build-once shared IVF/PQ index parts, held in the session memo.
 
 The x64 probe showed the two-level coarse assignment's n*(1+nprobe)*
-sqrt(k) term as the dominant superlinear cost of the whole IVF family —
-and SEVEN catalog consumers (semdedup, knn_graph_ivf, ivf_maintenance,
-ann_recall_at_k, hard_negative_mining, both bitext queries) each
-recompute the IDENTICAL assignment over the same corpus.  At 100 TB
-the assignment must be a materialized index build amortized across
-consumers, not a per-query recompute: build once, write (vec_id, cid)
-to parquet keyed by the corpus, and let every consumer equi-join
-against the stored index — per-query marginal cost linear in n.
+sqrt(k) term as the dominant superlinear cost of the whole IVF family,
+and the catalog's IVF consumers (semdedup, knn_graph_ivf,
+ivf_maintenance, ann_recall_at_k, hard_negative_mining, both bitext
+queries, ...) each need the IDENTICAL assignment over the same corpus;
+the trained-PQ queries likewise need identical codebooks.  This module
+is the build step: the first consumer of an index part builds it, every
+later consumer in the session reuses it.
 
-Design — three tiers, cheapest honest one wins:
+One tier, the session memo:
 
-* **Session memo (default, r12)**: within one SparkSession the first
-  inline build of a given (corpus token, content stamp, geometry) key
-  is localCheckpoint'ed and handed — the SAME frame, so results are
-  bit-identical by construction — to every later consumer of that key.
-  A driver's queries run sequentially in one session (the bench, the
-  correctness sweep, a notebook), so this is the index-manager
-  behavior a production engine has anyway: build once per session,
-  serve many.  Plan construction still never runs a job (the
-  checkpoint is lazy) and every oracle string is untouched.
-  ``SMVD_IVF_MEMO=0`` restores the per-call recompute — the scaling
-  probes set it so their "inline" baseline keeps measuring the
-  unamortized cost.  Retention: keyed per-session; STOPPED sessions
-  are purged on the next seam access (the frames reference their
-  session, so weakness alone can never fire — r12 code review); one
-  live entry per (kind, token, geometry) family, superseded in place
-  when the file-stat content stamp or the input frame's schema
-  fingerprint changes, and the whole memo is LRU-bounded at
-  ``SMVD_IVF_MEMO_MAX`` families (default 16) with the evicted
-  frame's checkpoint blocks EXPLICITLY unpersisted — a long-lived
-  notebook session over many corpora cannot pin unbounded storage
-  (VERDICT r12 #6).
+* **Key**: every part is stored under one key of three pieces
+  (``_key``).  The FAMILY names the part: its kind, the caller's
+  corpus token(s), the full geometry and the vector dtypes.  The
+  CONTENT STAMP is the source files' (mtime_ns, size) stats
+  (``_content_stamp``), so an in-place corpus update that keeps the row
+  count still misses.  The FINGERPRINT is the input frames' schema
+  JSON, so a caller that reuses a token for a differently-shaped
+  projection rebuilds instead of receiving another query's index.
+* **Get or build** (``_get_or_build``): a hit needs the stored stamp
+  and fingerprint to match and hands back the SAME pinned frame, so
+  results are bit-identical by construction.  A miss builds, wraps the
+  frame in a lazy checkpoint and supersedes the family's previous entry
+  in place, releasing its blocks.  Under adaptive execution the lazy
+  checkpoint runs the build's shuffle and broadcast stages when it is
+  made (a part of a 500-vector corpus: 7 jobs at build, 2 at the first
+  action), so a call that misses N parts builds them one after
+  another.  ``SMVD_IVF_MEMO=0`` builds inline on every call: the scaling
+  probes and the plan dumps measure and explain the unamortized cost
+  that way.
+* **Composed parts**: the delta and chain seams never re-assign what
+  they have seen.  Their result is the base corpus's entry (the very
+  entry ``shared_hier_assignment(base)`` returns) unioned with one
+  entry per ``(base_token, delta_token)``, each assigning ONLY its
+  delta against the quantizer frozen at the base.  The two-level
+  assignment is per-row given fixed centroids, so the union is
+  bit-identical to one full assignment of base UNION deltas at base
+  geometry (pinned by test_ivf_index), and ingesting +1/64 of the
+  corpus costs one |delta| assignment.  ``shared_pq_encode_delta``
+  composes the trained-PQ base parts with its delta codes the same way.
+* **Retention**: one dict per SparkSession.  STOPPED sessions are purged
+  on the next seam access (the frames reference their session, so
+  weakness alone can never fire); each family holds at most one entry;
+  the memo is LRU-bounded at ``_MEMO_MAX`` families per session, and an
+  evicted entry's checkpoint blocks are unpersisted explicitly, so a
+  long-lived notebook session over many corpora cannot pin unbounded
+  storage.  Eviction never takes a part the evicting call has already
+  composed into its result (a chain longer than the cap would
+  otherwise release its own base part).
+* **Self-heal**: ``localCheckpoint`` truncates lineage, and its blocks
+  are unrecoverable after executor loss.  A hit whose blocks are gone
+  is detected driver-side (``_memo_value_healthy``), counted
+  (``memo_heal_count``), dropped and rebuilt from the caller's
+  still-lineaged input instead of being served dead.  Only the action
+  already in flight when the blocks vanish can fail; rerunning that
+  query rebuilds the part.  Within one process every build of a key is
+  deterministic (seeded centroids, fixed geometry, exact-integer and
+  dyadic-grid arithmetic), so a rebuild returns the same rows.
 
-  **Cluster caveat (ADVICE r12)**: ``localCheckpoint`` truncates
-  lineage, and its blocks are UNRECOVERABLE after executor loss — on
-  a real cluster with dynamic allocation or preemption, a later seam
-  consumer's action can fail mid-session with a missing-block error.
-  That is acceptable in this repo's single-JVM local[n] harness (no
-  executor ever leaves); a cluster deployment should point the seam
-  at the durable tier instead (``SMVD_IVF_CACHE_DIR`` on shared
-  storage — the memo never shadows it), or accept re-running the
-  failed query with ``SMVD_IVF_MEMO=0``.  Since r13 the seam also
-  SELF-HEALS at the next access (``_memo_value_healthy``): a memo hit
-  whose checkpoint blocks are gone — executor loss, or a handle whose
-  blocks were unpersisted out from under it — is detected driver-side
-  (materialized-but-zero-cached-partitions in the block manager),
-  dropped, and rebuilt from the caller's still-lineaged input instead
-  of being served dead.  Only the action already in flight when the
-  blocks vanish can still fail; every subsequent seam consumer gets a
-  live frame.
-* **Opt-in disk cache by environment** (``SMVD_IVF_CACHE_DIR``):
-  when set (the scaling probe, a production deployment's index-build
-  step, the bench's ``--warm-index`` arm), the first consumer
-  materializes the assignment to parquet and later consumers —
-  including other processes — read it.  The memo never shadows this
-  tier: cache-dir mode behaves exactly as in r11.
-* **Corpus-keyed** (the ``tokenize_cl100k`` snapshot pattern): the
-  cache key hashes the caller's corpus token (source path + row
-  count), the source files' (mtime_ns, size) stats, and the full
-  assignment geometry (k, n_super, nprobe) — a row-count, geometry,
-  or source-file change (including an in-place update that preserves
-  row count, via the file stats — ADVICE r11) misses to a fresh
-  build.  The residual blind spot is an in-place rewrite that forges
-  identical mtime+size; a deployment needing cryptographic staleness
-  guarantees would swap ``_content_stamp`` for a content hash at
-  build-pipeline cost.
-* **Bit-identical by construction**: the cached frame is the parquet
-  round-trip of the very DataFrame the inline path returns; (long,
-  long) columns round-trip exactly, so consumers' results — and their
-  DuckDB oracles — are unchanged either way (pinned by
-  test_ivf_index).
+The residual staleness blind spot is an in-place rewrite that forges
+identical mtime and size; a deployment that needs cryptographic
+staleness guarantees would swap ``_content_stamp`` for a content hash
+at build-pipeline cost.
 
 Reference parity note: the reference installs pgvectorscale
 (src/rag/sqlx.rs:22-29) whose DiskANN index IS a persisted build-once
@@ -81,17 +72,16 @@ build step, Spark-shaped.
 
 from __future__ import annotations
 
-import hashlib
 import logging
 import os
 import shutil
-import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io.materialize import hold, materialize, release
-from ..io.sources import local_rows
+from ..io.sources import ensure_parallelism, local_rows
+from .ann import ivf_assign_hier, ivf_seed_centroids
 
 _log = logging.getLogger(__name__)
 
@@ -100,74 +90,24 @@ _log = logging.getLogger(__name__)
 # access is a false-positive heal loop silently defeating the memo.
 _MEMO_HEAL_COUNT = 0
 
+# Live-family cap per session (VERDICT r12 #6): supersede-in-place
+# bounds each family to one entry, but a long-lived session over many
+# corpora accumulates FAMILIES, each pinning checkpointed blocks for the
+# session's lifetime.  16 is far above any one pipeline's working set.
+_MEMO_MAX = 16
+
 
 def memo_heal_count() -> int:
     """Number of memo self-heal rebuilds this process has performed."""
     return _MEMO_HEAL_COUNT
 
-from .ann import ivf_assign_hier
 
-
-def ivf_cache_dir() -> str | None:
-    """The shared-index cache root, or None (inline path) when the
-    deployment has not opted in."""
-    return os.environ.get("SMVD_IVF_CACHE_DIR") or None
-
-
-def _atomic_publish(df: DataFrame, path: str) -> None:
-    """Write ``df`` as parquet at ``path`` via temp-dir + atomic rename
-    (VERDICT r12 #5): two processes building the same cache key used to
-    interleave ``mode=overwrite`` writes into ONE directory — a reader
-    could see a half-replaced index with a _SUCCESS marker from the
-    earlier write.  Now each builder writes its own sibling temp dir
-    (same filesystem, so POSIX rename is atomic) and publishes with one
-    rename; the destination is either absent or COMPLETE, never
-    partial.
-
-    Loser semantics: if the rename fails because another builder
-    already published, our temp copy is discarded and the winner's
-    index is used — safe because every build of a given key is
-    DETERMINISTIC (seeded centroids, fixed geometry, exact-integer /
-    dyadic-grid arithmetic), so any two builders' outputs are
-    row-identical.  A crashed pre-atomic partial (directory present,
-    no _SUCCESS) is removed before publishing; a crashed builder's
-    stale temp dir is inert (never read — readers only open ``path``)
-    and is cleaned up opportunistically here."""
-    parent, name = os.path.dirname(path), os.path.basename(path)
-    tmp = os.path.join(parent, f"{name}.__tmp_{os.getpid()}_{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(tmp)
-    if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        raise RuntimeError(f"parquet write produced no _SUCCESS: {tmp}")
-    # a partial destination (crashed writer predating the atomic
-    # protocol) can never become complete — clear it so rename can land
-    if os.path.isdir(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # lost the publish race: another builder's COMPLETE copy is in
-        # place (deterministic build — identical content); drop ours
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
-    # NOTE: stale temp dirs from CRASHED builders are left in place —
-    # they are inert (readers only ever open ``path``) and removing
-    # them here could race a live concurrent builder mid-write; a
-    # deployment reclaims them with any age-based sweep of
-    # ``*.__tmp_*`` under the cache root.
-
-
-# --- session-scoped memo (the default tier; module docstring) -------------
-# One dict per SparkSession.  Retention discipline (r12 code review):
-# the memoized DataFrames strongly reference their session, so a weak
-# map alone can never collect an entry — instead every access PURGES
-# sessions whose context reports stopped (sc._jsc is None after
-# SparkContext.stop()), which breaks the value->key cycle and frees the
-# frames.  Within a live session each (kind, token, geometry) FAMILY
-# holds at most ONE entry: a content-stamp change supersedes in place,
-# dropping the stale frame's last reference so its checkpoint blocks
-# are reclaimable, instead of pinning every superseded assignment for
-# the session's lifetime.
+# --- the session memo ------------------------------------------------------
+# Retention discipline (r12 code review): the memoized DataFrames
+# strongly reference their session, so a weak map alone can never
+# collect an entry — instead every access PURGES sessions whose context
+# reports stopped (sc._jsc is None after SparkContext.stop()), which
+# breaks the value->key cycle and frees the frames.
 
 _SESSION_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
@@ -183,7 +123,7 @@ def _session_stopped(spark: SparkSession) -> bool:
     (SparkContext.stop() sets _jsc = None).  'Context unavailable'
     (e.g. Spark Connect raises on .sparkContext) is NOT stopped —
     classifying it stopped would purge live sessions on every access
-    and silently disable the memo tier (r12 code review)."""
+    and silently disable the memo (r12 code review)."""
     try:
         sc = spark.sparkContext
     except Exception:
@@ -202,13 +142,9 @@ def _memo(spark: SparkSession) -> dict:
     return d
 
 
-def _memo_max() -> int:
-    """Live-family cap per session (VERDICT r12 #6): supersede-in-place
-    bounds each family to one entry, but a long-lived session over many
-    corpora accumulates FAMILIES — each pinning checkpointed blocks for
-    the session's lifetime.  16 is far above any one pipeline's working
-    set (the whole 46-query bench touches 7 distinct families)."""
-    return max(1, int(os.environ.get("SMVD_IVF_MEMO_MAX", "16")))
+def _frames(val) -> tuple:
+    """A memo value is a frame or a tuple of frames (the PQ pair)."""
+    return val if isinstance(val, tuple) else (val,)
 
 
 def _memo_frame_jrdds(val):
@@ -217,8 +153,7 @@ def _memo_frame_jrdds(val):
     carrying the MEMORY_AND_DISK blocks.  Yields nothing for handles
     that cannot be reached (Spark Connect has no _jdf; a plan that is
     not a LogicalRDD) — callers treat absence as 'no claim'."""
-    frames = val if isinstance(val, tuple) else (val,)
-    for df in frames:
+    for df in _frames(val):
         try:
             yield df._jdf.queryExecution().analyzed().rdd()
         except Exception:
@@ -274,48 +209,92 @@ def _memo_value_healthy(val) -> bool:
 def _release_memo_value(val) -> None:
     """EXPLICIT release of an evicted entry's checkpoint blocks, rather
     than waiting for GC + ContextCleaner to notice the dropped
-    reference.  Values are a frame or a tuple of frames (the PQ pair)."""
-    for df in val if isinstance(val, tuple) else (val,):
+    reference."""
+    for df in _frames(val):
         release(df)
 
 
-def _frame_fingerprint(df_or_tuple) -> str:
-    """Cheap identity guard on memo hits (ADVICE r12): the family key
-    is caller-supplied (token + geometry), so a future consumer that
-    reuses a token for a DIFFERENTLY-DERIVED projection would silently
-    receive another query's index.  The schema JSON catches the common
-    form of that bug (different column set/types) at analysis cost
-    only and is stable across localCheckpoint boundaries.  With
-    ``SMVD_IVF_MEMO_ASSERT=1`` the fingerprint also mixes in
-    ``semanticHash`` — a strict plan-identity check for tests/probes;
-    not the default because consumers legitimately pass freshly
-    localCheckpoint'ed inputs (the trained-PQ ``subs``), whose RDD-id
-    plans hash differently on every call."""
-    frames = df_or_tuple if isinstance(df_or_tuple, tuple) else (df_or_tuple,)
-    parts = []
+def _vec_dtype(df: DataFrame, col: str) -> str:
+    """The vector column's type, family component: two callers may
+    pass the same corpus token with float vs double projections — the
+    assignment math casts to double internally so results are
+    identical today, but the key should not BET on that staying true."""
+    return df.schema[col].dataType.simpleString()
+
+
+def _content_stamp(corpus_token: str) -> str:
+    """File-stat component of the key (ADVICE r11): an in-place corpus
+    content change that preserves row count (update, or delete+insert —
+    exactly the ``ivf_maintenance`` regime) must MISS the memo, not
+    serve a stale assignment.  By caller convention the token's
+    '|'-pieces lead with the source path (``<sf_dir>/<table>``, parquet
+    suffix elided); every piece that names an existing file (with or
+    without ``.parquet``) or directory contributes its (mtime_ns, size).
+    Derivation-tag pieces contribute nothing — for a purely derived
+    corpus the row count in the token plus the BASE file's stats remain
+    the content signal.  Only ABSOLUTE paths are stat-probed (r12
+    adversarial review): a relative piece like 'base' or a bare row
+    count must never match a stray cwd file, or the key becomes
+    cwd-dependent and churns spurious rebuilds."""
+    parts: list[str] = []
+    for piece in corpus_token.split("|"):
+        if not os.path.isabs(piece):
+            continue
+        for cand in (piece, piece + ".parquet"):
+            if os.path.isfile(cand):
+                st = os.stat(cand)
+                parts.append(f"{st.st_mtime_ns}:{st.st_size}")
+                break
+            if os.path.isdir(cand):
+                for f in sorted(os.listdir(cand)):
+                    st = os.stat(os.path.join(cand, f))
+                    parts.append(f"{st.st_mtime_ns}:{st.st_size}")
+                break
+    return ";".join(parts)
+
+
+def _key(kind: str, tokens, frames, vec_col: str, *geometry) -> tuple:
+    """The memo key of one index part: (family, content stamp,
+    fingerprint).  ``tokens`` identify the corpus bytes the part was
+    built from (the base token first); ``frames`` are the input frames
+    whose ``vec_col`` dtypes join the family and whose schema JSON is
+    the fingerprint — the cheap identity guard (ADVICE r12) that is
+    stable across localCheckpoint boundaries, where a plan hash of a
+    freshly checkpointed input (the trained-PQ ``subs``) would differ
+    on every call."""
+    family = (
+        kind, *tokens, *geometry, *(_vec_dtype(df, vec_col) for df in frames)
+    )
+    stamp = ";".join(_content_stamp(t) for t in tokens)
+    fingerprint = []
     for df in frames:
         try:
-            parts.append(df.schema.json())
+            fingerprint.append(df.schema.json())
         except Exception:
-            parts.append("?")
-        if os.environ.get("SMVD_IVF_MEMO_ASSERT") == "1":
-            try:
-                parts.append(str(df.semanticHash()))
-            except Exception:
-                parts.append("?")
-    return "|".join(parts)
+            fingerprint.append("?")
+    return family, stamp, "|".join(fingerprint)
 
 
-def _memo_get_or_build(
-    spark: SparkSession, family: tuple, stamp: str, build, fingerprint: str = ""
+def _get_or_build(
+    spark: SparkSession, key: tuple, build, name: str | None = None,
+    keep=frozenset(),
 ):
-    """One live entry per family: a hit requires the stored content
-    stamp AND input fingerprint to match; a mismatch rebuilds and
-    REPLACES the entry (its blocks are explicitly unpersisted).  The
-    memo is LRU-bounded per session (``_memo_max``): inserting past the
-    cap evicts the least-recently-USED family and unpersists its
-    blocks, so a long-lived notebook session over many corpora cannot
-    pin unbounded checkpoint storage."""
+    """The one place a built index part lives.  With the memo off
+    (``SMVD_IVF_MEMO=0``) every call returns ``build()`` as is.
+    Otherwise a hit needs the stored content stamp AND fingerprint to
+    match and returns the stored value; a miss runs ``build()``, wraps
+    the frame in a lazy checkpoint labelled ``name`` (``None``: the
+    build already pinned its frames), and REPLACES the family's entry
+    (its blocks are explicitly unpersisted).  Inserting past
+    ``_MEMO_MAX`` families evicts the least-recently-USED families and
+    unpersists their blocks, skipping the families in ``keep``: a
+    composing seam passes the parts it has already fetched, whose
+    frames its result still scans, so one call never releases its own
+    parts (the memo may then exceed the cap by the call's part count
+    until a later insert evicts)."""
+    if not _memo_enabled():
+        return build()
+    family, stamp, fingerprint = key
     memo = _memo(spark)
     got = memo.get(family)
     if got is not None and got[0] == stamp and got[1] == fingerprint:
@@ -335,56 +314,66 @@ def _memo_get_or_build(
             "%s — rebuilding", _MEMO_HEAL_COUNT, family[:2],
         )
     val = build()
+    if name is not None:
+        val = materialize(val, name, "lazy")
     # the memo's frames outlive the query that built them
-    hold(*(val if isinstance(val, tuple) else (val,)))
+    hold(*_frames(val))
     if got is not None:
         del memo[family]
         _release_memo_value(got[2])
     memo[family] = (stamp, fingerprint, val)
-    while len(memo) > _memo_max():
-        oldest = next(iter(memo))
-        evicted = memo.pop(oldest)
-        _release_memo_value(evicted[2])
+    for lru in [f for f in memo if f != family and f not in keep]:
+        if len(memo) <= _MEMO_MAX:
+            break
+        _release_memo_value(memo.pop(lru)[2])
     return val
 
 
-def _vec_dtype(df: DataFrame, col: str) -> str:
-    """The vector column's type, memo-key component: two callers may
-    pass the same corpus token with float vs double projections — the
-    assignment math casts to double internally so results are
-    identical today, but the key should not BET on that staying true."""
-    return df.schema[col].dataType.simpleString()
+# --- the seams ---------------------------------------------------------------
 
 
-def _content_stamp(corpus_token: str) -> str:
-    """File-stat component of the cache key (ADVICE r11): an in-place
-    corpus content change that preserves row count (update, or
-    delete+insert — exactly the ``ivf_maintenance`` regime) must MISS
-    the cache, not serve a stale assignment.  By caller convention the
-    token's '|'-pieces lead with the source path (``<sf_dir>/<table>``,
-    parquet suffix elided); every piece that names an existing file
-    (with or without ``.parquet``) or directory contributes its
-    (mtime_ns, size).  Derivation-tag pieces contribute nothing — for a
-    purely derived corpus the row count in the token plus the BASE
-    file's stats remain the content signal.  Only ABSOLUTE paths are
-    stat-probed (r12 adversarial review): a relative piece like
-    'base' or a bare row count must never match a stray cwd file, or
-    the key becomes cwd-dependent and churns spurious rebuilds."""
-    parts: list[str] = []
-    for piece in corpus_token.split("|"):
-        if not os.path.isabs(piece):
-            continue
-        for cand in (piece, piece + ".parquet"):
-            if os.path.isfile(cand):
-                st = os.stat(cand)
-                parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-                break
-            if os.path.isdir(cand):
-                for f in sorted(os.listdir(cand)):
-                    st = os.stat(os.path.join(cand, f))
-                    parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-                break
-    return ";".join(parts)
+def _chain(
+    spark, base, deltas, base_token, delta_tokens,
+    k, n_super, nprobe, id_col, vec_col, shard_threshold,
+) -> DataFrame:
+    """The (id_col, cid) assignment of base UNION deltas with the
+    coarse quantizer frozen at ``base``: the base part unioned with one
+    part per delta, each its own memo entry (module docstring).  Every
+    hier seam is this function: no deltas is ``shared_hier_assignment``,
+    one is ``shared_hier_assignment_delta``."""
+    if len(deltas) != len(delta_tokens):
+        raise ValueError("deltas and delta_tokens must pair 1:1")
+    geometry = (k, n_super, nprobe, id_col, vec_col, shard_threshold)
+    # one seeds frame for every part: seeds derive from the UNSPREAD
+    # base (an id-range filter, partition-independent), and an inline
+    # (memo-off) union then holds one seeds plan, not one per part
+    seeds = ivf_seed_centroids(base, k, id_col=id_col, vec_col=vec_col)
+
+    def assign(df: DataFrame) -> DataFrame:
+        # the assignment scan is row-local given the (broadcast)
+        # centroids — spread a single-file input across the cores
+        return ivf_assign_hier(
+            ensure_parallelism(df),
+            seeds,
+            n_super,
+            nprobe=nprobe,
+            id_col=id_col,
+            vec_col=vec_col,
+            n_centroids=k,
+            shard_threshold=shard_threshold,
+        )
+
+    key = _key("hier", (base_token,), (base,), vec_col, *geometry)
+    acc = _get_or_build(spark, key, lambda: assign(base), "ivf assignment")
+    touched = {key[0]}
+    for d, t in zip(deltas, delta_tokens):
+        key = _key("hier_delta", (base_token, t), (base, d), vec_col, *geometry)
+        part = _get_or_build(
+            spark, key, lambda d=d: assign(d), "ivf assignment", touched
+        )
+        touched.add(key[0])
+        acc = acc.unionByName(part)
+    return acc
 
 
 def shared_hier_assignment(
@@ -399,71 +388,19 @@ def shared_hier_assignment(
     shard_threshold: int = 4096,
 ) -> DataFrame:
     """The two-level coarse assignment, amortized: returns the same
-    (id_col, cid) frame as ``ivf_assign_hier`` — from the corpus-keyed
-    parquet index when ``SMVD_IVF_CACHE_DIR`` is set (building it on
-    first use), else the session-memoized inline build (the first
-    consumer of a key in this session pays the build, later ones reuse
-    the same checkpointed frame; ``SMVD_IVF_MEMO=0`` restores per-call
+    (id_col, cid) frame as ``ivf_assign_hier``, built by the first
+    consumer of its key in this session and reused by later ones (the
+    same checkpointed frame; ``SMVD_IVF_MEMO=0`` restores per-call
     recompute).
 
     ``corpus_token`` must identify the corpus bytes the caller scans
     (e.g. ``f"{sf_dir}/embeddings|{n}"``); derived corpora pass their
     derivation tag so two different projections of the same table
-    never share an index.
-
-    Write discipline: the build is re-run whenever ``_SUCCESS`` is
-    absent (a crashed partial write self-heals via mode=overwrite).
-    Concurrent builders of the SAME key are out of scope — the cache
-    is per-driver (one session's queries run sequentially); a
-    multi-tenant deployment would front this with an atomic-rename or
-    catalog-level lock, which parquet-on-object-store makes cheap."""
-
-    def inline() -> DataFrame:
-        from ..io.sources import ensure_parallelism
-
-        # the assignment scan is row-local given the (broadcast)
-        # centroids — spread a single-file input across the cores
-        # (seeds derive from the UNSPREAD frame: an id-range filter,
-        # partition-independent)
-        return ivf_assign_hier(
-            ensure_parallelism(emb),
-            _seed(emb, k, id_col, vec_col),
-            n_super,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_centroids=k,
-            shard_threshold=shard_threshold,
-        )
-
-    cache = ivf_cache_dir()
-    if cache is None:
-        if not _memo_enabled():
-            return inline()
-        family = (
-            "hier", corpus_token, k, n_super, nprobe, id_col, vec_col,
-            shard_threshold, _vec_dtype(emb, vec_col),
-        )
-        return _memo_get_or_build(
-            spark, family, _content_stamp(corpus_token),
-            lambda: materialize(inline(), "ivf assignment", "lazy"),
-            fingerprint=_frame_fingerprint(emb),
-        )
-    key = hashlib.md5(
-        f"{corpus_token}|k={k}|ns={n_super}|np={nprobe}"
-        f"|id={id_col}|vc={vec_col}|dt={_vec_dtype(emb, vec_col)}"
-        f"|fs={_content_stamp(corpus_token)}".encode()
-    ).hexdigest()[:20]
-    path = os.path.join(cache, f"hier_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _atomic_publish(inline(), path)
-    return spark.read.parquet(path).select(id_col, "cid")
-
-
-def _seed(emb: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
-    from .ann import ivf_seed_centroids
-
-    return ivf_seed_centroids(emb, k, id_col=id_col, vec_col=vec_col)
+    never share an index."""
+    return _chain(
+        spark, emb, [], corpus_token, [], k, n_super, nprobe, id_col,
+        vec_col, shard_threshold,
+    )
 
 
 def shared_hier_assignment_delta(
@@ -487,87 +424,23 @@ def shared_hier_assignment_delta(
 
     At 100 TB the daily reality is +0.1-1% new documents; a full
     rebuild per ingest (the shared_hier_assignment contract — a corpus
-    change is a cache miss) costs the whole n*(1+nprobe)*sqrt(k)
-    assignment again, while THIS path assigns only the delta:
-    marginal cost linear in |delta| (probed by
-    ``tools/ivf_share_probe.py --delta``).  Because the two-level
-    assignment is per-row given fixed centroids, base-part rows are
-    bit-identical to ``shared_hier_assignment(base, ...)`` — the delta
-    path shares its cache key, so a deployment that built the base
-    index pays ONLY the delta assignment here — and the whole result
-    is bit-identical to the inline full assignment of base UNION delta
-    at base geometry (pinned by test_ivf_index; the DuckDB twin is
+    change is a memo miss) costs the whole n*(1+nprobe)*sqrt(k)
+    assignment again, while THIS path assigns only the delta: the base
+    part is ``shared_hier_assignment(base, ...)``'s own memo entry, and
+    the delta part is one more entry keyed by (base_token,
+    delta_token).  The whole result is bit-identical to the inline full
+    assignment of base UNION delta at base geometry (pinned by
+    test_ivf_index; the DuckDB twin is
     ``plans/ivf_sql.py::hier_assign_ctes(src=..., assign_src=...)``).
 
     Re-cluster policy stays with the caller: ``ivf_maintenance``'s
     split/compact flags (per-cell drift) are the trigger for
     scheduling a fresh ``shared_hier_assignment`` build; this operator
     is the cheap steady-state between those events."""
-
-    def assign(df: DataFrame) -> DataFrame:
-        from ..io.sources import ensure_parallelism
-
-        return ivf_assign_hier(
-            ensure_parallelism(df),
-            _seed(base, k, id_col, vec_col),
-            n_super,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_centroids=k,
-            shard_threshold=shard_threshold,
-        )
-
-    cache = ivf_cache_dir()
-    if cache is None:
-        if not _memo_enabled():
-            return assign(base.unionByName(delta))
-        family = (
-            "delta", base_token, delta_token, k, n_super, nprobe, id_col,
-            vec_col, shard_threshold,
-            _vec_dtype(base, vec_col), _vec_dtype(delta, vec_col),
-        )
-        stamp = f"{_content_stamp(base_token)};{_content_stamp(delta_token)}"
-        return _memo_get_or_build(
-            spark, family, stamp,
-            lambda: materialize(
-                assign(base.unionByName(delta)), "ivf assignment", "lazy"
-            ),
-            fingerprint=_frame_fingerprint((base, delta)),
-        )
-    base_part = shared_hier_assignment(
-        spark, base, base_token, k, n_super,
-        nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        shard_threshold=shard_threshold,
+    return _chain(
+        spark, base, [delta], base_token, [delta_token], k, n_super,
+        nprobe, id_col, vec_col, shard_threshold,
     )
-    return base_part.unionByName(
-        _delta_part(
-            spark, cache, assign, base, delta, base_token, delta_token,
-            k, n_super, nprobe, id_col, vec_col,
-        )
-    )
-
-
-def _delta_part(
-    spark, cache, assign, base, delta, base_token, delta_token,
-    k, n_super, nprobe, id_col, vec_col,
-) -> DataFrame:
-    """The delta-only slice of a cached incremental assignment: read it
-    if this (base, delta) pair was already assigned, else assign ONLY
-    the delta (frozen base quantizer — ``assign`` closes over the base
-    seeds) and publish it.  Shared by the single-delta path and the
-    N-cycle chain so a chained cycle's parquet is byte-identical to
-    what the single-delta call would have written."""
-    dkey = hashlib.md5(
-        f"{base_token}|delta|{delta_token}|k={k}|ns={n_super}|np={nprobe}"
-        f"|id={id_col}|vc={vec_col}"
-        f"|dt={_vec_dtype(base, vec_col)};{_vec_dtype(delta, vec_col)}"
-        f"|fs={_content_stamp(base_token)};{_content_stamp(delta_token)}".encode()
-    ).hexdigest()[:20]
-    dpath = os.path.join(cache, f"hier_delta_{dkey}")
-    if not os.path.exists(os.path.join(dpath, "_SUCCESS")):
-        _atomic_publish(assign(delta), dpath)
-    return spark.read.parquet(dpath).select(id_col, "cid")
 
 
 def shared_hier_assignment_chain(
@@ -586,86 +459,22 @@ def shared_hier_assignment_chain(
     """N chained ingest cycles through the incremental seam (VERDICT
     r12 #2): the steady state at 100 TB is not base + ONE delta — it is
     delta-of-delta, cycle after cycle, until the ``maintain`` rebuild
-    trigger fires.  Cycle i's "base" is the UNION of everything already
-    assigned: the materialized base index plus cycles 1..i-1's delta
-    parquets — never re-assigned, only READ.  The quantizer stays
-    frozen at the ORIGINAL base corpus for every cycle (seeds derive
-    from ``base`` only), so chaining N cycles is bit-identical to one
-    full assignment of base ∪ all deltas at base geometry — pinned by
-    test_ivf_index, oracle-twinned by the ``ivf_chain_assign`` catalog
-    query (hier CTE chain, src=base / assign_src=whole-corpus).
+    trigger fires.  The quantizer stays frozen at the ORIGINAL base
+    corpus for every cycle (seeds derive from ``base`` only), so
+    chaining N cycles is bit-identical to one full assignment of base ∪
+    all deltas at base geometry — pinned by test_ivf_index,
+    oracle-twinned by the ``ivf_chain_assign`` catalog query (hier CTE
+    chain, src=base / assign_src=whole-corpus).
 
-    Cost shape (cached mode): calling the chain after cycle N's ingest
-    assigns ONLY ``deltas[-1]`` — cycles 1..N-1's parts hit their
-    parquet keys from the previous calls, the base part hits its
-    build-once key.  Per-cycle cost is therefore flat in |delta|
-    across cycles (probed by ``tools/ivf_share_probe.py
-    --delta-chain``).  Each cycle's part is keyed by (base_token,
-    delta_token_i) — the SAME key the single-delta path would use, so
-    a deployment can mix single-delta and chain calls freely.
-
-    Inline / memo mode: one job over base ∪ all deltas (bit-identical;
-    the memo family keys on the full token tuple)."""
-    if not deltas:
-        return shared_hier_assignment(
-            spark, base, base_token, k, n_super, nprobe=nprobe,
-            id_col=id_col, vec_col=vec_col, shard_threshold=shard_threshold,
-        )
-    if len(deltas) != len(delta_tokens):
-        raise ValueError("deltas and delta_tokens must pair 1:1")
-
-    def assign(df: DataFrame) -> DataFrame:
-        from ..io.sources import ensure_parallelism
-
-        return ivf_assign_hier(
-            ensure_parallelism(df),
-            _seed(base, k, id_col, vec_col),
-            n_super,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            n_centroids=k,
-            shard_threshold=shard_threshold,
-        )
-
-    def union_all() -> DataFrame:
-        acc = base
-        for d in deltas:
-            acc = acc.unionByName(d)
-        return acc
-
-    cache = ivf_cache_dir()
-    if cache is None:
-        if not _memo_enabled():
-            return assign(union_all())
-        family = (
-            "chain", base_token, tuple(delta_tokens), k, n_super, nprobe,
-            id_col, vec_col, shard_threshold,
-            _vec_dtype(base, vec_col),
-            tuple(_vec_dtype(d, vec_col) for d in deltas),
-        )
-        stamp = ";".join(
-            [_content_stamp(base_token)]
-            + [_content_stamp(t) for t in delta_tokens]
-        )
-        return _memo_get_or_build(
-            spark, family, stamp,
-            lambda: materialize(assign(union_all()), "ivf assignment", "lazy"),
-            fingerprint=_frame_fingerprint(tuple([base] + list(deltas))),
-        )
-    acc = shared_hier_assignment(
-        spark, base, base_token, k, n_super,
-        nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        shard_threshold=shard_threshold,
+    Cost shape: each cycle's part is keyed by (base_token,
+    delta_token_i) — the SAME key the single-delta seam uses — so
+    calling the chain after cycle N's ingest assigns ONLY
+    ``deltas[-1]``; the base part and cycles 1..N-1 are memo hits.  An
+    empty ``deltas`` is the base assignment itself."""
+    return _chain(
+        spark, base, deltas, base_token, delta_tokens, k, n_super, nprobe,
+        id_col, vec_col, shard_threshold,
     )
-    for d, t in zip(deltas, delta_tokens):
-        acc = acc.unionByName(
-            _delta_part(
-                spark, cache, assign, base, d, base_token, t,
-                k, n_super, nprobe, id_col, vec_col,
-            )
-        )
-    return acc
 
 
 def shared_pq_parts(
@@ -676,53 +485,24 @@ def shared_pq_parts(
     k: int,
     rounds: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Trained-PQ parts (final assignment + codebooks), amortized the
-    same way as the coarse assignment: the three trained-PQ catalog
-    queries each retrain IDENTICAL codebooks over the same corpus
-    (~10 s each at sf0.1 — the pq_train_inplace Lloyd rounds), and the
-    residual curve trains its own set.  With ``SMVD_IVF_CACHE_DIR``
-    set, the (sub_j, code, cw) codebooks and the (vec_id, sub_j, code)
-    final assignment are parquet-materialized once per (corpus token,
-    geometry); otherwise the session-memoized inline build (same memo
-    contract as ``shared_hier_assignment``) — byte-identical every way
-    (ints and 1e-4-grid doubles round-trip parquet exactly; pinned by
-    test_ivf_index).  Same write discipline as the assignment cache."""
+    """Trained-PQ parts (final (vec_id, sub_j, code) assignment and
+    (sub_j, code, cw) codebooks), amortized the same way as the coarse
+    assignment: the three trained-PQ catalog queries each need
+    IDENTICAL codebooks over the same corpus (~10 s each at sf0.1 — the
+    pq_train_inplace Lloyd rounds), and the residual curve trains its
+    own set.  One memo entry per (corpus token, geometry)."""
     from ..plans.pq_trained import pq_train_inplace
 
-    cache = ivf_cache_dir()
-    if cache is None:
-        if not _memo_enabled():
-            return pq_train_inplace(subs, d, k, rounds)
-        # pq_train_inplace's outputs are already localCheckpoint'ed, so
-        # memoizing the tuple reuses their materialized blocks directly.
-        family = ("pq", corpus_token, d, k, rounds, _vec_dtype(subs, "sv"))
-        return _memo_get_or_build(
-            spark, family, _content_stamp(corpus_token),
-            lambda: pq_train_inplace(subs, d, k, rounds),
-            fingerprint=_frame_fingerprint(subs),
-        )
-    key = hashlib.md5(
-        f"{corpus_token}|pq|d={d}|k={k}|r={rounds}"
-        f"|dt={_vec_dtype(subs, 'sv')}"
-        f"|fs={_content_stamp(corpus_token)}".encode()
-    ).hexdigest()[:20]
-    af_path = os.path.join(cache, f"pq_af_{key}")
-    cb_path = os.path.join(cache, f"pq_cb_{key}")
-    if not (
-        os.path.exists(os.path.join(af_path, "_SUCCESS"))
-        and os.path.exists(os.path.join(cb_path, "_SUCCESS"))
-    ):
-        af, cb = pq_train_inplace(subs, d, k, rounds)
-        # two paths, published independently: a crash between the two
-        # leaves af complete + cb absent, which the existence check
-        # above treats as a miss — the retry's af publish then loses
-        # its rename benignly (deterministic build, identical content)
-        _atomic_publish(af, af_path)
-        _atomic_publish(cb, cb_path)
-    return (
-        spark.read.parquet(af_path).select("vec_id", "sub_j", "code"),
-        spark.read.parquet(cb_path).select("sub_j", "code", "cw"),
+    # pq_train_inplace's outputs are already localCheckpoint'ed, so the
+    # memo holds its tuple as is
+    return _get_or_build(
+        spark, _pq_key(subs, corpus_token, d, k, rounds),
+        lambda: pq_train_inplace(subs, d, k, rounds),
     )
+
+
+def _pq_key(subs: DataFrame, corpus_token: str, d: int, k: int, rounds: int):
+    return _key("pq", (corpus_token,), (subs,), "sv", d, k, rounds)
 
 
 def shared_pq_encode_delta(
@@ -743,18 +523,14 @@ def shared_pq_encode_delta(
     |delta| (a broadcast join against k tiny codewords), not the
     ``rounds``-round Lloyd retrain over the corpus.
 
-    Tiers mirror the coarse-assignment seam: with ``SMVD_IVF_CACHE_DIR``
-    set, the base parts ride ``shared_pq_parts``'s keys (a deployment
-    that trained the base pays ONLY the delta encode, published to its
-    own key via the atomic protocol); otherwise the session memo holds
-    one entry per (base token, delta token, geometry) family; memo-off
-    is one inline job.  Every arm is bit-identical: per-row encoding
-    against fixed codebooks is placement-independent, and the base part
-    equals ``shared_pq_parts(base)``'s assignment exactly — so the
-    DuckDB twin is ``pq_train_cte_body(..., assign_src=<delta rel>)``
-    unioned with the base ``af`` (the ``pq_encode_delta`` catalog
-    query's oracle).  Drift policy stays with the caller: codebooks
-    frozen at base go stale as the distribution moves — the
+    The base parts are ``shared_pq_parts(base)``'s memo entry and the
+    delta codes one more entry per (base token, delta token).  Per-row
+    encoding against fixed codebooks is placement-independent, so the
+    result is bit-identical to encoding base ∪ delta in one pass, and
+    the DuckDB twin is ``pq_train_cte_body(..., assign_src=<delta
+    rel>)`` unioned with the base ``af`` (the ``pq_encode_delta``
+    catalog query's oracle).  Drift policy stays with the caller:
+    codebooks frozen at base go stale as the distribution moves — the
     ``embedding_drift`` monitor is the re-train trigger, exactly as
     ``maintain`` is the re-cluster trigger."""
     from ..plans.pq_trained import pq_assign_codes
@@ -764,39 +540,19 @@ def shared_pq_encode_delta(
     )
 
     def encode() -> DataFrame:
-        from ..io.sources import ensure_parallelism
-
         return pq_assign_codes(ensure_parallelism(delta_subs), cb, d)
 
-    cache = ivf_cache_dir()
-    if cache is None:
-        if not _memo_enabled():
-            return af_base.unionByName(encode()), cb
-        family = (
-            "pqdelta", base_token, delta_token, d, k, rounds,
-            _vec_dtype(delta_subs, "sv"),
-        )
-        stamp = f"{_content_stamp(base_token)};{_content_stamp(delta_token)}"
-        codes = _memo_get_or_build(
-            spark, family, stamp,
-            lambda: materialize(encode(), "pq delta codes", "lazy"),
-            fingerprint=_frame_fingerprint(delta_subs),
-        )
-        return af_base.unionByName(codes), cb
-    dkey = hashlib.md5(
-        f"{base_token}|pqdelta|{delta_token}|d={d}|k={k}|r={rounds}"
-        f"|dt={_vec_dtype(delta_subs, 'sv')}"
-        f"|fs={_content_stamp(base_token)};{_content_stamp(delta_token)}".encode()
-    ).hexdigest()[:20]
-    dpath = os.path.join(cache, f"pq_delta_{dkey}")
-    if not os.path.exists(os.path.join(dpath, "_SUCCESS")):
-        _atomic_publish(encode(), dpath)
-    return (
-        af_base.unionByName(
-            spark.read.parquet(dpath).select("vec_id", "sub_j", "code")
+    codes = _get_or_build(
+        spark,
+        _key(
+            "pqdelta", (base_token, delta_token), (base_subs, delta_subs),
+            "sv", d, k, rounds,
         ),
-        cb,
+        encode, "pq delta codes",
+        # the base parts' family, fetched above: its frames stay live
+        {_pq_key(base_subs, base_token, d, k, rounds)[0]},
     )
+    return af_base.unionByName(codes), cb
 
 
 # --- maintenance policy: when does the delta path stop being enough? -------
@@ -894,8 +650,8 @@ def maintain(
 
     * ``assignment`` — (id_col, cid) for base UNION delta with the
       coarse quantizer frozen at the base corpus
-      (``shared_hier_assignment_delta``: cached mode assigns ONLY the
-      delta; inline is one job, bit-identical).
+      (``shared_hier_assignment_chain``: the base part and every delta
+      seen before are memo hits, only a new delta is assigned).
     * ``live_assignment`` — ``assignment`` minus the delete log (the
       ``exclude_tombstones`` anti-join): THE frame serving shortlists
       must route through (VERDICT r12 #1) — a deleted vector must stop
@@ -916,8 +672,8 @@ def maintain(
       ivf_maintenance oracle convention is over non-empty cells.
       Below the threshold the steady state is this delta path; past
       it the caller schedules a fresh ``shared_hier_assignment``
-      build (with the disk cache on, the changed corpus stamp makes
-      that build a natural cache miss).
+      build (the changed corpus stamp makes that build a natural memo
+      miss).
 
     **Identity contract (ADVICE r12)**: ``id_col`` values must be
     UNIQUE across base ∪ delta.  The tombstone tag joins on id over
@@ -933,7 +689,7 @@ def maintain(
     N-cycle form (r13): ``delta`` / ``delta_token`` may be LISTS — the
     chained steady state ``shared_hier_assignment_chain`` models.  The
     assignment then covers base ∪ all cycles (quantizer frozen at the
-    original base; cached mode assigns only the newest batch), and the
+    original base; only the newest batch is assigned), and the
     occupancy convention follows the cycle semantics: cycles 1..N-1
     are part of the ESTABLISHED index (``live``), only the NEWEST
     batch counts ``new`` — so split flags measure THIS cycle's ingest
@@ -953,21 +709,14 @@ def maintain(
     )
     if len(deltas) != len(delta_tokens):
         raise ValueError("delta and delta_token must pair 1:1")
-    if len(deltas) == 1:
-        assignment = shared_hier_assignment_delta(
-            spark, base, deltas[0], base_token, delta_tokens[0], k, n_super,
-            nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-            shard_threshold=shard_threshold,
-        )
-    else:
-        # includes deltas == [] — the no-ingest accounting cycle (the
-        # chain seam returns the base-only assignment; nothing counts
-        # 'new', tombstone/compact accounting still runs)
-        assignment = shared_hier_assignment_chain(
-            spark, base, deltas, base_token, delta_tokens, k, n_super,
-            nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-            shard_threshold=shard_threshold,
-        )
+    # deltas == [] is the no-ingest accounting cycle: the base-only
+    # assignment, nothing counts 'new', tombstone/compact accounting
+    # still runs
+    assignment = shared_hier_assignment_chain(
+        spark, base, deltas, base_token, delta_tokens, k, n_super,
+        nprobe=nprobe, id_col=id_col, vec_col=vec_col,
+        shard_threshold=shard_threshold,
+    )
     live_assignment = exclude_tombstones(assignment, tombstones, id_col)
     # membership sides are deduplicated (an at-least-once delete log
     # repeats ids) and NOT broadcast-hinted: both are real table

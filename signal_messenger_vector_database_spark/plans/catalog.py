@@ -45,48 +45,76 @@ _MODULES = (
 # Round-17 verification window — GENERATED by tools/window_rotate.py:
 #
 #   python tools/window_rotate.py \
-#       --changed=stream_ingest_index,pq_operating_point,\
+#       --changed=ivf_delta_assign,ivf_chain_assign,topk_ivf_tombstone,\
+#                 topk_ivf_lifecycle,pq_encode_delta,pq_operating_point,\
 #                 ivf_pq_operating_curve,ivf_pq_clustered_curve,\
-#                 ivf_recall_clustered,topk_ivf_pq_trained,\
+#                 topk_ivf_pq_trained,bitext_mining_eval,\
+#                 filtered_recall_curve,knn_graph_ivf,knn_graph_uncapped,\
+#                 bitext_margin_pairs,semdedup,semdedup_uncapped,\
+#                 semdedup_capped,ivf_maintenance,topk_ivf_filtered,\
+#                 maxsim_retrieve,topk_ivf_sq8,topk_ivf_binary,\
+#                 topk_ivf_cascade,topk_ivf_batch,quant_recall_matrix,\
+#                 ann_recall_at_k,hard_negative_mining,ann_ivf_hier,\
+#                 stream_lsh_dedup,assoc_rules,ccnet_buckets,\
+#                 dup_span_removal,centroid_outlier_prune,csv_roundtrip,\
+#                 jsonl_roundtrip,orc_roundtrip,schema_evolution,\
+#                 stream_ingest_index,ivf_recall_clustered,\
 #                 pq_encode_trained,pq_recall_trained,semdedup_trained,\
-#                 pq_encode_delta,topk_l2,kmeans_fit_assign,kmeans_assign,\
-#                 kmeans_lloyd3,pq_encode,topk_pq_adc,topk_ivf_pq,\
-#                 topk_pq_rerank,pq_recall_at_k,pagerank3,\
-#                 pagerank3_shuffle,triangle_count,suppression_filter,\
-#                 curation_attrition,stream_ivf_compact,\
-#                 dim_ablation_recall,bitext_mining_eval,bfs_khops,\
-#                 bpe_train,filtered_recall_curve,dsir_weights,\
-#                 dup_substring_spans,boilerplate_strip,curation_pipeline,\
-#                 stream_ivf_maintain,knn_graph_ivf,knn_graph_uncapped,\
-#                 bigram_logprob,collocations_pmi,neardup_clusters,\
-#                 minhash_lsh_pairs,minhash_jaccard_estimate,\
-#                 sorted_neighborhood,shingle_containment,\
-#                 dedup_quality_keep,bitext_margin_pairs,\
-#                 stream_stream_join,stream_static_join,stream_sessionize,\
-#                 stream_sketch_quantiles
+#                 topk_l2,kmeans_fit_assign,kmeans_assign,kmeans_lloyd3,\
+#                 pq_encode,topk_pq_adc,topk_ivf_pq,topk_pq_rerank
 #
 # Input state (CORRECTNESS_r01-r16 latest-round histogram over paired
 # entries): r10:9 r11:50 r12:50 r13:50 r14:47 r16:50.
-# Slots: first the 19 queries whose build calls code the distance-kernel
-# change edited (traced per catalog query at the parent: every caller of
-# the squared-L2 folds and unrolled renderings that now come from
-# functions/vector.py; the overdue bench retiree topk_ivf_pq is one of
-# them), then pagerank3, pagerank3_shuffle and triangle_count (builders
-# edited by the materialize-and-release change, no driver row since),
-# then the previous window's unverified entries in its order, cut at
-# 50.  That is 62 unverified names for 50 slots: the previous window's
-# last 12 wait (ROADMAP "Open items").
+# Slots: first the 28 queries whose build calls an IVF/PQ index seam
+# (operators/ivf_index.py, edited when the session memo became the only
+# tier; traced per catalog query over all 256 builds, the delta and
+# chain consumers first), then the 12 names the previous window left
+# out, then the previous window's unverified entries in its order, cut
+# at 50.  That is 77 unverified names for 50 slots: the last 27 wait
+# (ROADMAP "Window overflow").
 _WINDOW = [
-    "stream_ingest_index",
+    "ivf_delta_assign",
+    "ivf_chain_assign",
+    "topk_ivf_tombstone",
+    "topk_ivf_lifecycle",
+    "pq_encode_delta",
     "pq_operating_point",
     "ivf_pq_operating_curve",
     "ivf_pq_clustered_curve",
-    "ivf_recall_clustered",
     "topk_ivf_pq_trained",
+    "bitext_mining_eval",
+    "filtered_recall_curve",
+    "knn_graph_ivf",
+    "knn_graph_uncapped",
+    "bitext_margin_pairs",
+    "semdedup",
+    "semdedup_uncapped",
+    "semdedup_capped",
+    "ivf_maintenance",
+    "topk_ivf_filtered",
+    "maxsim_retrieve",
+    "topk_ivf_sq8",
+    "topk_ivf_binary",
+    "topk_ivf_cascade",
+    "topk_ivf_batch",
+    "quant_recall_matrix",
+    "ann_recall_at_k",
+    "hard_negative_mining",
+    "ann_ivf_hier",
+    "stream_lsh_dedup",
+    "assoc_rules",
+    "ccnet_buckets",
+    "dup_span_removal",
+    "centroid_outlier_prune",
+    "csv_roundtrip",
+    "jsonl_roundtrip",
+    "orc_roundtrip",
+    "schema_evolution",
+    "stream_ingest_index",
+    "ivf_recall_clustered",
     "pq_encode_trained",
     "pq_recall_trained",
     "semdedup_trained",
-    "pq_encode_delta",
     "topk_l2",
     "kmeans_fit_assign",
     "kmeans_assign",
@@ -95,38 +123,6 @@ _WINDOW = [
     "topk_pq_adc",
     "topk_ivf_pq",
     "topk_pq_rerank",
-    "pq_recall_at_k",
-    "pagerank3",
-    "pagerank3_shuffle",
-    "triangle_count",
-    "suppression_filter",
-    "curation_attrition",
-    "stream_ivf_compact",
-    "dim_ablation_recall",
-    "bitext_mining_eval",
-    "bfs_khops",
-    "bpe_train",
-    "filtered_recall_curve",
-    "dsir_weights",
-    "dup_substring_spans",
-    "boilerplate_strip",
-    "curation_pipeline",
-    "stream_ivf_maintain",
-    "knn_graph_ivf",
-    "knn_graph_uncapped",
-    "bigram_logprob",
-    "collocations_pmi",
-    "neardup_clusters",
-    "minhash_lsh_pairs",
-    "minhash_jaccard_estimate",
-    "sorted_neighborhood",
-    "shingle_containment",
-    "dedup_quality_keep",
-    "bitext_margin_pairs",
-    "stream_stream_join",
-    "stream_static_join",
-    "stream_sessionize",
-    "stream_sketch_quantiles",
 ]
 
 

@@ -231,8 +231,8 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lineage cut: the assignment feeds the residual table AND the
     # candidate join — without it the two-level build runs per branch.
-    # Routed through the r11 build-once index seam (inline when
-    # SMVD_IVF_CACHE_DIR is unset).
+    # Routed through the r11 build-once index seam (the session memo's
+    # part for this corpus).
     from ..operators.ivf_index import shared_hier_assignment
 
     assign = shared_hier_assignment(

@@ -139,8 +139,7 @@ def _op_trained_parts(spark: SparkSession, sf_dir: str):
 
     subs = materialize(ensure_parallelism(_op_sub_rows(emb)), "pq subvectors", "lazy")
     # routed through the r11 build-once seam: the three trained-PQ
-    # queries retrain IDENTICAL codebooks (inline when
-    # SMVD_IVF_CACHE_DIR is unset — byte-identical)
+    # queries share IDENTICAL codebooks, trained once per session
     from ..io.sources import parquet_row_count
     from ..operators.ivf_index import shared_pq_parts
 
@@ -1017,10 +1016,9 @@ SPECS["ivf_pq_operating_curve"] = QuerySpec(
 # batch costs one broadcast-join encode pass over |delta| subvectors,
 # never a retrain; staleness policy belongs to the embedding_drift
 # monitor, exactly as maintain owns the re-cluster trigger.  Routed
-# through ivf_index.shared_pq_encode_delta (cache: base parts ride
-# shared_pq_parts' keys, only the delta encode is new; memo: one
-# family; inline: one job — bit-identical everywhere, pinned by
-# test_ivf_index).  Oracle = pq_train_cte_body with assign_src=dsubs:
+# through ivf_index.shared_pq_encode_delta (the base parts are
+# shared_pq_parts' memo entry, only the delta encode is new —
+# bit-identical to the inline job, pinned by test_ivf_index).  Oracle = pq_train_cte_body with assign_src=dsubs:
 # train on base subs, final-assign the delta subs — drift between the
 # operator and the trainer's own CTE chain is structurally impossible.
 

@@ -1524,7 +1524,7 @@ def _ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n*k = n^2/125 quadratic the wave-11 probe surfaced (16x point
     # 4.0x); hier is n*(1+nprobe)*sqrt(k), oracle-replayed via the
     # shared CTE chain (plans/ivf_sql.py).  Routed through the r11
-    # build-once index seam (inline when SMVD_IVF_CACHE_DIR is unset).
+    # build-once index seam (the session memo's part for this corpus).
     from ..operators.ivf_index import shared_hier_assignment
 
     assign = shared_hier_assignment(
@@ -1599,10 +1599,9 @@ SPECS["ivf_maintenance"] = QuerySpec(
 # geometry; the oracle replays it with the shared CTE chain's
 # (src=base, assign_src=delta) parameterization, so drift between the
 # delta operator and the full chain is structurally impossible.  Routed
-# through shared_hier_assignment_delta: with SMVD_IVF_CACHE_DIR set the
-# base index is read (or built once) and ONLY the delta is assigned —
-# the +1/64-corpus probe (tools/ivf_share_probe.py --delta) measures
-# that marginal cost; inline (driver/oracle runs) it is one job.
+# through shared_hier_assignment_delta: the base part is the base
+# seam's memo entry (built once) and ONLY the delta is assigned — the
+# +1/64-corpus probe (SCALING.md wave 21) measured that marginal cost.
 
 
 def _ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1673,8 +1672,8 @@ SPECS["ivf_delta_assign"] = QuerySpec(
 # N-cycle reality: the incoming region (newest max(50, n/10) ids — the
 # ivf_maintenance convention) arrives as THREE successive ingest
 # batches, each assigned against the quantizer frozen at the original
-# base.  Cycle i's base is the materialized union of base + cycles
-# 1..i-1 (cached mode reads them, never re-assigns) — the
+# base.  Cycle i's base is the union of the memo parts of base +
+# cycles 1..i-1 (reused, never re-assigned) — the
 # shared_hier_assignment_chain seam.  Because per-row assignment is
 # independent given fixed centroids, the 3-cycle chain is bit-identical
 # to one full assignment at base geometry, which is exactly what the

@@ -1,7 +1,8 @@
-"""Tests for the build-once shared IVF assignment
-(operators/ivf_index.py): cache-path results must be bit-identical to
-the inline path, the cache must be corpus- and geometry-keyed, and the
-second consumer must READ instead of rebuilding."""
+"""Tests for the build-once shared IVF/PQ index parts
+(operators/ivf_index.py): memoized results must be bit-identical to the
+inline path, the memo must be corpus-, content- and geometry-keyed, the
+second consumer must READ instead of rebuilding, and the delta and
+chain seams must assign only the deltas they have not seen."""
 
 from __future__ import annotations
 
@@ -27,70 +28,31 @@ def _load(spark):
     return load_table(spark, SF, "embeddings"), n, k, hier_super_count(k)
 
 
-def test_cached_assignment_bit_identical_to_inline(spark, tmp_path, monkeypatch):
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
+def test_second_consumer_reads_not_rebuilds(spark, monkeypatch):
+    """After the first consumer's action, a second call must come back as
+    the memo's materialized frame: the same handle, checkpointed, whose
+    plan is a plain scan of its blocks (no groupBy/aggregate or join
+    from the two-level assignment)."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
 
+    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     token = f"{SF}/embeddings|{n}"
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
-    inline = shared_hier_assignment(spark, emb, token, k, ns)
-    inline_rows = {r.vec_id: r.cid for r in inline.collect()}
-
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    cached = shared_hier_assignment(spark, emb, token, k, ns)
-    cached_rows = {r.vec_id: r.cid for r in cached.collect()}
-
-    assert inline_rows == cached_rows
-    assert len(inline_rows) == n
-    # schema parity: same column names and integral types
-    assert cached.columns == ["vec_id", "cid"]
-
-
-def test_cache_is_corpus_and_geometry_keyed(spark, tmp_path, monkeypatch):
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
-
-    emb, n, k, ns = _load(spark)
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-
-    shared_hier_assignment(spark, emb, f"{SF}/embeddings|{n}", k, ns).count()
-    dirs = set(os.listdir(tmp_path))
-    assert len(dirs) == 1
-
-    # a different corpus token or geometry must MISS to a fresh build,
-    # never read the stale index
-    shared_hier_assignment(spark, emb, f"{SF}/embeddings|{n + 1}", k, ns).count()
-    shared_hier_assignment(spark, emb, f"{SF}/embeddings|{n}", k, ns + 1).count()
-    assert len(set(os.listdir(tmp_path))) == 3
-
-
-def test_second_consumer_reads_not_rebuilds(spark, tmp_path, monkeypatch):
-    """After the first build, a second call must come back as a plain
-    parquet scan (no groupBy/aggregate stages from the two-level
-    assignment in the plan)."""
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
-
-    emb, n, k, ns = _load(spark)
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    token = f"{SF}/embeddings|{n}"
-
-    shared_hier_assignment(spark, emb, token, k, ns).count()
-    second = shared_hier_assignment(spark, emb, token, k, ns)
+    first = ivf_index.shared_hier_assignment(spark, emb, token, k, ns)
+    first.count()
+    second = ivf_index.shared_hier_assignment(spark, emb, token, k, ns)
+    assert second is first
+    assert all(j.isCheckpointed() for j in ivf_index._memo_frame_jrdds(second))
     plan = second._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" not in plan and "Join" not in plan
-    assert "Scan parquet" in plan or "FileScan" in plan
+    assert "Scan ExistingRDD" in plan
 
 
-def test_cached_pq_parts_bit_identical_to_inline(spark, tmp_path, monkeypatch):
-    """The trained-PQ cache must return the identical final assignment
-    and codebooks as the inline Lloyd build (ints and 1e-4-grid doubles
-    round-trip parquet exactly)."""
+def test_cached_pq_parts_bit_identical_to_inline(spark, monkeypatch):
+    """The memoized trained-PQ parts must be the identical final
+    assignment and codebooks as the inline Lloyd build, and a second
+    call must hand back the same materialized frames, never retrain."""
     from pyspark.sql import functions as F
 
     from signal_messenger_vector_database_spark.io.sources import load_table
@@ -107,107 +69,86 @@ def test_cached_pq_parts_bit_identical_to_inline(spark, tmp_path, monkeypatch):
     )
     subs = _op_sub_rows(emb).localCheckpoint(eager=False)
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
+    monkeypatch.setenv("SMVD_IVF_MEMO", "0")
     af_i, cb_i = shared_pq_parts(spark, subs, "t", _OPD, 16, 1)
     af_inline = {(r.vec_id, r.sub_j): r.code for r in af_i.collect()}
     cb_inline = {(r.sub_j, r.code): list(r.cw) for r in cb_i.collect()}
 
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
+    monkeypatch.delenv("SMVD_IVF_MEMO")
     af_c, cb_c = shared_pq_parts(spark, subs, "t", _OPD, 16, 1)
     assert {(r.vec_id, r.sub_j): r.code for r in af_c.collect()} == af_inline
     assert {(r.sub_j, r.code): list(r.cw) for r in cb_c.collect()} == cb_inline
     # second call reads, never retrains
-    af_c2, _ = shared_pq_parts(spark, subs, "t", _OPD, 16, 1)
+    af_c2, cb_c2 = shared_pq_parts(spark, subs, "t", _OPD, 16, 1)
+    assert af_c2 is af_c and cb_c2 is cb_c
     plan = af_c2._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" not in plan
-    assert "Scan parquet" in plan or "FileScan" in plan
+    assert "Scan ExistingRDD" in plan
 
 
-def test_content_change_misses_cache(spark, tmp_path, monkeypatch):
-    """ADVICE r11 (medium): an in-place corpus content change that
-    preserves row count must MISS the cache (file mtime/size stamp),
-    never serve a stale assignment."""
-    import shutil
-
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
-
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    src = corpus / "embeddings.parquet"
-    shutil.copyfile(f"{SF}/embeddings.parquet", src)
-    cache = tmp_path / "cache"
-    cache.mkdir()
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(cache))
-
-    emb, n, k, ns = _load(spark)
-    token = f"{corpus}/embeddings|{n}"
-    shared_hier_assignment(spark, emb, token, k, ns).count()
-    assert len(os.listdir(cache)) == 1
-
-    # same path, same row count, same byte size — later mtime (an
-    # in-place update): the key must change
-    os.utime(src, ns=(os.stat(src).st_mtime_ns + 10**9,) * 2)
-    shared_hier_assignment(spark, emb, token, k, ns).count()
-    assert len(os.listdir(cache)) == 2
-
-
-def test_delta_assignment_bit_identical_to_inline_full(
-    spark, tmp_path, monkeypatch
-):
-    """shared_hier_assignment_delta parity (VERDICT r11 #2): the cached
-    path (base index read/built once + delta-only assignment appended)
-    must be bit-identical to the inline full assignment of base UNION
-    delta at base geometry — and the base part must ride the SAME cache
-    entry as shared_hier_assignment(base)."""
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-        shared_hier_assignment_delta,
-    )
-
-    emb, n, k, ns = _load(spark)
+def _split(emb, n):
+    """Base / incoming-batch split: the newest max(50, n/10) ids are the
+    delta (the ivf_delta_assign convention)."""
     cut = n - max(50, n // 10)
     base = emb.filter(F.col("vec_id") < cut)
-    delta = emb.filter(F.col("vec_id") >= cut)
-    bt, dt = f"{SF}/embeddings|base|{cut}", f"{SF}/embeddings|delta|{n - cut}"
-
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
-    inline = shared_hier_assignment_delta(spark, base, delta, bt, dt, k, ns)
-    inline_rows = {r.vec_id: r.cid for r in inline.collect()}
-    assert len(inline_rows) == n
-
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    # pre-build the base index the way a plain consumer would
-    shared_hier_assignment(spark, base, bt, k, ns).count()
-    n_entries = len(os.listdir(tmp_path))
-    cached = shared_hier_assignment_delta(spark, base, delta, bt, dt, k, ns)
-    cached_rows = {r.vec_id: r.cid for r in cached.collect()}
-    assert cached_rows == inline_rows
-    # exactly ONE new cache entry (the delta) — the base part was reused
-    assert len(os.listdir(tmp_path)) == n_entries + 1
-    names = os.listdir(tmp_path)
-    assert sum(1 for x in names if x.startswith("hier_delta_")) == 1
+    return cut, base, emb.filter(F.col("vec_id") >= cut)
 
 
-def test_delta_assignment_second_read_is_scan_only(
-    spark, tmp_path, monkeypatch
-):
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment_delta,
-    )
+def test_delta_seam_assigns_only_the_delta(spark, monkeypatch):
+    """With the base index built, the delta seam adds exactly ONE memo
+    family, and that family's frame holds only the delta's rows — the
+    base part is the base seam's own entry, never re-assigned — while
+    the composed result equals the memo-off full assignment of base
+    UNION delta (one job at base geometry: the seeds are the k lowest
+    ids, which live in the base)."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
 
     emb, n, k, ns = _load(spark)
-    cut = n - max(50, n // 10)
-    base = emb.filter(F.col("vec_id") < cut)
-    delta = emb.filter(F.col("vec_id") >= cut)
+    cut, base, delta = _split(emb, n)
+    bt = f"{SF}/embeddings|only-base|{cut}"
+    dt = f"{SF}/embeddings|only-delta|{n - cut}"
+
+    monkeypatch.setenv("SMVD_IVF_MEMO", "0")
+    want = {
+        r.vec_id: r.cid
+        for r in ivf_index.shared_hier_assignment(
+            spark, emb, f"{SF}/embeddings|only-full|{n}", k, ns
+        ).collect()
+    }
+    assert len(want) == n
+
+    monkeypatch.delenv("SMVD_IVF_MEMO")
+    base_part = ivf_index.shared_hier_assignment(spark, base, bt, k, ns)
+    memo = ivf_index._SESSION_MEMO[spark]
+    before = set(memo)
+    got = ivf_index.shared_hier_assignment_delta(
+        spark, base, delta, bt, dt, k, ns
+    )
+    (fam,) = [f for f in memo if f not in before]
+    part = memo[fam][2]
+    assert {r.vec_id for r in part.collect()} == set(range(cut, n))
+    assert part.count() == n - cut
+    assert {r.vec_id: r.cid for r in got.collect()} == want
+    base_fam = next(f for f in memo if f[0] == "hier" and f[1] == bt)
+    assert memo[base_fam][2] is base_part
+
+
+def test_delta_assignment_second_read_is_scan_only(spark, monkeypatch):
+    """A repeat delta call after the first action reads the memo parts:
+    its plan is a union of block scans with no assignment work left."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
+
+    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
+    emb, n, k, ns = _load(spark)
+    cut, base, delta = _split(emb, n)
     bt, dt = f"{SF}/embeddings|base|{cut}", f"{SF}/embeddings|delta|{n - cut}"
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    shared_hier_assignment_delta(spark, base, delta, bt, dt, k, ns).count()
-    second = shared_hier_assignment_delta(spark, base, delta, bt, dt, k, ns)
+    delta_seam = ivf_index.shared_hier_assignment_delta
+    delta_seam(spark, base, delta, bt, dt, k, ns).count()
+    second = delta_seam(spark, base, delta, bt, dt, k, ns)
     plan = second._jdf.queryExecution().executedPlan().toString()
     assert "Aggregate" not in plan and "Join" not in plan
-    assert "Scan parquet" in plan or "FileScan" in plan
+    assert plan.count("Scan ExistingRDD") == 2
+    assert {r.vec_id for r in second.collect()} == set(range(n))
 
 
 def test_delta_assign_query_degenerate_small_corpus(spark, tmp_path):
@@ -255,22 +196,22 @@ def test_delta_assign_query_degenerate_small_corpus(spark, tmp_path):
 
 
 def test_session_memo_reuses_and_is_bit_identical(spark, monkeypatch):
-    """r12 session-memo tier: with no cache dir, the second consumer of
-    the same (token, geometry) key in one session gets the SAME
-    checkpointed frame (no retrain), and SMVD_IVF_MEMO=0 restores the
-    per-call recompute the scaling probes measure."""
+    """r12 session memo: the second consumer of the same (token,
+    geometry) key in one session gets the SAME checkpointed frame (no
+    retrain), and SMVD_IVF_MEMO=0 restores the per-call recompute the
+    scaling probes measure."""
     from signal_messenger_vector_database_spark.operators.ivf_index import (
         shared_hier_assignment,
     )
 
     emb, n, k, ns = _load(spark)
     token = f"{SF}/embeddings|memo-test|{n}"
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
 
     first = shared_hier_assignment(spark, emb, token, k, ns)
     second = shared_hier_assignment(spark, emb, token, k, ns)
     assert second is first  # memo hit: the very same frame
+    assert second.columns == ["vec_id", "cid"]
     rows = {r.vec_id: r.cid for r in second.collect()}
     assert len(rows) == n
 
@@ -292,7 +233,6 @@ def test_session_memo_is_key_and_content_sensitive(spark, tmp_path, monkeypatch)
         shared_hier_assignment,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     t1 = f"{SF}/embeddings|memo-key|{n}"
@@ -336,7 +276,6 @@ def test_session_memo_purges_stopped_sessions(spark, monkeypatch):
 
     fake = _FakeSession()
     ivf_index._SESSION_MEMO[fake] = {("hier", "zombie"): ("stamp", object())}
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     shared_hier_assignment_call = ivf_index.shared_hier_assignment
@@ -358,7 +297,6 @@ def test_session_memo_pq_parts(spark, monkeypatch):
         _op_sub_rows,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb = load_table(spark, SF, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -386,7 +324,6 @@ def test_maintain_policy_composes_delta_and_flags(spark, monkeypatch):
         shared_hier_assignment_delta,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
@@ -462,7 +399,7 @@ def test_maintain_policy_composes_delta_and_flags(spark, monkeypatch):
     )
 
 
-def test_maintain_without_tombstones(spark, monkeypatch):
+def test_maintain_without_tombstones(spark):
     """No delete log: n_tomb must be 0 everywhere and live+new == n."""
     from pyspark.sql import functions as F
 
@@ -470,7 +407,6 @@ def test_maintain_without_tombstones(spark, monkeypatch):
         maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
     out = maintain(
@@ -487,7 +423,7 @@ def test_maintain_without_tombstones(spark, monkeypatch):
     assert sum(r.n_live + r.n_new for r in rows) == n
 
 
-def test_maintain_empty_corpus_decision_is_total(spark, monkeypatch):
+def test_maintain_empty_corpus_decision_is_total(spark):
     """A cycle before first ingest (empty base+delta) must yield a
     TOTAL decision row — (k, 0, False), never NULLs (the SUM over an
     empty cells frame is NULL without the coalesce; r12 code review)."""
@@ -495,7 +431,6 @@ def test_maintain_empty_corpus_decision_is_total(spark, monkeypatch):
         maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     out = maintain(spark, empty, empty, "e|base|0", "e|delta|0", 1, 1)
     row = out["decision"].collect()
@@ -507,70 +442,19 @@ def test_maintain_empty_corpus_decision_is_total(spark, monkeypatch):
     assert out["cells"].count() == 0
 
 
-# --- r13: atomic cache publish, memo LRU bound, fingerprint guard ----------
+# --- r13: memo LRU bound, self-heal, fingerprint guard ---------------------
 
 
-def test_crashed_partial_write_self_heals(spark, tmp_path, monkeypatch):
-    """VERDICT r12 #5: a crashed builder's leftovers — a destination
-    dir WITHOUT _SUCCESS plus a stale temp dir — must not wedge the
-    cache: the next builder publishes a complete index over them."""
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
+def test_memo_is_the_only_switch():
+    """The index tier has one switch: the module reads no environment
+    variable but SMVD_IVF_MEMO."""
+    import re
 
-    emb, n, k, ns = _load(spark)
-    token = f"{SF}/embeddings|heal|{n}"
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
-    inline_rows = {
-        r.vec_id: r.cid
-        for r in shared_hier_assignment(spark, emb, token, k, ns).collect()
-    }
-
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    # build once to learn the key'd path name, then vandalize it
-    shared_hier_assignment(spark, emb, token, k, ns).count()
-    (path,) = [tmp_path / d for d in os.listdir(tmp_path)]
-    (path / "_SUCCESS").unlink()          # crashed write: no marker
-    stale = tmp_path / (path.name + ".__tmp_999_deadbeef")
-    stale.mkdir()
-    (stale / "part-00000.parquet").write_bytes(b"garbage")
-
-    healed = shared_hier_assignment(spark, emb, token, k, ns)
-    assert {r.vec_id: r.cid for r in healed.collect()} == inline_rows
-    assert (path / "_SUCCESS").exists()
-
-
-def test_publish_race_loser_reads_winners_index(spark, tmp_path, monkeypatch):
-    """Two concurrent builders of the same key: the rename loser must
-    discard its temp copy and serve the winner's COMPLETE index."""
     from signal_messenger_vector_database_spark.operators import ivf_index
 
-    emb, n, k, ns = _load(spark)
-    token = f"{SF}/embeddings|race|{n}"
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-
-    real_rename = os.rename
-    published = {}
-
-    def racing_rename(src, dst):
-        # simulate the OTHER builder winning just before our rename:
-        # publish a complete copy at dst first, then let ours collide
-        if "__tmp_" in src and not os.path.exists(dst):
-            import shutil
-
-            shutil.copytree(src, dst)
-            published["winner"] = dst
-        return real_rename(src, dst)  # raises OSError: dst exists
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    loser = ivf_index.shared_hier_assignment(spark, emb, token, k, ns)
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    assert "winner" in published
-    rows = {r.vec_id: r.cid for r in loser.collect()}
-    assert len(rows) == n
-    # no temp litter became the served index; destination is complete
-    assert os.path.exists(os.path.join(published["winner"], "_SUCCESS"))
+    src = open(ivf_index.__file__).read()
+    assert re.findall(r"\benviron\b|\bgetenv\b", src) == ["environ"]
+    assert re.findall(r"environ\.get\(\"(\w+)\"", src) == ["SMVD_IVF_MEMO"]
 
 
 def test_memo_lru_bounds_families_and_unpersists(spark, monkeypatch):
@@ -579,9 +463,8 @@ def test_memo_lru_bounds_families_and_unpersists(spark, monkeypatch):
     (observable via the context's RDD storage info)."""
     from signal_messenger_vector_database_spark.operators import ivf_index
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
-    monkeypatch.setenv("SMVD_IVF_MEMO_MAX", "2")
+    monkeypatch.setattr(ivf_index, "_MEMO_MAX", 2)
     # isolate: purge this session's memo so earlier tests' families
     # don't occupy slots
     ivf_index._SESSION_MEMO.pop(spark, None)
@@ -596,22 +479,28 @@ def test_memo_lru_bounds_families_and_unpersists(spark, monkeypatch):
         return f
 
     def stored_rdds():
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    def rdd_ids(f):
+        return {j.id() for j in ivf_index._memo_frame_jrdds(f)}
 
     a, b = build("a"), build("b")
-    base_rdds = stored_rdds()
+    assert rdd_ids(a) <= stored_rdds()
     memo = ivf_index._SESSION_MEMO[spark]
     assert len(memo) == 2
 
-    build("c")  # third family: cap 2 -> family 'a' evicted
+    c = build("c")  # third family: cap 2 -> family 'a' evicted
     assert len(ivf_index._SESSION_MEMO[spark]) == 2
     tokens = [fam[1] for fam in ivf_index._SESSION_MEMO[spark]]
     assert not any("lru-a" in t for t in tokens)
     assert any("lru-b" in t for t in tokens)
     assert any("lru-c" in t for t in tokens)
-    # a's blocks were EXPLICITLY unpersisted, not just dereferenced:
-    # c added one stored RDD, a's one is gone -> count is unchanged
-    assert stored_rdds() == base_rdds
+    # a's blocks were EXPLICITLY unpersisted, not just dereferenced (the
+    # test still holds `a`, so no GC cleanup can have freed them); ids,
+    # not a count, because the context cleaner may free earlier tests'
+    # dropped frames at any moment
+    assert rdd_ids(a) and not rdd_ids(a) & stored_rdds()
+    assert rdd_ids(b) | rdd_ids(c) <= stored_rdds()
 
     # LRU, not FIFO: touching 'b' then inserting 'd' evicts 'c'
     ivf_index.shared_hier_assignment(
@@ -621,6 +510,43 @@ def test_memo_lru_bounds_families_and_unpersists(spark, monkeypatch):
     tokens = [fam[1] for fam in ivf_index._SESSION_MEMO[spark]]
     assert any("lru-b" in t for t in tokens)
     assert not any("lru-c" in t for t in tokens)
+
+
+def test_memo_lru_never_evicts_a_calls_own_parts(spark, monkeypatch):
+    """A chain call composes 1 + len(deltas) memo parts.  With more
+    parts than the LRU cap, inserting a later part must not evict (and
+    unpersist) a part the same call has already unioned into its
+    result: the base part here is materialized and least recently used
+    when the second delta's part is inserted, and the result must still
+    collect.  A repeat call then hits every part."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
+
+    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
+    monkeypatch.setattr(ivf_index, "_MEMO_MAX", 2)
+    ivf_index._SESSION_MEMO.pop(spark, None)
+
+    emb, n, k, ns = _load(spark)
+    c1, c2 = n // 2, (3 * n) // 4
+    base = emb.filter(F.col("vec_id") < c1)
+    deltas = [
+        emb.filter((F.col("vec_id") >= c1) & (F.col("vec_id") < c2)),
+        emb.filter(F.col("vec_id") >= c2),
+    ]
+    bt = f"{SF}/embeddings|own-base|{c1}"
+    dts = [f"{SF}/embeddings|own-d1|{c2 - c1}", f"{SF}/embeddings|own-d2|{n - c2}"]
+    ivf_index.shared_hier_assignment(spark, base, bt, k, ns).count()
+
+    chain = ivf_index.shared_hier_assignment_chain
+    got = chain(spark, base, deltas, bt, dts, k, ns)
+    memo = ivf_index._SESSION_MEMO[spark]
+    assert len(memo) == 3
+    assert {r.vec_id for r in got.collect()} == set(range(n))
+    assert all(ivf_index._memo_value_healthy(v[2]) for v in memo.values())
+
+    parts = [v[2] for v in memo.values()]
+    again = chain(spark, base, deltas, bt, dts, k, ns)
+    assert [v[2] for v in ivf_index._SESSION_MEMO[spark].values()] == parts
+    assert {r.vec_id for r in again.collect()} == set(range(n))
 
 
 def test_memo_self_heals_lost_checkpoint_blocks(spark, monkeypatch):
@@ -633,7 +559,6 @@ def test_memo_self_heals_lost_checkpoint_blocks(spark, monkeypatch):
     still-lineaged input instead of serving the corpse."""
     from signal_messenger_vector_database_spark.operators import ivf_index
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     token = f"{SF}/embeddings|heal-test|{n}"
@@ -671,7 +596,6 @@ def test_memo_fingerprint_guards_token_reuse(spark, monkeypatch):
         shared_hier_assignment,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     token = f"{SF}/embeddings|fp|{n}"
@@ -699,12 +623,11 @@ def _tiny_assignment(spark):
     return spark.createDataFrame(rows, "vec_id long, cid long")
 
 
-def test_maintain_live_assignment_excludes_tombstones(spark, monkeypatch):
+def test_maintain_live_assignment_excludes_tombstones(spark):
     from signal_messenger_vector_database_spark.operators.ivf_index import (
         maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
     base = emb.filter(F.col("vec_id") < cut)
@@ -814,26 +737,23 @@ def test_compact_cells_accepts_cells_frame(spark, tmp_path):
     assert {r.cid: r.n_removed for r in stats.collect()} == {0: 1}
 
 
-def test_chained_cycles_match_inline_full_assignment(
-    spark, tmp_path, monkeypatch
-):
+def test_chained_cycles_match_inline_full_assignment(spark, monkeypatch):
     """VERDICT r12 #2 done-criterion: after 3 chained ingest cycles the
     assignment equals the inline full assignment of base UNION all
     deltas at base geometry — and cycle N's call assigns ONLY its own
-    delta (one new cache entry per cycle; earlier parts are read)."""
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment_chain,
-    )
+    delta (one new memo family per cycle, holding that delta's rows;
+    the base and earlier cycles are memo hits)."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
 
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
     s = (n - cut) // 3
     b1, b2 = cut + s, cut + 2 * s
     base = emb.filter(F.col("vec_id") < cut)
+    bounds = [(cut, b1), (b1, b2), (b2, n)]
     deltas = [
-        emb.filter((F.col("vec_id") >= cut) & (F.col("vec_id") < b1)),
-        emb.filter((F.col("vec_id") >= b1) & (F.col("vec_id") < b2)),
-        emb.filter(F.col("vec_id") >= b2),
+        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+        for lo, hi in bounds
     ]
     bt = f"{SF}/embeddings|chain-base|{cut}"
     dts = [
@@ -842,49 +762,35 @@ def test_chained_cycles_match_inline_full_assignment(
         f"{SF}/embeddings|chain-c3|{b2}-{n}",
     ]
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.setenv("SMVD_IVF_MEMO", "0")
-    inline = shared_hier_assignment_chain(spark, base, deltas, bt, dts, k, ns)
+    inline = ivf_index.shared_hier_assignment_chain(
+        spark, base, deltas, bt, dts, k, ns
+    )
     inline_rows = {r.vec_id: r.cid for r in inline.collect()}
     assert len(inline_rows) == n
 
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-
-    def entries():
-        return sorted(
-            d for d in os.listdir(tmp_path) if "__tmp_" not in d
+    monkeypatch.delenv("SMVD_IVF_MEMO")
+    ivf_index.shared_hier_assignment(spark, base, bt, k, ns)
+    memo = ivf_index._SESSION_MEMO[spark]
+    for i, (lo, hi) in enumerate(bounds, start=1):
+        before = set(memo)
+        c = ivf_index.shared_hier_assignment_chain(
+            spark, base, deltas[:i], bt, dts[:i], k, ns
         )
-
-    # cycle 1: base build + cycle-1 delta
-    c1 = shared_hier_assignment_chain(
-        spark, base, deltas[:1], bt, dts[:1], k, ns
-    )
-    assert {r.vec_id for r in c1.collect()} == set(range(b1))
-    after1 = entries()
-    assert sum(1 for d in after1 if d.startswith("hier_delta_")) == 1
-
-    # cycle 2: exactly ONE new entry (cycle-2's delta); cycle-1 is read
-    c2 = shared_hier_assignment_chain(
-        spark, base, deltas[:2], bt, dts[:2], k, ns
-    )
-    c2.count()
-    after2 = entries()
-    assert set(after1) <= set(after2)
-    assert len(after2) == len(after1) + 1
-
+        (fam,) = [f for f in memo if f not in before]
+        assert {r.vec_id for r in memo[fam][2].collect()} == set(range(lo, hi))
+        assert {r.vec_id for r in c.collect()} == set(range(hi))
     # cycle 3: full parity with the inline one-shot assignment
-    c3 = shared_hier_assignment_chain(spark, base, deltas, bt, dts, k, ns)
-    assert {r.vec_id: r.cid for r in c3.collect()} == inline_rows
-    after3 = entries()
-    assert len(after3) == len(after2) + 1
+    assert {r.vec_id: r.cid for r in c.collect()} == inline_rows
 
-    # the memo arm is bit-identical too, and a repeat call HITS
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
-    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
-    m1 = shared_hier_assignment_chain(spark, base, deltas, bt, dts, k, ns)
-    assert {r.vec_id: r.cid for r in m1.collect()} == inline_rows
-    m2 = shared_hier_assignment_chain(spark, base, deltas, bt, dts, k, ns)
-    assert m2 is m1
+    # a repeat call adds no family and reuses the same part frames
+    before = {f: v[2] for f, v in memo.items()}
+    again = ivf_index.shared_hier_assignment_chain(
+        spark, base, deltas, bt, dts, k, ns
+    )
+    assert set(memo) == set(before)
+    assert all(memo[f][2] is v for f, v in before.items())
+    assert {r.vec_id: r.cid for r in again.collect()} == inline_rows
 
 
 def test_chain_with_no_deltas_is_the_base_assignment(spark, monkeypatch):
@@ -893,7 +799,6 @@ def test_chain_with_no_deltas_is_the_base_assignment(spark, monkeypatch):
         shared_hier_assignment_chain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
     emb, n, k, ns = _load(spark)
     token = f"{SF}/embeddings|chain-empty|{n}"
@@ -902,12 +807,14 @@ def test_chain_with_no_deltas_is_the_base_assignment(spark, monkeypatch):
     assert a is b  # same memo family: the chain degenerates exactly
 
 
-def test_pq_encode_delta_tiers_bit_identical(spark, tmp_path, monkeypatch):
+def test_pq_encode_delta_tiers_bit_identical(spark, monkeypatch):
     """shared_pq_encode_delta (r13): the incoming batch encoded against
-    base-frozen codebooks must be bit-identical across inline, memo and
-    cache tiers; the cached call reuses the base training's keys and
-    publishes exactly ONE new entry (the delta codes)."""
+    base-frozen codebooks must be bit-identical inline and memoized; with
+    the base trained, the memoized call adds exactly ONE family (the
+    delta codes, only the delta's rows), and a repeat call reads scans
+    of the memo parts."""
     from signal_messenger_vector_database_spark.io.sources import load_table
+    from signal_messenger_vector_database_spark.operators import ivf_index
     from signal_messenger_vector_database_spark.operators.ivf_index import (
         shared_pq_encode_delta,
         shared_pq_parts,
@@ -929,7 +836,6 @@ def test_pq_encode_delta_tiers_bit_identical(spark, tmp_path, monkeypatch):
     delta_subs = subs_all.filter(F.col("vec_id") >= cut)
     bt, dt = f"{SF}/embeddings|pqd-base|{cut}", f"{SF}/embeddings|pqd-delta|{n - cut}"
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     monkeypatch.setenv("SMVD_IVF_MEMO", "0")
     inline_codes, inline_cb = shared_pq_encode_delta(
         spark, base_subs, delta_subs, bt, dt, _OPD, 16, 1
@@ -943,23 +849,24 @@ def test_pq_encode_delta_tiers_bit_identical(spark, tmp_path, monkeypatch):
     base_part = {(r.vec_id, r.sub_j): r.code for r in af_base.collect()}
     assert base_part == {k: v for k, v in want.items() if k[0] < cut}
 
-    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
+    monkeypatch.delenv("SMVD_IVF_MEMO")
+    # pre-train the base the way a deployment's build step would
+    shared_pq_parts(spark, base_subs, bt, _OPD, 16, 1)[0].count()
+    memo = ivf_index._SESSION_MEMO[spark]
+    before = set(memo)
     memo_codes, _ = shared_pq_encode_delta(
         spark, base_subs, delta_subs, bt, dt, _OPD, 16, 1
     )
     assert {(r.vec_id, r.sub_j): r.code for r in memo_codes.collect()} == want
+    (fam,) = [f for f in memo if f not in before]  # ONLY the delta codes
+    assert {r.vec_id for r in memo[fam][2].collect()} == set(range(cut, n))
 
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path))
-    # pre-train the base the way a deployment's build step would
-    shared_pq_parts(spark, base_subs, bt, _OPD, 16, 1)[0].count()
-    n_entries = len(os.listdir(tmp_path))
-    cached_codes, _ = shared_pq_encode_delta(
+    again, _ = shared_pq_encode_delta(
         spark, base_subs, delta_subs, bt, dt, _OPD, 16, 1
     )
-    assert {(r.vec_id, r.sub_j): r.code for r in cached_codes.collect()} == want
-    names = os.listdir(tmp_path)
-    assert len(names) == n_entries + 1  # ONLY the delta codes are new
-    assert sum(1 for x in names if x.startswith("pq_delta_")) == 1
+    plan = again._jdf.queryExecution().executedPlan().toString()
+    assert "Aggregate" not in plan and "Join" not in plan
+    assert plan.count("Scan ExistingRDD") == 2
 
 
 def test_cell_candidates_prunes_to_the_routed_directories(spark, tmp_path):
@@ -1035,7 +942,7 @@ def test_cell_candidates_prunes_to_the_routed_directories(spark, tmp_path):
     assert {r.vec_id for r in fb.collect()} == {10, 11, 12, 13}
 
 
-def test_index_lifecycle_end_to_end(spark, tmp_path, monkeypatch):
+def test_index_lifecycle_end_to_end(spark, tmp_path):
     """The whole r12+r13 lifecycle on one corpus, composed the way a
     scheduler would run it: build base index -> ingest a delta ->
     delete some ids -> maintain (accounting + live frame) -> serve
@@ -1051,8 +958,6 @@ def test_index_lifecycle_end_to_end(spark, tmp_path, monkeypatch):
         write_cell_index,
     )
 
-    monkeypatch.setenv("SMVD_IVF_CACHE_DIR", str(tmp_path / "cache"))
-    (tmp_path / "cache").mkdir()
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
     base = emb.filter(F.col("vec_id") < cut)
@@ -1109,7 +1014,7 @@ def test_index_lifecycle_end_to_end(spark, tmp_path, monkeypatch):
     assert not still & tomb_ids
 
 
-def test_composed_filtered_tombstone_serving(spark, tmp_path, monkeypatch):
+def test_composed_filtered_tombstone_serving(spark, tmp_path):
     """The full r13 serving stack in ONE query, composed off the STORED
     index the way a production point query runs: widened 2-cell probe
     (route_query_cells) -> direct-path candidate read (cell_candidates)
@@ -1133,7 +1038,6 @@ def test_composed_filtered_tombstone_serving(spark, tmp_path, monkeypatch):
         write_cell_index,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     sf = "/root/testdata/sf0.01"  # big enough that each cell has labels
     from signal_messenger_vector_database_spark.io.sources import (
         load_table,
@@ -1201,7 +1105,7 @@ def test_composed_filtered_tombstone_serving(spark, tmp_path, monkeypatch):
     assert not {r.vec_id for r in served} & tomb_ids
 
 
-def test_maintain_accepts_chained_cycles(spark, monkeypatch):
+def test_maintain_accepts_chained_cycles(spark):
     """r13 policy-layer completion: `maintain` over N chained cycles.
     The assignment must equal the single-delta form over the union
     (frozen quantizer: per-row assignment is chain-invariant), and the
@@ -1214,7 +1118,6 @@ def test_maintain_accepts_chained_cycles(spark, monkeypatch):
         maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     emb, n, k, ns = _load(spark)
     cut = n - max(50, n // 10)
     s = (n - cut) // 3
@@ -1261,7 +1164,7 @@ def test_maintain_accepts_chained_cycles(spark, monkeypatch):
     assert live == set(range(n)) - tomb_ids
 
 
-def test_maintain_empty_delta_list_is_the_no_ingest_cycle(spark, monkeypatch):
+def test_maintain_empty_delta_list_is_the_no_ingest_cycle(spark):
     """r13 code review: `maintain(spark, base, [], ..., [])` used to
     IndexError on `deltas[-1]`.  It is a legitimate scheduler call —
     a cycle with deletes but no ingest: base-only assignment, zero
@@ -1270,7 +1173,6 @@ def test_maintain_empty_delta_list_is_the_no_ingest_cycle(spark, monkeypatch):
         maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     emb, n, k, ns = _load(spark)
     tombs = emb.filter(F.col("vec_id") % 37 == 5).select("vec_id")
     out = maintain(
@@ -1288,7 +1190,7 @@ def test_maintain_empty_delta_list_is_the_no_ingest_cycle(spark, monkeypatch):
 
 
 def test_cell_candidates_fully_compacted_index_is_empty_not_error(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
     """ADVICE r13: when EVERY cid= directory of a local index has been
     compacted away (no schema donor remains), the contract's answer is
@@ -1306,7 +1208,6 @@ def test_cell_candidates_fully_compacted_index_is_empty_not_error(
         write_cell_index,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     root = tmp_path / "compacted_away_idx"
     root.mkdir()  # index root exists, zero cid= directories remain
     got = cell_candidates(spark, str(root), [0, 1])
@@ -1328,7 +1229,7 @@ def test_cell_candidates_fully_compacted_index_is_empty_not_error(
         cell_candidates(spark, str(tmp_path / "no_such_idx"), [0])
 
 
-def test_batched_serving_equals_per_query_serving(spark, monkeypatch):
+def test_batched_serving_equals_per_query_serving(spark):
     """topk_ivf_batch must return, for EVERY qid, exactly what a
     single-query routed serve of that vector returns — the batch path
     amortizes the corpus join and swaps orderBy/limit for a per-qid
@@ -1353,7 +1254,6 @@ def test_batched_serving_equals_per_query_serving(spark, monkeypatch):
         _topk_ivf_batch,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     batch = _topk_ivf_batch(spark, SF).collect()
     assert len(batch) == _BATCH_Q * _BATCH_K
     by_qid = {}

@@ -310,7 +310,7 @@ def test_stream_lsh_dedup_exercises_both_arms_and_matches_batch(spark):
     assert within  # the within-batch arm is live too
 
 
-def test_stream_ivf_maintain_multibatch_equals_batch_twin(spark, monkeypatch):
+def test_stream_ivf_maintain_multibatch_equals_batch_twin(spark):
     """stream_ivf_maintain drains FOUR real insert+delete micro-batches
     (staging splits the op log on vec_id % 4, maxFilesPerTrigger=1 —
     every batch carries both op kinds by construction); the final
@@ -331,7 +331,6 @@ def test_stream_ivf_maintain_multibatch_equals_batch_twin(spark, monkeypatch):
         _stream_ivf_maintain,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     streamed = {tuple(r) for r in _stream_ivf_maintain(spark, SF).collect()}
 
     n = parquet_row_count(SF, "embeddings")
@@ -357,7 +356,7 @@ def test_stream_ivf_maintain_multibatch_equals_batch_twin(spark, monkeypatch):
     assert any(r[2] > 0 for r in streamed)  # n_tomb
 
 
-def test_stream_ivf_compact_acts_and_serves(spark, monkeypatch):
+def test_stream_ivf_compact_acts_and_serves(spark):
     """stream_ivf_compact must (a) actually COMPACT — the planted %37
     tombstones push cells over the needs_compact threshold at this
     fixture, so the audit columns are non-zero — and (b) serve an
@@ -385,7 +384,6 @@ def test_stream_ivf_compact_acts_and_serves(spark, monkeypatch):
         _stream_ivf_compact,
     )
 
-    monkeypatch.delenv("SMVD_IVF_CACHE_DIR", raising=False)
     rows = _stream_ivf_compact(spark, SF).collect()
     assert len(rows) == 5
     # (a) compaction fired: audit columns constant and non-zero

@@ -1,46 +1,22 @@
-"""Probe: the build-once shared IVF assignment amortized across
-consumers (VERDICT r10 #3 done-criterion).
+"""Probe: the cost shape of IVF cell-index maintenance at scale.
 
-For each scale (i.i.d. replicas from tools/scaling_probe.build_scaled):
-
-  inline  — each consumer recomputes the two-level assignment
-            (the status quo the x64 probe flagged: the n*(1+nprobe)*
-            sqrt(k) term paid once PER QUERY).  Since r12 the seam's
-            default session memo would amortize this within one
-            process, so the probe sets SMVD_IVF_MEMO=0 for the whole
-            run — its arms measure the unamortized inline cost vs the
-            cross-process disk cache, the contrast the wave-19/21
-            numbers are defined over;
-  shared  — SMVD_IVF_CACHE_DIR set: the index is built & materialized
-            ONCE (timed as build_sec), then every consumer reads the
-            parquet assignment — per-query marginal cost is the
-            consumer's own work, linear in n.
-
-Consumers probed: semdedup + knn_graph_ivf + ann_recall_at_k — three
-catalog queries that share the identical (corpus, k, n_super, nprobe)
-assignment.  Oracles are unaffected (the cached frame is bit-identical;
-test_ivf_index pins it); this probe measures COST shape only.
+Both arms run on i.i.d. replicas from tools/scaling_probe.build_scaled
+and time the cid-partitioned disk index (operators/ivf_index.py's
+``write_cell_index`` / ``compact_cells`` / ``cell_candidates``).  The
+probe sets SMVD_IVF_MEMO=0 for the whole run, so every arm pays its own
+coarse assignment, as in the wave-24 and wave-29b numbers in SCALING.md.
+Oracles are unaffected; this probe measures COST shape only.
 
 Usage:
-    python tools/ivf_share_probe.py [--scales=1,16,64]
-    python tools/ivf_share_probe.py --pq        # wave 19c: the trained-PQ
-                                                # trio + residual curve at
-                                                # sf0.1, inline vs shared
-    python tools/ivf_share_probe.py --delta     # wave 21: incremental
-                                                # maintenance — +1/64 corpus
-                                                # via delta assignment vs a
-                                                # full index rebuild
     python tools/ivf_share_probe.py --compact   # wave 24: cell compaction —
                                                 # flagged-cells-only rewrite
                                                 # vs the full index write
-    python tools/ivf_share_probe.py --serve     # wave 26: serving marginal
-                                                # cost off a pre-built index
-                                                # (filtered ANN + MaxSim)
     python tools/ivf_share_probe.py --stream-compact
                                                 # wave 29b: the acting
                                                 # streaming compaction cycle
                                                 # e2e + pre/post-compaction
                                                 # serving contrast
+    [--scales=1,16,64]
 """
 
 from __future__ import annotations
@@ -51,228 +27,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-CONSUMERS = ["semdedup", "knn_graph_ivf", "ann_recall_at_k"]
-
-
-PQ_CONSUMERS = [
-    "pq_operating_point",
-    "topk_ivf_pq_trained",
-    "ivf_pq_operating_curve",
-    "ivf_pq_clustered_curve",
-]
-
-
-def run_pq() -> None:
-    """Wave 19c: the trained-PQ family at sf0.1 — each query retrains
-    identical codebooks inline; with the cache the build amortizes."""
-    import shutil
-    import time
-
-    import __spark_entry__ as entry
-    from signal_messenger_vector_database_spark.session import get_spark
-
-    spark = get_spark("pq-share-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    sf = "/root/testdata/sf0.1"
-    for name in PQ_CONSUMERS:  # codegen warmup
-        qs[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    out = {}
-    os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-    for arm in ("inline", "shared_first", "shared_warm"):
-        if arm == "shared_first":
-            cache = "/tmp/smvd_pq_share_probe"
-            shutil.rmtree(cache, ignore_errors=True)
-            os.makedirs(cache, exist_ok=True)
-            os.environ["SMVD_IVF_CACHE_DIR"] = cache
-        times = {}
-        for name in PQ_CONSUMERS:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, sf).write.format("noop").mode("overwrite").save()
-            times[name] = round(time.time() - t0, 1)
-        out[arm] = {"per_query": times, "total": round(sum(times.values()), 1)}
-        print(json.dumps({arm: out[arm]}), flush=True)
-    os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-    print(json.dumps(out))
-
-
-def run_delta(scales: list[int]) -> None:
-    """Wave 21 (VERDICT r11 #2 done-criterion): a +1/64-corpus ingest
-    through shared_hier_assignment_delta must cost ~1/64 of the base
-    index build, not a rebuild.  Per scale: split the corpus at
-    cut = n - n//64 (base | delta), time the base build (the one-off /
-    re-cluster cost), then time the delta-only assignment against the
-    warm base index (the steady-state ingest cost)."""
-    import shutil
-
-    from scaling_probe import build_scaled
-
-    from signal_messenger_vector_database_spark.io.sources import (
-        load_table,
-        parquet_row_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ann import (
-        hier_super_count,
-        scaled_cluster_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-        shared_hier_assignment_delta,
-    )
-    from signal_messenger_vector_database_spark.session import get_spark
-    from pyspark.sql import functions as F
-
-    spark = get_spark("ivf-delta-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    dirs = {k: build_scaled(spark, k) for k in scales}
-
-    results = {}
-    for warmup in (True, False):
-      for k in (scales[:1] if warmup else scales):
-        sf_dir = dirs[k]
-        n = parquet_row_count(sf_dir, "embeddings")
-        cut = n - max(1, n // 64)
-        kk = scaled_cluster_count(cut)
-        ns = hier_super_count(kk)
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") < cut)
-        delta = emb.filter(F.col("vec_id") >= cut)
-        bt = f"{sf_dir}/embeddings|probe-base|{cut}"
-        dt = f"{sf_dir}/embeddings|probe-delta|{n - cut}"
-
-        cache = f"/tmp/smvd_ivf_delta_probe/x{k}"
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
-        os.environ["SMVD_IVF_CACHE_DIR"] = cache
-        t0 = time.time()
-        shared_hier_assignment(spark, base, bt, kk, ns).count()
-        build_sec = round(time.time() - t0, 2)
-        t0 = time.time()
-        got = shared_hier_assignment_delta(
-            spark, base, delta, bt, dt, kk, ns
-        ).count()
-        delta_sec = round(time.time() - t0, 2)
-        # wave 21d: the FULL maintenance cycle (delta assignment via
-        # the warm index + occupancy accounting + rebuild decision) —
-        # the policy pass a scheduler runs per ingest.  Tombstones =
-        # every 37th base id (the ivf_maintenance convention).
-        from signal_messenger_vector_database_spark.operators.ivf_index import (
-            maintain,
-        )
-
-        t0 = time.time()
-        out = maintain(
-            spark, base, delta, bt, dt, kk, ns,
-            tombstones=base.filter(F.col("vec_id") % 37 == 5).select(
-                "vec_id"
-            ),
-        )
-        dec = out["decision"].collect()[0]
-        maintain_sec = round(time.time() - t0, 2)
-        os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-        assert got == n, (got, n)
-        if warmup:  # first pass only pays codegen/JIT; numbers discarded
-            continue
-        row = {
-            "scale": k,
-            "n": n,
-            "n_delta": n - cut,
-            "build_sec": build_sec,
-            "delta_sec": delta_sec,
-            "delta_over_build": round(delta_sec / build_sec, 3)
-            if build_sec
-            else None,
-            "maintain_sec": maintain_sec,
-            "n_flagged": dec.n_flagged,
-            "rebuild_recommended": dec.rebuild_recommended,
-        }
-        results[f"x{k}"] = row
-        print(json.dumps(row), flush=True)
-    print(json.dumps(results))
-
-
-def run_delta_chain(scales: list[int]) -> None:
-    """Wave 25 (VERDICT r12 #2 done-criterion): per-cycle ingest cost
-    must stay FLAT in |delta| across CHAINED cycles.  Per scale: split
-    the corpus into base + three +1/64 slices; build the base index
-    once; then run cycles 1..3 through shared_hier_assignment_chain
-    with the cache warm from the previous cycle — cycle i must pay only
-    its OWN delta's assignment (cycles 1..i-1 read their parquets)."""
-    import shutil
-
-    from scaling_probe import build_scaled
-
-    from pyspark.sql import functions as F
-
-    from signal_messenger_vector_database_spark.io.sources import (
-        load_table,
-        parquet_row_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ann import (
-        hier_super_count,
-        scaled_cluster_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-        shared_hier_assignment_chain,
-    )
-    from signal_messenger_vector_database_spark.session import get_spark
-
-    spark = get_spark("ivf-chain-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    dirs = {k: build_scaled(spark, k) for k in scales}
-
-    results = {}
-    for warmup in (True, False):
-      for k in (scales[:1] if warmup else scales):
-        sf_dir = dirs[k]
-        n = parquet_row_count(sf_dir, "embeddings")
-        step = max(1, n // 64)
-        cut = n - 3 * step
-        kk = scaled_cluster_count(cut)
-        ns = hier_super_count(kk)
-        emb = load_table(spark, sf_dir, "embeddings")
-        base = emb.filter(F.col("vec_id") < cut)
-        bounds = [cut, cut + step, cut + 2 * step, n]
-        deltas = [
-            emb.filter(
-                (F.col("vec_id") >= bounds[i]) & (F.col("vec_id") < bounds[i + 1])
-            )
-            for i in range(3)
-        ]
-        bt = f"{sf_dir}/embeddings|chain-base|{cut}"
-        dts = [
-            f"{sf_dir}/embeddings|chain-c{i + 1}|{bounds[i]}-{bounds[i + 1]}"
-            for i in range(3)
-        ]
-
-        cache = f"/tmp/smvd_ivf_chain_probe/x{k}"
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
-        os.environ["SMVD_IVF_CACHE_DIR"] = cache
-        t0 = time.time()
-        shared_hier_assignment(spark, base, bt, kk, ns).count()
-        build_sec = round(time.time() - t0, 2)
-        cyc = {}
-        for i in (1, 2, 3):
-            t0 = time.time()
-            got = shared_hier_assignment_chain(
-                spark, base, deltas[:i], bt, dts[:i], kk, ns
-            ).count()
-            cyc[f"cycle{i}_sec"] = round(time.time() - t0, 2)
-            assert got == bounds[i], (got, bounds[i])
-        os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-        if warmup:
-            continue
-        row = {"scale": k, "n": n, "n_per_cycle": step,
-               "build_sec": build_sec, **cyc}
-        results[f"x{k}"] = row
-        print(json.dumps(row), flush=True)
-    print(json.dumps(results))
 
 
 def run_compact(scales: list[int]) -> None:
@@ -362,100 +116,6 @@ def run_compact(scales: list[int]) -> None:
             results[f"x{k}_f{n_flagged}"] = row
             print(json.dumps(row), flush=True)
     print(json.dumps(results))
-
-
-def run_serve(scales: list[int]) -> None:
-    """Wave 26 (late r13): SERVING marginal cost of the new query
-    shapes off a pre-built index.  Per scale: materialize the shared
-    assignment to the disk tier (untimed — the build step a deployment
-    schedules), then time 3 repeats (median) of `topk_ivf_filtered`
-    (widened 2-cell probe + label predicate + exact re-rank) and
-    `maxsim_retrieve` (3-token candidate gen + exact MaxSim re-rank).
-    Expected shape: ~flat — the router is O(k) arithmetic over the
-    broadcast centroid table and the re-rank is O(cells-touched x
-    cell size), with cell size bounded by the corpus-scaled-k rule;
-    the only growth left is the assignment parquet scan feeding the
-    shortlist join (linear, IO-bound) and fixed job overhead."""
-    import shutil
-
-    from scaling_probe import build_scaled
-
-    import __spark_entry__ as entry
-    from signal_messenger_vector_database_spark.io.sources import (
-        load_table,
-        parquet_row_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ann import (
-        hier_super_count,
-        scaled_cluster_count,
-    )
-    from signal_messenger_vector_database_spark.operators.ivf_index import (
-        shared_hier_assignment,
-    )
-    from signal_messenger_vector_database_spark.session import get_spark
-
-    spark = get_spark("ivf-serve-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    dirs = {k: build_scaled(spark, k) for k in scales}
-    # tempdir, not a fixed /tmp name (cross-user collisions), and POPPED
-    # in finally like every other probe mode — code after the mode
-    # dispatch must not silently inherit the disk-cache tier (ADVICE r13)
-    import tempfile
-
-    cache = tempfile.mkdtemp(prefix="smvd_serve_probe_cache_")
-    os.environ["SMVD_IVF_CACHE_DIR"] = cache
-
-    try:
-        results = {}
-        for warmup in (True, False):
-          for k in (scales[:1] if warmup else scales):
-            sf_dir = dirs[k]
-            n = parquet_row_count(sf_dir, "embeddings")
-            kk = scaled_cluster_count(n)
-            emb = load_table(spark, sf_dir, "embeddings")
-            t0 = time.time()
-            shared_hier_assignment(
-                spark, emb, f"{sf_dir}/embeddings|{n}", kk, hier_super_count(kk)
-            ).write.format("noop").mode("overwrite").save()
-            build_sec = round(time.time() - t0, 2)
-            row = {"scale": k, "n": n, "k_cells": kk, "build_sec": build_sec}
-            # r14 adds the two new serving arms: IVF-SQ8 (int8-scored
-            # 2-cell shortlist + float re-rank — rides the same stored
-            # full-corpus assignment) and the composed lifecycle query
-            # (chain + tombstones + predicate + widened probe — its
-            # chain parts build per scale on first run, then serve).
-            # r15 adds the binary pair: topk_ivf_binary (routed Hamming
-            # — expected ~flat like sq8) and topk_binary_rerank (the
-            # deliberate full-corpus Hamming scan — expected LINEAR;
-            # the contrast IS the routed composition's justification).
-            for name in (
-                "topk_ivf_filtered",
-                "maxsim_retrieve",
-                "topk_ivf_sq8",
-                "topk_ivf_lifecycle",
-                "topk_ivf_binary",
-                "topk_binary_rerank",
-                "topk_ivf_cascade",
-            ):
-                runs = []
-                for _ in range(3):
-                    spark.catalog.clearCache()
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(round(time.time() - t0, 3))
-                row[name] = sorted(runs)[1]
-                row[f"{name}_runs"] = runs
-            if warmup:
-                continue
-            results[f"x{k}"] = row
-            print(json.dumps(row), flush=True)
-        print(json.dumps(results))
-    finally:
-        os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-        shutil.rmtree(cache, ignore_errors=True)
 
 
 def run_stream_compact(scales: list[int]) -> None:
@@ -594,124 +254,27 @@ def run_stream_compact(scales: list[int]) -> None:
 
 
 def main() -> None:
-    # the probe's contract is unamortized-inline vs disk-cache (module
-    # docstring); the r12 session memo must not blur the inline arms
+    # every arm pays its own assignment (module docstring); the session
+    # memo must not amortize it across arms
     os.environ["SMVD_IVF_MEMO"] = "0"
-    # strict one-pass parse (r12 adversarial review: the mode-dispatch
-    # restructure had stopped validating unknown flags, so a typo'd
-    # --scale= would silently probe the defaults)
+    # strict one-pass parse (r12 adversarial review: a typo'd --scale=
+    # must not silently probe the defaults)
     scales = [1, 16, 64]
-    mode = "share"
+    run = None
     for a in sys.argv[1:]:
         if a.startswith("--scales="):
             scales = [int(x) for x in a.split("=", 1)[1].split(",")]
-        elif a == "--pq":
-            mode = "pq"
-        elif a == "--delta":
-            mode = "delta"
         elif a == "--compact":
-            mode = "compact"
-        elif a == "--delta-chain":
-            mode = "delta-chain"
-        elif a == "--serve":
-            mode = "serve"
+            run = run_compact
         elif a == "--stream-compact":
-            mode = "stream-compact"
+            run = run_stream_compact
         else:
             sys.exit(f"unrecognized argument {a!r}")
-    if mode == "pq":
-        run_pq()
-        return
-    if mode == "delta":
-        run_delta(scales)
-        return
-    if mode == "compact":
-        run_compact(scales)
-        return
-    if mode == "delta-chain":
-        run_delta_chain(scales)
-        return
-    if mode == "serve":
-        run_serve(scales)
-        return
-    if mode == "stream-compact":
-        run_stream_compact(scales)
-        return
-
-    from scaling_probe import build_scaled
-
-    import __spark_entry__ as entry
-    from signal_messenger_vector_database_spark.session import get_spark
-
-    spark = get_spark("ivf-share-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    dirs = {k: build_scaled(spark, k) for k in scales}
-
-    # untimed warmup at the smallest scale
-    os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-    for name in CONSUMERS:
-        qs[name](spark, dirs[scales[0]]).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    results = {}
-    for k in scales:
-        sf_dir = dirs[k]
-        row: dict = {"scale": k}
-
-        os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-        inline = {}
-        for name in CONSUMERS:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            inline[name] = round(time.time() - t0, 2)
-        row["inline"] = inline
-        row["inline_total"] = round(sum(inline.values()), 2)
-
-        cache = f"/tmp/smvd_ivf_share_probe/x{k}"
-        import shutil
-
-        shutil.rmtree(cache, ignore_errors=True)
-        os.makedirs(cache, exist_ok=True)
-        os.environ["SMVD_IVF_CACHE_DIR"] = cache
-        # time the one-off index build explicitly (first touch builds)
-        from signal_messenger_vector_database_spark.io.sources import (
-            load_table,
-            parquet_row_count,
+    if run is None:
+        sys.exit(
+            "usage: ivf_share_probe.py --compact|--stream-compact [--scales=...]"
         )
-        from signal_messenger_vector_database_spark.operators.ann import (
-            hier_super_count,
-            scaled_cluster_count,
-        )
-        from signal_messenger_vector_database_spark.operators.ivf_index import (
-            shared_hier_assignment,
-        )
-
-        n = parquet_row_count(sf_dir, "embeddings")
-        kk = scaled_cluster_count(n)
-        emb = load_table(spark, sf_dir, "embeddings")
-        t0 = time.time()
-        shared_hier_assignment(
-            spark, emb, f"{sf_dir}/embeddings|{n}", kk, hier_super_count(kk)
-        ).count()
-        row["build_sec"] = round(time.time() - t0, 2)
-
-        shared = {}
-        for name in CONSUMERS:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            shared[name] = round(time.time() - t0, 2)
-        row["shared"] = shared
-        row["shared_total"] = round(row["build_sec"] + sum(shared.values()), 2)
-        os.environ.pop("SMVD_IVF_CACHE_DIR", None)
-
-        results[f"x{k}"] = row
-        print(json.dumps(row), flush=True)
-
-    print(json.dumps(results))
+    run(scales)
 
 
 if __name__ == "__main__":
