@@ -66,14 +66,6 @@ last round after cancelling sandbox speed.
 Each query is forced through full evaluation with the noop sink (count()
 would let Catalyst prune the projections we mean to measure).
 
-Flags (r12):
-  --stamp=<s>    free-form provenance stamp recorded in the payload.
-  --single-shot  (r14) one timed run per query instead of 3 — the
-                 r1-r13 loop, for quick iteration.
-The payload also carries run = $SMVD_BENCH_RUN (default
-"unattributed") so a driver-overwritten sidecar is distinguishable
-from the builder's committed run (VERDICT r11 #8).
-
 Since the r12 session memo (operators/ivf_index.py) the series
 amortizes the shared IVF/PQ index within the run: the first seam
 consumer pays the build inside its timed window, later consumers reuse
@@ -181,11 +173,6 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    stamp = next(
-        (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--stamp=")),
-        None,
-    )
-
     from signal_messenger_vector_database_spark.session import get_spark
     from signal_messenger_vector_database_spark.plans.catalog import all_specs
 
@@ -218,8 +205,8 @@ def main() -> None:
     # itself, no re-measuring tool.  Runs stay OUT of stdout: the
     # driver keeps only a 2000-char tail and the r13 payload already
     # measures 1896 chars — runs there would truncate `queries` (the
-    # r10 incident).  --single-shot restores the old loop.
-    n_runs = 1 if "--single-shot" in sys.argv[1:] else 3
+    # r10 incident).
+    n_runs = 3
     timings: dict[str, float] = {}
     query_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
@@ -273,12 +260,6 @@ def main() -> None:
         "median_total": round(sum(medians.values()), 2),
         "unit": "sec",
         "sf": sf,
-        # provenance stamp (VERDICT r11 #8): lets a driver-overwritten
-        # sidecar be distinguished from the builder's committed run —
-        # the driver invokes plain `python bench.py` in a clean env, so
-        # its artifacts read run=unattributed / stamp=None.
-        "run": os.environ.get("SMVD_BENCH_RUN", "unattributed"),
-        "stamp": stamp,
         "runs_per_query": n_runs,
         "canary": canary("tokenize"),
         "canary_shuffle": canary("region_rollup"),
@@ -312,14 +293,12 @@ def main() -> None:
     # stdout gets a SLIM copy: the canaries' raw runs live in the
     # sidecar — with the r14 headline additions the full payload would
     # brush the 2000-char tail and truncate `queries` (r10 incident).
-    # Per-query stdout timings round to 2 dp (the sidecar keeps 3);
-    # a None stamp is omitted.  Measured headroom: ~1850/2000 chars.
+    # Per-query stdout timings round to 2 dp (the sidecar keeps 3).
+    # Measured headroom: ~1850/2000 chars.
     slim = dict(out)
     for k in ("canary", "canary_shuffle", "canary_jobs"):
         slim[k] = {kk: vv for kk, vv in out[k].items() if kk != "runs"}
     slim["queries"] = {n: round(v, 2) for n, v in timings.items()}
-    if slim.get("stamp") is None:
-        del slim["stamp"]
     # stdout-only trims (r15 review: the line measured 1931 chars, ~70
     # from the 2000-char tail cutoff that truncates HEADS — the r10
     # incident).  Methodology metadata lives in the sidecar: drop

@@ -394,9 +394,10 @@ def shared_hier_assignment(
     recompute).
 
     ``corpus_token`` must identify the corpus bytes the caller scans
-    (e.g. ``f"{sf_dir}/embeddings|{n}"``); derived corpora pass their
-    derivation tag so two different projections of the same table
-    never share an index."""
+    (e.g. ``plans/embeddings_index.py::corpus_token``, which every
+    consumer of the embeddings corpus keys through); derived corpora
+    pass their derivation tag so two different projections of the same
+    table never share an index."""
     return _chain(
         spark, emb, [], corpus_token, [], k, n_super, nprobe, id_col,
         vec_col, shard_threshold,

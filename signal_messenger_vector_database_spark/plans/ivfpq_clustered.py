@@ -82,37 +82,16 @@ _RC_SHORT = 100
 _RC_TOPK = 10
 
 
-def _rc_vec(topic, tag):
-    """The 64-dim dyadic vector, CHUNKED: one md5 yields EIGHT 4-hex
-    dims (offsets 0/4/…/28) instead of `_cl_vec`'s one-md5-per-dim —
-    16 md5s/row instead of 128, and an expression tree small enough
-    for whole-stage codegen (the per-dim form blew janino's method
-    limit and fell back to interpreted eval: 12.4 s -> 3.9 s cold for
-    the sf0.1 projection, measured).  Same dyadic grid: every
-    component is center/2^16 + (pert/2^16 - 0.5)/16, exact in doubles.
-    hex -> int via conv() — value-identical to the instr arithmetic
-    the oracle twin renders (both parse the same 4 hex chars)."""
-    dims = []
-    for c in range(_RC_D // 8):
-        hc = F.md5(F.concat(topic, F.lit(f":{c}")))
-        hp = F.md5(F.concat(tag, F.lit(f":{c}")))
-        for j in range(8):
-            cen = F.conv(F.substring(hc, j * 4 + 1, 4), 16, 10).cast("double")
-            per = F.conv(F.substring(hp, j * 4 + 1, 4), 16, 10).cast("double")
-            dims.append(
-                cen / F.lit(65536.0)
-                + (per / F.lit(65536.0) - F.lit(0.5)) / F.lit(16.0)
-            )
-    return F.array(*dims)
-
-
 def _rc_vec_expr(topic_sql: str, tag_sql: str) -> "Column":
-    """``_rc_vec`` rendered as ONE ``F.expr`` string (r15): composing
-    the 64-dim chunked projection out of individual Column ops cost
-    seconds of py4j round-trips per query build (the ivf_recall_
-    clustered measurement); the rendered string parses in milliseconds
-    and evaluates the identical conv/substring/md5 arithmetic —
-    bit-identical values, oracle unchanged."""
+    """The 64-dim dyadic vector, CHUNKED: one md5 yields EIGHT 4-hex
+    dims (offsets 0/4/…/28) instead of ``_cl_vec_expr``'s
+    one-md5-per-dim, so 16 md5s/row instead of 128.  Same dyadic grid:
+    every component is center/2^16 + (pert/2^16 - 0.5)/16, exact in
+    doubles; hex -> int via conv(), value-identical to the instr
+    arithmetic the oracle twin renders.  Rendered as ONE ``F.expr``
+    string (r15): the Column-op form cost seconds of py4j round-trips
+    per query build.  ``_rc_vec_py`` is its plain-Python replay (pinned
+    bit for bit by test_retrieval_eval)."""
     dims = []
     for c in range(_RC_D // 8):
         hc = f"md5(concat({topic_sql}, ':{c}'))"
@@ -127,7 +106,7 @@ def _rc_vec_expr(topic_sql: str, tag_sql: str) -> "Column":
 
 
 def _rc_vec_py(topic: str, tag: str) -> list:
-    """Driver-side Python replay of ``_rc_vec`` (r15): every component
+    """Plain-Python replay of ``_rc_vec_expr`` (r15): every component
     is a dyadic rational (multiple of 2^-20, < ~1.07), exact in IEEE
     doubles, so Python reproduces the engine columns bit-for-bit — the
     frozen 5-query eval constants no longer need a collect job that
@@ -148,7 +127,7 @@ def _rc_vec_py(topic: str, tag: str) -> list:
 def _rc_sql_corpus_cte(
     name: str, id_expr: str, tag: str, where: str = ""
 ) -> str:
-    """DuckDB twin of _rc_vec as a full CTE: the 16 per-chunk md5s are
+    """DuckDB twin of _rc_vec_expr as a full CTE: the 16 per-chunk md5s are
     hoisted into an inner SELECT (one column each) so the hex-to-int
     arithmetic references COLUMNS — the naive inline form re-rendered
     each md5 inside every instr term (512 evaluations/row, measured 4x

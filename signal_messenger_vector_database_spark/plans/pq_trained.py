@@ -60,6 +60,7 @@ from ..functions.text import portable_round
 from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
+from .embeddings_index import corpus_token, full_corpus, incoming_split
 from .registry import QuerySpec
 
 SPECS: dict[str, QuerySpec] = {}
@@ -143,10 +144,9 @@ def _op_trained_parts(spark: SparkSession, sf_dir: str):
     from ..io.sources import parquet_row_count
     from ..operators.ivf_index import shared_pq_parts
 
-    n = parquet_row_count(sf_dir, "embeddings")
+    token = corpus_token(sf_dir, parquet_row_count(sf_dir, "embeddings"))
     return shared_pq_parts(
-        spark, subs, f"{sf_dir}/embeddings|{n}|op{_OPM}x{_OPD}",
-        _OPD, _OPK, _OPROUNDS,
+        spark, subs, f"{token}|op{_OPM}x{_OPD}", _OPD, _OPK, _OPROUNDS
     )
 
 
@@ -505,24 +505,11 @@ _QPROBE = 3
 
 def _topk_ivf_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import ivf_seed_centroids
     from .vectorops import _pq_query_vec
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, _, k, _, assign = full_corpus(spark, sf_dir)
     cents = ivf_seed_centroids(emb, k)
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
 
     q = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
     probed = (
@@ -784,23 +771,10 @@ _CURVE_ARMS = (1, 2, 4, 8)  # plus the 'all' flat arm (nprobe = k)
 
 def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import ivf_seed_centroids
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, n, k, _, assign = full_corpus(spark, sf_dir)
     cents = ivf_seed_centroids(emb, k)
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
 
     qs = _op_query_vecs()
     qfull = local_rows(
@@ -1026,11 +1000,10 @@ _PQED_ROUNDS = 1
 
 
 def _pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.sources import ensure_parallelism, parquet_row_count
+    from ..io.sources import ensure_parallelism
     from ..operators.ivf_index import shared_pq_encode_delta
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
+    split = incoming_split(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1038,20 +1011,20 @@ def _pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base subs feed the Lloyd round repeatedly: spread + checkpoint
     # (the _op_trained_parts discipline); delta subs are encoded once
     base_subs = materialize(
-        ensure_parallelism(subs_all.filter(F.col("vec_id") < cut)), "base subvectors", "lazy"
+        ensure_parallelism(split.base(subs_all)), "base subvectors", "lazy"
     )
-    delta_subs = subs_all.filter(F.col("vec_id") >= cut)
+    tag = f"op{_OPM}x{_OPD}r{_PQED_ROUNDS}"
     codes, _cb = shared_pq_encode_delta(
         spark,
         base_subs,
-        delta_subs,
-        f"{sf_dir}/embeddings|base|{cut}|op{_OPM}x{_OPD}r{_PQED_ROUNDS}",
-        f"{sf_dir}/embeddings|delta|{n - cut}|op{_OPM}x{_OPD}r{_PQED_ROUNDS}",
+        split.delta(subs_all),
+        f"{split.base_token}|{tag}",
+        f"{split.delta_token}|{tag}",
         _OPD,
         _OPK,
         _PQED_ROUNDS,
     )
-    return codes.filter(F.col("vec_id") >= cut).select(
+    return split.delta(codes).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("sub_j").cast("int").alias("sub_j"),
         F.col("code").cast("int").alias("code"),

@@ -54,6 +54,7 @@ from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
+from .embeddings_index import full_corpus
 from .ivf_sql import HIER_ASSIGN_CTES as _HIER_ASSIGN_CTES
 from .registry import QuerySpec
 from .similarity import _SQL_COS
@@ -87,16 +88,8 @@ def _ivf_pieces(spark: SparkSession, sf_dir: str):
     deployment actually runs; ivf_hier_quality separately measures the
     assignment's agreement with flat."""
     from ..functions.vector import dot_product, l2_norm
-    from ..operators.ann import ivf_seed_centroids, scaled_cluster_count
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
+    emb, *_, assign = full_corpus(spark, sf_dir)
     embn = emb.select(
         "vec_id", "embedding", l2_norm("embedding").alias("nv")
     )
@@ -348,18 +341,8 @@ SPECS["ivf_hier_quality"] = QuerySpec(
 
 def _ann_ivf_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..operators.ann import (
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    emb = load_table(spark, sf_dir, "embeddings")
-    from ..operators.ivf_index import shared_hier_assignment
-
-    hier = shared_hier_assignment(spark, emb, f"{sf_dir}/embeddings|{n}", k, ns)
+    emb, *_, hier = full_corpus(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     qcid = hier.filter(F.col("vec_id") == 0).select(
         F.col("cid").alias("qcid")
@@ -446,30 +429,6 @@ _CL_ARMS = (1, 2, 4, 8)
 _CL_TOPK = 10
 
 
-def _cl_vec(topic: Column, tag: Column, d: int = _CL_D) -> Column:
-    """center(topic) + perturbation(tag) as an array<double> — 2*d
-    md5s per row, pure codegen, no shuffle.  ONE definition consumed by
-    the corpus, the seeds, and the query vectors (``d`` defaults to the
-    clustered-recall geometry; the IVF-PQ residual curve passes its
-    own)."""
-    from ..operators.dedup import _hex_to_int
-
-    def h4(col):
-        return _hex_to_int(F.md5(col), 4).cast("double")
-
-    return F.array(
-        *[
-            h4(F.concat(topic, F.lit(f":{i}"))) / F.lit(65536.0)
-            + (
-                h4(F.concat(tag, F.lit(f":{i}"))) / F.lit(65536.0)
-                - F.lit(0.5)
-            )
-            / F.lit(16.0)
-            for i in range(d)
-        ]
-    )
-
-
 def _hex4_sql_spark(h_sql: str) -> str:
     """Spark-SQL rendering of ``_hex_slice_to_int(h, 1, 4)`` — the same
     instr-based digit arithmetic, value-identical BIGINT."""
@@ -482,12 +441,13 @@ def _hex4_sql_spark(h_sql: str) -> str:
 
 
 def _cl_vec_expr(topic_sql: str, tag_sql: str, d: int = _CL_D) -> Column:
-    """``_cl_vec`` rendered as ONE ``F.expr`` string (r15): composing
-    the 2*d-md5 projection out of individual Column ops cost 2-4 s of
-    py4j round-trips PER QUERY BUILD (measured); the rendered string
-    parses in milliseconds and evaluates the identical arithmetic —
-    same instr digit sums, same double divisions, bit-identical
-    values."""
+    """center(topic) + perturbation(tag) as an array<double>, 2*d md5s
+    per row, pure codegen, no shuffle (``d`` defaults to the
+    clustered-recall geometry).  Rendered as ONE ``F.expr`` string
+    (r15): composing the projection out of individual Column ops cost
+    2-4 s of py4j round-trips PER QUERY BUILD (measured); the string
+    parses in milliseconds.  ``_cl_vec_py`` is its plain-Python replay
+    (pinned bit for bit by test_retrieval_eval)."""
     dims = []
     for i in range(d):
         c = _hex4_sql_spark(f"md5(concat({topic_sql}, ':{i}'))")
@@ -513,7 +473,7 @@ def _literal_cells_expr(rows: list[tuple[int, list[float]]]) -> Column:
 
 
 def _cl_vec_py(topic: str, tag: str, d: int = _CL_D) -> list[float]:
-    """Driver-side Python replay of ``_cl_vec``: every component is a
+    """Plain-Python replay of ``_cl_vec_expr``: every component is a
     dyadic rational (multiple of 2^-20, bounded by ~1.07), so IEEE
     doubles carry the arithmetic exactly and Python reproduces the
     engine columns bit-for-bit — the same exactness argument the
@@ -703,7 +663,7 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cl_sql_vec(topic: str, tag: str, d: int = _CL_D) -> str:
-    """DuckDB twin of _cl_vec: the list-comprehension form of the same
+    """DuckDB twin of _cl_vec_expr: the list-comprehension form of the same
     dyadic arithmetic (``_sql_hex4`` is the shared hex-to-int SQL)."""
     from .similarity import _sql_hex4
 
@@ -835,27 +795,17 @@ _FRC_LABEL = 3
 
 def _filtered_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..operators.ann import (
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
     from ..operators.ranking import two_phase_topk
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     qt = emb.filter(F.col("vec_id") < _FRC_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     routed = route_query_cells(
         qt,
         ivf_seed_centroids(emb, k),
-        hier_super_count(k),
+        ns,
         n_cells=max(_FRC_ARMS),
         id_col="qid",
         with_rank=True,

@@ -28,6 +28,7 @@ from ..operators.dedup import (
     simhash,
     simhash_hamming_pairs,
 )
+from .embeddings_index import full_corpus
 from .registry import QuerySpec
 
 # ---------------------------------------------------------------------------
@@ -1143,25 +1144,15 @@ def _knn_graph_fenced(
 
     from ..functions.text import portable_round
     from ..functions.vector import dot_product, l2_norm
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        capped_cell_split,
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import capped_cell_split
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings").select(
+    corpus = full_corpus(spark, sf_dir)
+    # the pair math runs in double; the assignment is the corpus's one
+    # shared family, keyed on the raw scan
+    emb = corpus.emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    ).withColumnRenamed("cid", "cluster")
+    assign = corpus.assign.withColumnRenamed("cid", "cluster")
     if cap is not None:
         # capped_cell_split consumes the assignment TWICE (cell-size agg
         # + tagged join) — cut the lineage so the assignment runs once
@@ -1322,25 +1313,15 @@ _BT_MARGIN = 1.25
 def _bitext_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import portable_round
     from ..functions.vector import dot_product, l2_norm
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        capped_cell_split,
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import capped_cell_split
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings").select(
+    corpus = full_corpus(spark, sf_dir)
+    # the pair math runs in double; the assignment is the corpus's one
+    # shared family, keyed on the raw scan
+    emb = corpus.emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    ).withColumnRenamed("cid", "cluster")
+    assign = corpus.assign.withColumnRenamed("cid", "cluster")
     assign = capped_cell_split(materialize(assign, "knn assignment", "lazy"), cap=_KNN_CAP)
     # the two collections: rank langs by document count IN-PLAN (a
     # broadcast 5-row aggregate over a 2-row window — plan construction

@@ -23,6 +23,7 @@ from ..streaming.ingest import (
     streaming_session,
     windowed_counts_availablenow,
 )
+from .embeddings_index import incoming_split
 from .registry import QuerySpec
 
 
@@ -623,21 +624,13 @@ def _drain_op_log(spark: SparkSession, sf_dir: str, prefix: str) -> dict:
     import os
     import uuid
 
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import ivf_assign_hier, ivf_seed_centroids
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
-    ns = hier_super_count(k)
+    split = incoming_split(sf_dir)
+    k, ns = split.k, split.ns  # BASE geometry — frozen at index build
     spark = streaming_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < cut)
+    base = split.base(emb)
     # ONE parent tempdir for the query's corpus-scale staging (op log,
     # delta index, tombstone log, checkpoint), removed by the query
     # scope once the result is materialized (ADVICE r14)
@@ -647,12 +640,10 @@ def _drain_op_log(spark: SparkSession, sf_dir: str, prefix: str) -> dict:
     # micro-batch carries inserts AND deletes (maxFilesPerTrigger=1).
     stage = os.path.join(parent, "ops")
     ops = (
-        emb.filter(F.col("vec_id") >= cut)
+        split.delta(emb)
         .select("vec_id", "embedding", F.lit("ins").alias("op"))
         .unionByName(
-            emb.filter(
-                (F.col("vec_id") < cut) & (F.col("vec_id") % 37 == 5)
-            ).select(
+            split.tombstones(emb).select(
                 "vec_id",
                 F.lit(None).cast("array<float>").alias("embedding"),
                 F.lit("del").alias("op"),

@@ -28,6 +28,7 @@ from ..functions.text import portable_round
 from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
+from .embeddings_index import full_corpus, incoming_split
 from .registry import QuerySpec
 
 
@@ -798,25 +799,15 @@ def _semdedup_fenced(
     115.4M pairs / a >50-minute straggler.  ``cap=None`` keeps the
     uncapped fence as the measured baseline (``semdedup_uncapped``)."""
     from ..functions.vector import dot_product, l2_norm
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        capped_cell_split,
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
+    from ..operators.ann import capped_cell_split
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
+    corpus = full_corpus(spark, sf_dir)
+    # the pair math runs in double; the assignment is the corpus's one
+    # shared family, keyed on the raw scan
+    emb = corpus.emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assigned = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    ).withColumnRenamed("cid", "cluster")
+    assigned = corpus.assign.withColumnRenamed("cid", "cluster")
     if cap is not None:
         # capped_cell_split consumes the assignment TWICE (the cell-size
         # aggregate and the tagged join) — cut the lineage so the
@@ -1508,29 +1499,15 @@ SPECS["centroid_outlier_prune"] = QuerySpec(
 
 
 def _ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
-        scaled_cluster_count,
-    )
-
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    cut = n - max(50, n // 10)
-    emb = load_table(spark, sf_dir, "embeddings")
     # Two-level assignment (r9): with k ~ n/125, flat assignment is the
     # n*k = n^2/125 quadratic the wave-11 probe surfaced (16x point
     # 4.0x); hier is n*(1+nprobe)*sqrt(k), oracle-replayed via the
     # shared CTE chain (plans/ivf_sql.py).  Routed through the r11
     # build-once index seam (the session memo's part for this corpus).
-    from ..operators.ivf_index import shared_hier_assignment
-
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
-    tagged = assign.select(
+    corpus = full_corpus(spark, sf_dir)
+    # unclamped, as the oracle renders it (incoming_split clamps)
+    cut = corpus.n - max(50, corpus.n // 10)
+    tagged = corpus.assign.select(
         "cid",
         F.when(F.col("vec_id") >= cut, "new")
         .when(F.col("vec_id") % 37 == 5, "tomb")
@@ -1607,29 +1584,9 @@ SPECS["ivf_maintenance"] = QuerySpec(
 def _ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import hier_super_count, scaled_cluster_count
-    from ..operators.ivf_index import shared_hier_assignment_delta
-
-    n = parquet_row_count(sf_dir, "embeddings")
-    # clamp: on a corpus of <= 50 rows the "incoming batch" convention
-    # would leave an EMPTY base (no centroids — Spark would emit NULL
-    # cids while the oracle's empty hier chain emits zero rows); a
-    # 1-row base keeps both engines on the same degenerate-but-defined
-    # arm (r12 adversarial review; planted 40-row test pins parity)
-    cut = max(1, n - max(50, n // 10))
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
+    split = incoming_split(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment_delta(
-        spark,
-        emb.filter(F.col("vec_id") < cut),
-        emb.filter(F.col("vec_id") >= cut),
-        f"{sf_dir}/embeddings|base|{cut}",
-        f"{sf_dir}/embeddings|delta|{n - cut}",
-        k,
-        hier_super_count(k),
-    )
-    return assign.filter(F.col("vec_id") >= cut).select(
+    return split.delta(split.delta_assignment(spark, emb)).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("cid").cast("long").alias("cid"),
         F.count(F.lit(1))
@@ -1682,38 +1639,13 @@ SPECS["ivf_delta_assign"] = QuerySpec(
 
 
 def _ivf_chain_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import hier_super_count, scaled_cluster_count
-    from ..operators.ivf_index import shared_hier_assignment_chain
-
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
-    s = (n - cut) // 3
-    b1, b2 = cut + s, cut + 2 * s
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
+    split = incoming_split(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment_chain(
-        spark,
-        emb.filter(F.col("vec_id") < cut),
-        [
-            emb.filter((F.col("vec_id") >= cut) & (F.col("vec_id") < b1)),
-            emb.filter((F.col("vec_id") >= b1) & (F.col("vec_id") < b2)),
-            emb.filter(F.col("vec_id") >= b2),
-        ],
-        f"{sf_dir}/embeddings|base|{cut}",
-        [
-            f"{sf_dir}/embeddings|cyc1|{cut}-{b1}",
-            f"{sf_dir}/embeddings|cyc2|{b1}-{b2}",
-            f"{sf_dir}/embeddings|cyc3|{b2}-{n}",
-        ],
-        k,
-        hier_super_count(k),
-    )
-    return assign.filter(F.col("vec_id") >= cut).select(
+    return split.delta(split.chain_assignment(spark, emb)).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("cid").cast("long").alias("cid"),
-        F.when(F.col("vec_id") < b1, 1)
-        .when(F.col("vec_id") < b2, 2)
+        F.when(F.col("vec_id") < split.b1, 1)
+        .when(F.col("vec_id") < split.b2, 2)
         .otherwise(3)
         .cast("int")
         .alias("cycle"),
@@ -1772,29 +1704,12 @@ SPECS["ivf_chain_assign"] = QuerySpec(
 
 def _topk_ivf_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import hier_super_count, scaled_cluster_count
-    from ..operators.ivf_index import (
-        exclude_tombstones,
-        shared_hier_assignment_delta,
-    )
+    from ..operators.ivf_index import exclude_tombstones
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
+    split = incoming_split(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment_delta(
-        spark,
-        emb.filter(F.col("vec_id") < cut),
-        emb.filter(F.col("vec_id") >= cut),
-        f"{sf_dir}/embeddings|base|{cut}",
-        f"{sf_dir}/embeddings|delta|{n - cut}",
-        k,
-        hier_super_count(k),
-    )
-    tombs = emb.filter(
-        (F.col("vec_id") < cut) & (F.col("vec_id") % 37 == 5)
-    ).select("vec_id")
+    assign = split.delta_assignment(spark, emb)
+    tombs = split.tombstones(emb).select("vec_id")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     qcid = assign.filter(F.col("vec_id") == 0).select(F.col("cid").alias("qcid"))
     shortlist = assign.join(
@@ -1871,25 +1786,13 @@ SPECS["topk_ivf_tombstone"] = QuerySpec(
 
 def _topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
     # the SAME build-once family every full-corpus consumer rides
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     qcells = route_query_cells(
-        q, ivf_seed_centroids(emb, k), hier_super_count(k), n_cells=2
+        q, ivf_seed_centroids(emb, k), ns, n_cells=2
     )
     shortlist = assign.join(F.broadcast(qcells), "cid")
     return (
@@ -1970,16 +1873,8 @@ SPECS["topk_ivf_filtered"] = QuerySpec(
 
 def _maxsim_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import hier_super_count, scaled_cluster_count
-    from ..operators.ivf_index import shared_hier_assignment
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, hier_super_count(k)
-    )
+    emb, *_, assign = full_corpus(spark, sf_dir)
     qt = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -2073,51 +1968,18 @@ SPECS["maxsim_retrieve"] = QuerySpec(
 
 def _topk_ivf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import (
-        exclude_tombstones,
-        shared_hier_assignment_chain,
-    )
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
+    from ..operators.ivf_index import exclude_tombstones
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    cut = max(1, n - max(50, n // 10))
-    s = (n - cut) // 3
-    b1, b2 = cut + s, cut + 2 * s
-    k = scaled_cluster_count(cut)  # BASE geometry — frozen at index build
-    ns = hier_super_count(k)
+    split = incoming_split(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") < cut)
     # grow: 3 chained cycles, quantizer frozen at the base corpus
-    assign = shared_hier_assignment_chain(
-        spark,
-        base,
-        [
-            emb.filter((F.col("vec_id") >= cut) & (F.col("vec_id") < b1)),
-            emb.filter((F.col("vec_id") >= b1) & (F.col("vec_id") < b2)),
-            emb.filter(F.col("vec_id") >= b2),
-        ],
-        f"{sf_dir}/embeddings|base|{cut}",
-        [
-            f"{sf_dir}/embeddings|cyc1|{cut}-{b1}",
-            f"{sf_dir}/embeddings|cyc2|{b1}-{b2}",
-            f"{sf_dir}/embeddings|cyc3|{b2}-{n}",
-        ],
-        k,
-        ns,
-    )
-    tombs = emb.filter(
-        (F.col("vec_id") < cut) & (F.col("vec_id") % 37 == 5)
-    ).select("vec_id")
+    assign = split.chain_assignment(spark, emb)
+    tombs = split.tombstones(emb).select("vec_id")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     # route: 2-cell widened probe off the SAME frozen base centroids
     qcells = route_query_cells(
-        q, ivf_seed_centroids(base, k), ns, n_cells=2
+        q, ivf_seed_centroids(split.base(emb), split.k), split.ns, n_cells=2
     )
     shortlist = assign.join(F.broadcast(qcells), "cid")
     live = exclude_tombstones(shortlist, tombs)  # deletes, O(candidates)
@@ -2208,23 +2070,10 @@ _SQ8_RERANK = 20
 
 def _topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    emb = load_table(spark, sf_dir, "embeddings")
     # the SAME build-once family every full-corpus consumer rides
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, ns
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     qcode = _quantized(emb.filter(F.col("vec_id") == 0)).select(
         F.col("q").cast("array<double>").alias("qc")
     )
@@ -2815,23 +2664,10 @@ SPECS["topk_binary_rerank"] = QuerySpec(
 
 def _topk_ivf_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    emb = load_table(spark, sf_dir, "embeddings")
     # the SAME build-once family every full-corpus consumer rides
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, ns
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     qc = (
         emb.filter(F.col("vec_id") == 0)
         .select(
@@ -2958,22 +2794,9 @@ _CASCADE_T1, _CASCADE_T2 = 64, _SQ8_RERANK
 
 def _topk_ivf_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, ns
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     qb = emb.filter(F.col("vec_id") == 0).select(
         _pack_sign_bits("embedding", 0).alias("qlo"),
@@ -3135,22 +2958,9 @@ def _topk_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, ns
-    )
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     qset = emb.filter(F.col("vec_id") < _BATCH_Q).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -3253,16 +3063,9 @@ _QRM_SHORTLIST = 64
 
 def _quant_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import cosine_similarity
-    from ..io.sources import parquet_row_count
-    from ..operators.ann import (
-        hier_super_count,
-        ivf_seed_centroids,
-        route_query_cells,
-        scaled_cluster_count,
-    )
-    from ..operators.ivf_index import shared_hier_assignment
+    from ..operators.ann import ivf_seed_centroids, route_query_cells
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, _, k, ns, assign = full_corpus(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     grid = lambda c: F.floor(c * 10000 + 0.5).cast("long")  # noqa: E731
     exact = (
@@ -3304,12 +3107,6 @@ def _quant_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2-cell IVF probe — the operating point topk_ivf_binary actually
     # serves, so the router's recall cost on top of the quantizer's is a
     # measured number, not a claim
-    n = parquet_row_count(sf_dir, "embeddings")
-    k = scaled_cluster_count(n)
-    ns = hier_super_count(k)
-    assign = shared_hier_assignment(
-        spark, emb, f"{sf_dir}/embeddings|{n}", k, ns
-    )
     qcells = route_query_cells(q, ivf_seed_centroids(emb, k), ns, n_cells=2)
     cand = assign.join(F.broadcast(qcells), "cid").select("vec_id")
     bin_routed_ranked = (

@@ -1287,3 +1287,41 @@ def test_batched_serving_equals_per_query_serving(spark):
         )
         expected = [(r.vec_id, r.s / 10000) for r in single]
         assert by_qid[qid] == expected, qid
+
+
+def test_full_corpus_consumers_share_one_family(spark, monkeypatch):
+    """The double-precision pair queries (semdedup, knn_graph_ivf,
+    bitext_margin_pairs) and a float serving query (topk_ivf_filtered)
+    take their assignment from ONE hier family for the embeddings
+    corpus token: the seam input is the raw scan for all of them, so
+    the vector dtype no longer splits the corpus into two builds."""
+    from signal_messenger_vector_database_spark.operators import ivf_index
+    from signal_messenger_vector_database_spark.plans.catalog import all_specs
+
+    monkeypatch.delenv("SMVD_IVF_MEMO", raising=False)
+    # isolate: earlier tests' families must not count here
+    ivf_index._SESSION_MEMO.pop(spark, None)
+    specs = all_specs()
+    for name in (
+        "semdedup", "knn_graph_ivf", "bitext_margin_pairs", "topk_ivf_filtered"
+    ):
+        assert specs[name].fn(spark, SF).collect(), name
+    _emb, n, _k, _ns = _load(spark)
+    token = f"{SF}/embeddings|{n}"
+    families = [
+        fam for fam in ivf_index._SESSION_MEMO[spark]
+        if fam[0] == "hier" and fam[1] == token
+    ]
+    assert len(families) == 1, families
+
+
+def test_embeddings_index_conventions_have_one_owner():
+    """plans/embeddings_index.py is the only plan code that spells the
+    embeddings corpus's memo token or the clamped incoming-batch cut; a
+    plan that re-derived either by hand could key a second index."""
+    from tests.test_materialize import _engine_lines
+
+    forms = r"sf_dir\}/embeddings\||max\(1, \w+ - max\(50, \w+ // 10\)\)"
+    hits = _engine_lines(forms, subs=("plans",))
+    owner = "signal_messenger_vector_database_spark/plans/embeddings_index.py"
+    assert hits and {h.split(":")[0] for h in hits} == {owner}, hits

@@ -236,22 +236,24 @@ def test_ivf_recall_clustered_curve_shape(spark):
 
 
 def test_clustered_dyadic_arithmetic_is_exact_across_runtimes(spark):
-    """ivf_recall_clustered ranks query routing at PLAN time in Python,
-    trusting that every dyadic component and squared-L2 fold replays the
-    exact doubles Spark (and therefore the DuckDB oracle) computes.
-    That claim is mathematical (components are multiples of 2^-20 with
-    bounded magnitude, so all sums stay exact in 53-bit significands) —
-    this test pins it empirically: Spark-evaluated vectors and pair
-    distances must equal the pure-Python replay BIT-FOR-BIT (==, no
-    tolerance), including across fold orders."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
+    """ivf_recall_clustered and ivf_pq_clustered_curve rank query routing
+    at PLAN time in Python, trusting that every dyadic component and
+    squared-L2 fold replays the exact doubles Spark (and therefore the
+    DuckDB oracle) computes.  That claim is mathematical (components are
+    multiples of 2^-20 with bounded magnitude, so all sums stay exact in
+    53-bit significands) — this test pins it empirically for both vector
+    forms the queries run: the Spark-evaluated ``_cl_vec_expr`` and
+    ``_rc_vec_expr`` columns must equal their Python replays
+    ``_cl_vec_py`` and ``_rc_vec_py`` BIT-FOR-BIT (==, no tolerance), and
+    pair distances must agree across fold orders."""
     from signal_messenger_vector_database_spark.functions.vector import squared_l2
+    from signal_messenger_vector_database_spark.plans.ivfpq_clustered import (
+        _rc_vec_expr,
+        _rc_vec_py,
+    )
     from signal_messenger_vector_database_spark.plans.retrieval_eval import (
-        _CL_D,
-        _cl_vec,
+        _cl_vec_expr,
+        _cl_vec_py,
     )
 
     topics = [f"lang{i % 7}|src{i % 13}" for i in range(40)] + [
@@ -260,25 +262,17 @@ def test_clustered_dyadic_arithmetic_is_exact_across_runtimes(spark):
     ]
     rows = [(i, t, f"d{i}") for i, t in enumerate(topics)]
     df = spark.createDataFrame(rows, "rid int, topic string, tag string")
-    got = {
-        r["rid"]: r["v"]
-        for r in df.select(
-            "rid", _cl_vec(F.col("topic"), F.col("tag")).alias("v")
-        ).collect()
+    got = df.select(
+        "rid",
+        _cl_vec_expr("topic", "tag").alias("cl"),
+        _rc_vec_expr("topic", "tag").alias("rc"),
+    ).collect()
+
+    expect = {i: _cl_vec_py(t, g) for i, t, g in rows}
+    assert {r["rid"]: r["cl"] for r in got} == expect  # every component
+    assert {r["rid"]: r["rc"] for r in got} == {
+        i: _rc_vec_py(t, g) for i, t, g in rows
     }
-
-    def h4(s: str) -> int:
-        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:4], 16)
-
-    def py_vec(topic: str, tag: str) -> list[float]:
-        return [
-            h4(f"{topic}:{i}") / 65536.0
-            + (h4(f"{tag}:{i}") / 65536.0 - 0.5) / 16.0
-            for i in range(_CL_D)
-        ]
-
-    expect = {i: py_vec(t, g) for i, t, g in rows}
-    assert got == expect  # exact equality, every component
 
     # pair distances: Spark's zip_with/aggregate fold == Python's
     # left-to-right sum, exactly, for every consecutive pair

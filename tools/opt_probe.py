@@ -41,7 +41,6 @@ def main() -> None:
         import tempfile
 
         evdir = tempfile.mkdtemp(prefix="smvd_evlog_")
-        os.environ["SMVD_EVENTLOG_DIR"] = evdir
 
     from pyspark.sql import SparkSession
 
@@ -59,7 +58,9 @@ def main() -> None:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+        )
         .config("spark.ui.enabled", "false")
     )
     if evdir:
