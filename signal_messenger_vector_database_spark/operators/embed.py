@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
 

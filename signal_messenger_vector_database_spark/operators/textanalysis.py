@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN, portable_round, whitespace_words
+from ..functions.text import portable_round, whitespace_words
 
 # marker stopwords per language for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, tuple[str, ...]] = {

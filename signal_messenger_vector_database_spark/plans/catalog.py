@@ -45,37 +45,67 @@ _MODULES = (
 # Round-17 verification window — GENERATED by tools/window_rotate.py:
 #
 #   python tools/window_rotate.py \
-#       --changed=semdedup,semdedup_uncapped,semdedup_capped,\
+#       --changed=pq_recall_at_k,pq_recall_trained,quant_recall_matrix,\
+#                 ann_recall_at_k,pq_operating_point,dim_ablation_recall,\
+#                 ivf_recall_clustered,ivf_pq_clustered_curve,\
+#                 ivf_pq_operating_curve,filtered_recall_curve,\
+#                 bitext_mining_eval,topk_ivf_pq,stream_static_join,\
+#                 stream_sessionize,stream_sketch_quantiles,stream_lsh_dedup,\
+#                 assoc_rules,ccnet_buckets,dup_span_removal,\
+#                 centroid_outlier_prune,csv_roundtrip,jsonl_roundtrip,\
+#                 orc_roundtrip,schema_evolution,stream_ingest_index,\
+#                 pq_encode_trained,semdedup_trained,topk_l2,kmeans_fit_assign,\
+#                 kmeans_assign,kmeans_lloyd3,pq_encode,topk_pq_adc,\
+#                 topk_pq_rerank,semdedup,semdedup_uncapped,semdedup_capped,\
 #                 knn_graph_ivf,knn_graph_uncapped,bitext_margin_pairs,\
 #                 ivf_maintenance,topk_ivf_filtered,maxsim_retrieve,\
-#                 topk_ivf_sq8,topk_ivf_binary,topk_ivf_cascade,\
-#                 topk_ivf_batch,quant_recall_matrix,topk_ivf_pq_trained,\
-#                 ivf_pq_operating_curve,pq_operating_point,\
-#                 ann_recall_at_k,hard_negative_mining,ann_ivf_hier,\
-#                 filtered_recall_curve,ivf_delta_assign,\
-#                 ivf_chain_assign,topk_ivf_tombstone,topk_ivf_lifecycle,\
-#                 pq_encode_delta,stream_ivf_maintain,stream_ivf_compact,\
-#                 pq_recall_at_k,pagerank3,pagerank3_shuffle,\
-#                 triangle_count,suppression_filter,curation_attrition,\
-#                 dim_ablation_recall,bfs_khops,bpe_train,dsir_weights,\
-#                 dup_substring_spans,boilerplate_strip,\
-#                 curation_pipeline,bigram_logprob,collocations_pmi,\
-#                 neardup_clusters,minhash_lsh_pairs,\
-#                 minhash_jaccard_estimate,sorted_neighborhood,\
-#                 shingle_containment,dedup_quality_keep,\
-#                 stream_stream_join
+#                 topk_ivf_sq8,topk_ivf_binary,topk_ivf_cascade,topk_ivf_batch,\
+#                 topk_ivf_pq_trained,hard_negative_mining,ann_ivf_hier
 #
 # Input state (CORRECTNESS_r01-r16 latest-round histogram over paired
 # entries): r10:9 r11:50 r12:50 r13:50 r14:47 r16:50.
-# Slots: first the 28 queries whose build reaches a function edited when
-# plans/embeddings_index.py became the one owner of the embeddings
-# corpus's index setup (traced per catalog query over all 256 builds):
-# the six that used to key a second, double-typed family, then the other
-# full-corpus consumers, then the incoming-split consumers.  Then the 27
-# names the previous window left out, in their order, cut at 50: the
-# last 3 of them and the previous window's 24 other unverified names
-# wait (ROADMAP "Window overflow").
+# Slots: first the 12 queries whose plan code changed when
+# plans/recall.py became the one owner of recall scoring (the ten
+# scoring sites, plus bitext_mining_eval and topk_ivf_pq, which lost
+# unused imports).  Then the 27 names the previous window left out, in
+# their order (the 5 already listed keep their first slot), then the
+# previous window's other unverified names in its order, cut at 50: the
+# last 27 of them wait (ROADMAP "Window overflow").
 _WINDOW = [
+    "pq_recall_at_k",
+    "pq_recall_trained",
+    "quant_recall_matrix",
+    "ann_recall_at_k",
+    "pq_operating_point",
+    "dim_ablation_recall",
+    "ivf_recall_clustered",
+    "ivf_pq_clustered_curve",
+    "ivf_pq_operating_curve",
+    "filtered_recall_curve",
+    "bitext_mining_eval",
+    "topk_ivf_pq",
+    "stream_static_join",
+    "stream_sessionize",
+    "stream_sketch_quantiles",
+    "stream_lsh_dedup",
+    "assoc_rules",
+    "ccnet_buckets",
+    "dup_span_removal",
+    "centroid_outlier_prune",
+    "csv_roundtrip",
+    "jsonl_roundtrip",
+    "orc_roundtrip",
+    "schema_evolution",
+    "stream_ingest_index",
+    "pq_encode_trained",
+    "semdedup_trained",
+    "topk_l2",
+    "kmeans_fit_assign",
+    "kmeans_assign",
+    "kmeans_lloyd3",
+    "pq_encode",
+    "topk_pq_adc",
+    "topk_pq_rerank",
     "semdedup",
     "semdedup_uncapped",
     "semdedup_capped",
@@ -89,43 +119,9 @@ _WINDOW = [
     "topk_ivf_binary",
     "topk_ivf_cascade",
     "topk_ivf_batch",
-    "quant_recall_matrix",
     "topk_ivf_pq_trained",
-    "ivf_pq_operating_curve",
-    "pq_operating_point",
-    "ann_recall_at_k",
     "hard_negative_mining",
     "ann_ivf_hier",
-    "filtered_recall_curve",
-    "ivf_delta_assign",
-    "ivf_chain_assign",
-    "topk_ivf_tombstone",
-    "topk_ivf_lifecycle",
-    "pq_encode_delta",
-    "stream_ivf_maintain",
-    "stream_ivf_compact",
-    "pq_recall_at_k",
-    "pagerank3",
-    "pagerank3_shuffle",
-    "triangle_count",
-    "suppression_filter",
-    "curation_attrition",
-    "dim_ablation_recall",
-    "bfs_khops",
-    "bpe_train",
-    "dsir_weights",
-    "dup_substring_spans",
-    "boilerplate_strip",
-    "curation_pipeline",
-    "bigram_logprob",
-    "collocations_pmi",
-    "neardup_clusters",
-    "minhash_lsh_pairs",
-    "minhash_jaccard_estimate",
-    "sorted_neighborhood",
-    "shingle_containment",
-    "dedup_quality_keep",
-    "stream_stream_join",
 ]
 
 

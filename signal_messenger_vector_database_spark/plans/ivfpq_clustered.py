@@ -66,6 +66,7 @@ from ..functions.text import portable_round
 from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows, parquet_row_count
+from .recall import hit_counts, recall_curve, zero_filled
 from .registry import QuerySpec
 
 SPECS: dict[str, QuerySpec] = {}
@@ -357,38 +358,16 @@ def _ivf_pq_clustered_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         _RC_TOPK,
     ).select("qid", "vec_id")
 
-    hits = (
-        short.join(F.broadcast(exact), ["qid", "vec_id"])
-        .groupBy("np", "qid")
-        .agg(F.count(F.lit(1)).alias("nh"))
+    hits = hit_counts(
+        short, F.broadcast(exact), ["qid", "vec_id"], by=("np", "qid")
     )
     # tiny derived aggregates: explicit broadcasts (the EXPLAIN-audit
     # class — Catalyst has no stats for either side)
     grid = arms.crossJoin(F.broadcast(queries.select("qid")))
-    perq = grid.join(F.broadcast(hits), ["np", "qid"], "left").select(
-        "np", "qid", F.coalesce("nh", F.lit(0)).alias("nh")
-    )
     candn = cand.groupBy("np").agg(F.count(F.lit(1)).alias("sum_cand"))
-    denom = float(_RC_NQ * _RC_TOPK)
     return (
-        perq.groupBy("np")
-        .agg(
-            F.sum("nh").alias("nht"),
-            F.min(F.col("nh").cast("double") / F.lit(float(_RC_TOPK))).alias(
-                "recall_min"
-            ),
-        )
-        .join(F.broadcast(candn), "np")
-        .select(
-            F.col("np").cast("int").alias("nprobe"),
-            F.col("sum_cand").cast("long").alias("sum_cand"),
-            (
-                F.col("sum_cand").cast("double") / F.lit(float(_RC_NQ * n))
-            ).alias("cand_frac"),
-            F.col("nht").cast("long").alias("n_hits"),
-            (F.col("nht").cast("double") / F.lit(denom)).alias("recall_mean"),
-            "recall_min",
-        )
+        recall_curve(zero_filled(grid, hits), candn, _RC_NQ, _RC_TOPK, n)
+        .withColumnRenamed("np", "nprobe")
         .orderBy("nprobe")
     )
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import TOKEN_PATTERN, fingerprint_md5, token_count
+from ..functions.text import fingerprint_md5, token_count
 from ..functions.vector import cosine_similarity, l2_distance
 from ..io.sources import load_table, local_rows
 from ..operators.chunking import chunk_text

@@ -61,6 +61,7 @@ from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
 from .embeddings_index import corpus_token, full_corpus, incoming_split
+from .recall import hit_counts, recall_curve, zero_filled
 from .registry import QuerySpec
 
 SPECS: dict[str, QuerySpec] = {}
@@ -388,21 +389,15 @@ def _pq_operating_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived aggregates whose stats Catalyst can't see, and the default
     # plan was a SortMergeJoin on a 5-row side (caught in the EXPLAIN
     # audit).
-    hits = (
-        short.join(F.broadcast(exact), ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
+    hits = hit_counts(short, F.broadcast(exact), ["qid", "vec_id"], by=("qid",))
     return (
-        qfull.select("qid")
-        .join(F.broadcast(hits), "qid", "left")
+        zero_filled(qfull.select("qid"), hits)
         .select(
             "qid",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_short_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(_OPTOPK))
-            ).alias("shortlist_recall"),
+            F.col("nh").alias("n_short_hits"),
+            (F.col("nh").cast("double") / F.lit(float(_OPTOPK))).alias(
+                "shortlist_recall"
+            ),
         )
         .orderBy("qid")
     )
@@ -663,23 +658,11 @@ def _dim_ablation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the d=64 arm IS the ground truth — recall 1.0 by construction;
         # reuse `exact` instead of re-scanning the corpus
         approx = exact if d == 64 else topk_ids(d)
-        hits = (
-            approx
-            .join(exact, ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        row = (
-            qfull.select("qid")
-            .join(F.broadcast(hits), "qid", "left")
-            .select(
-                F.lit(d).cast("int").alias("dim"),
-                "qid",
-                (
-                    F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                    / F.lit(float(_OPTOPK))
-                ).alias("recall"),
-            )
+        hits = hit_counts(approx, exact, ["qid", "vec_id"], by=("qid",))
+        row = zero_filled(qfull.select("qid"), hits).select(
+            F.lit(d).cast("int").alias("dim"),
+            "qid",
+            (F.col("nh").cast("double") / F.lit(float(_OPTOPK))).alias("recall"),
         )
         out = row if out is None else out.unionByName(row)
     return out.orderBy("dim", "qid")
@@ -852,18 +835,13 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("arm", "qid", "vec_id")
 
     exact = _op_exact_topk(spark, sf_dir, qfull)
-    hits = (
-        short.join(F.broadcast(exact), ["qid", "vec_id"])
-        .groupBy("arm", "qid")
-        .agg(F.count(F.lit(1)).alias("nh"))
+    hits = hit_counts(
+        short, F.broadcast(exact), ["qid", "vec_id"], by=("arm", "qid")
     )
     # 25-row grid left-joining a <=25-row derived aggregate: both sides
     # are stats-free aggregates, so without hints Catalyst planned a
     # SortMergeJoin + CartesianProduct here (the r9 EXPLAIN-audit class)
     grid = arms.crossJoin(F.broadcast(qfull.select("qid")))
-    perq = grid.join(F.broadcast(hits), ["arm", "qid"], "left").select(
-        "arm", "np", "qid", F.coalesce("nh", F.lit(0)).alias("nh")
-    )
     # 'all' candidate count is exactly |Q| * n (one assignment row per
     # embedding row, every cell probed) — the split above removed the
     # O(|Q| * n) rows from cand, so the row is emitted as a literal
@@ -873,27 +851,8 @@ def _ivf_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         local_rows(spark, [("all", len(qs) * n)], "arm string, sum_cand long")
     )
     return (
-        perq.groupBy("arm", "np")
-        .agg(
-            F.sum("nh").alias("nht"),
-            F.min(F.col("nh").cast("double") / F.lit(float(_OPTOPK))).alias(
-                "recall_min"
-            ),
-        )
-        .join(F.broadcast(candn), "arm")
-        .select(
-            "arm",
-            F.col("np").cast("int").alias("nprobe_eff"),
-            F.col("sum_cand").cast("long").alias("sum_cand"),
-            (F.col("sum_cand").cast("double") / F.lit(float(len(qs) * n))).alias(
-                "cand_frac"
-            ),
-            F.col("nht").cast("long").alias("n_hits"),
-            (F.col("nht").cast("double") / F.lit(float(len(qs) * _OPTOPK))).alias(
-                "recall_mean"
-            ),
-            "recall_min",
-        )
+        recall_curve(zero_filled(grid, hits), candn, len(qs), _OPTOPK, n)
+        .withColumnRenamed("np", "nprobe_eff")
         .orderBy("nprobe_eff", "arm")
     )
 

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..io.sources import load_table
 from ..operators.topk import topk_per_group

@@ -56,6 +56,7 @@ from ..io.sources import load_table, local_rows, parquet_row_count
 from ..operators.ann import hier_super_count, ivf_assign_hier
 from .embeddings_index import full_corpus
 from .ivf_sql import HIER_ASSIGN_CTES as _HIER_ASSIGN_CTES
+from .recall import hit_counts, recall_curve, zero_filled
 from .registry import QuerySpec
 from .similarity import _SQL_COS
 
@@ -147,20 +148,11 @@ def _ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "vec_id")
     )
 
-    hits = approx.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return (
-        anchors.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(_RECALL_K))
-            ).alias("recall"),
-        )
+    hits = hit_counts(approx, exact, ["qid", "vec_id"], by=("qid",))
+    return zero_filled(anchors.select("qid"), hits).select(
+        "qid",
+        F.col("nh").alias("n_hits"),
+        (F.col("nh").cast("double") / F.lit(float(_RECALL_K))).alias("recall"),
     )
 
 
@@ -626,38 +618,16 @@ def _ivf_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CL_TOPK,
     ).select("qid", "doc_id")
 
-    hits = (
-        short.join(F.broadcast(exact), ["qid", "doc_id"])
-        .groupBy("np", "qid")
-        .agg(F.count(F.lit(1)).alias("nh"))
+    hits = hit_counts(
+        short, F.broadcast(exact), ["qid", "doc_id"], by=("np", "qid")
     )
     # tiny derived aggregates: explicit broadcasts (the EXPLAIN-audit
     # class — Catalyst has no stats for either side)
     grid = arms.crossJoin(F.broadcast(queries.select("qid")))
-    perq = grid.join(F.broadcast(hits), ["np", "qid"], "left").select(
-        "np", "qid", F.coalesce("nh", F.lit(0)).alias("nh")
-    )
     candn = cand.groupBy("np").agg(F.count(F.lit(1)).alias("sum_cand"))
-    denom = float(_CL_NQ * _CL_TOPK)
     return (
-        perq.groupBy("np")
-        .agg(
-            F.sum("nh").alias("nht"),
-            F.min(F.col("nh").cast("double") / F.lit(float(_CL_TOPK))).alias(
-                "recall_min"
-            ),
-        )
-        .join(F.broadcast(candn), "np")
-        .select(
-            F.col("np").cast("int").alias("nprobe"),
-            F.col("sum_cand").cast("long").alias("sum_cand"),
-            (
-                F.col("sum_cand").cast("double") / F.lit(float(_CL_NQ * n))
-            ).alias("cand_frac"),
-            F.col("nht").cast("long").alias("n_hits"),
-            (F.col("nht").cast("double") / F.lit(denom)).alias("recall_mean"),
-            "recall_min",
-        )
+        recall_curve(zero_filled(grid, hits), candn, _CL_NQ, _CL_TOPK, n)
+        .withColumnRenamed("np", "nprobe")
         .orderBy("nprobe")
     )
 
@@ -835,9 +805,7 @@ def _filtered_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("sim"), F.asc("vec_id")],
         _FRC_K,
     ).select("qid", "vec_id")
-    hits = topk.join(exact, ["qid", "vec_id"]).groupBy("arm").agg(
-        F.count(F.lit(1)).alias("hits")
-    )
+    hits = hit_counts(topk, exact, ["qid", "vec_id"], by=("arm",))
     return (
         short.groupBy("arm")
         .agg(F.count(F.lit(1)).alias("n_cand"))
@@ -847,9 +815,9 @@ def _filtered_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("arm").cast("int").alias("arm"),
             F.col("n_cand").cast("long").alias("n_cand"),
             F.coalesce(F.col("n_filtered"), F.lit(0)).cast("long").alias("n_filtered"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
+            F.coalesce(F.col("nh"), F.lit(0)).cast("long").alias("hits"),
             (
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
+                F.coalesce(F.col("nh"), F.lit(0)).cast("double")
                 / F.lit(float(_FRC_NQ * _FRC_K))
             ).alias("recall"),
         )
@@ -1008,8 +976,6 @@ def _bitext_mining_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import (
         capped_cell_split,
         hier_super_count,
-        ivf_assign_hier,
-        ivf_seed_centroids,
         scaled_cluster_count,
     )
     from .similarity import _KNN_CAP, bt_margin_core

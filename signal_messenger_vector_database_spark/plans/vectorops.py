@@ -29,6 +29,7 @@ from ..functions.vector import squared_l2, squared_l2_sql
 from ..io.materialize import materialize
 from ..io.sources import load_table, local_rows
 from .embeddings_index import full_corpus, incoming_split
+from .recall import hit_counts
 from .registry import QuerySpec
 
 
@@ -1211,7 +1212,6 @@ SPECS["pq_encode_trained"] = QuerySpec(
 
 
 def _topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vector import cosine_similarity
     from ..operators.ann import ivf_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2305,6 +2305,11 @@ SPECS["embedding_drift"] = QuerySpec(
 # both arms reuse proven machinery (shared LUT literals, the
 # kmeans-style list-fold L2).
 
+# k of both PQ recall rows: it sets the exact and the trained-ADC top-k
+# limits and the recall denominators.  pq_recall_at_k's approximate side
+# is topk_pq_adc's own top-10, so k must stay 10.
+_PQ_RECALL_K = 10
+
 
 def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = _topk_pq_adc(spark, sf_dir).select("vec_id")
@@ -2319,21 +2324,8 @@ def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(100)
         .select("vec_id")
     )
-    exact = _exact_l2_top10(spark, sf_dir)
-    hits = approx.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits")
-    )
-    short_hits = short100.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_short_hits")
-    )
-    return hits.crossJoin(short_hits).select(
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(10.0)).alias("recall"),
-        "n_short_hits",
-        (F.col("n_short_hits").cast("double") / F.lit(10.0)).alias(
-            "shortlist_recall"
-        ),
-    )
+    exact = _exact_l2_topk(spark, sf_dir)
+    return _recall_row(approx, short100, exact, _PQ_RECALL_K)
 
 
 def _pq_recall_sql() -> str:
@@ -2395,17 +2387,36 @@ SPECS["pq_recall_at_k"] = QuerySpec(
 # isotropic vectors where PQ is hardest.
 
 
-def _exact_l2_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact squared-L2 top-10 for the PQ literal query vector — shared
-    ground truth for both PQ recall measurements."""
+def _exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact squared-L2 top-``_PQ_RECALL_K`` for the PQ literal query
+    vector — shared ground truth for both PQ recall measurements."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = F.array(*[F.lit(x) for x in _pq_query_vec()]).cast("array<double>")
     d2 = squared_l2(F.col("embedding").cast("array<double>"), qv)
     return (
         emb.select("vec_id", portable_round(d2, 4).alias("d2"))
         .orderBy("d2", "vec_id")
-        .limit(10)
+        .limit(_PQ_RECALL_K)
         .select("vec_id")
+    )
+
+
+def _recall_row(
+    top: DataFrame, short: DataFrame, exact: DataFrame, k: int
+) -> DataFrame:
+    """One row: the hits of an approximate top-``k`` and of its longer
+    shortlist in the exact top-``k``, and both recalls@``k``."""
+    hits = hit_counts(top, exact, "vec_id").withColumnRenamed("nh", "n_hits")
+    short_hits = hit_counts(short, exact, "vec_id").withColumnRenamed(
+        "nh", "n_short_hits"
+    )
+    return hits.crossJoin(short_hits).select(
+        "n_hits",
+        (F.col("n_hits").cast("double") / F.lit(float(k))).alias("recall"),
+        "n_short_hits",
+        (F.col("n_short_hits").cast("double") / F.lit(float(k))).alias(
+            "shortlist_recall"
+        ),
     )
 
 
@@ -2444,26 +2455,13 @@ def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("ld_q").alias("adc_q"))
     )
     approx = (
-        dists.orderBy("adc_q", "vec_id").limit(10).select("vec_id")
+        dists.orderBy("adc_q", "vec_id").limit(_PQ_RECALL_K).select("vec_id")
     )
     short100 = (
         dists.orderBy("adc_q", "vec_id").limit(100).select("vec_id")
     )
-    exact = _exact_l2_top10(spark, sf_dir)
-    hits = approx.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_hits")
-    )
-    short_hits = short100.join(exact, "vec_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_short_hits")
-    )
-    return hits.crossJoin(short_hits).select(
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(10.0)).alias("recall"),
-        "n_short_hits",
-        (F.col("n_short_hits").cast("double") / F.lit(10.0)).alias(
-            "shortlist_recall"
-        ),
-    )
+    exact = _exact_l2_topk(spark, sf_dir)
+    return _recall_row(approx, short100, exact, _PQ_RECALL_K)
 
 
 def _pq_recall_trained_sql() -> str:
@@ -3117,25 +3115,12 @@ def _quant_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def row(method: str, ranked: DataFrame) -> DataFrame:
-        top = ranked.limit(_QRM_K).select("vec_id")
-        short = ranked.limit(_QRM_SHORTLIST).select("vec_id")
-        hits = top.join(exact, "vec_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_hits")
-        )
-        short_hits = short.join(exact, "vec_id").agg(
-            F.count(F.lit(1)).cast("long").alias("n_short_hits")
-        )
-        return hits.crossJoin(short_hits).select(
-            F.lit(method).alias("method"),
-            "n_hits",
-            (F.col("n_hits").cast("double") / F.lit(float(_QRM_K))).alias(
-                "recall"
-            ),
-            "n_short_hits",
-            (
-                F.col("n_short_hits").cast("double") / F.lit(float(_QRM_K))
-            ).alias("shortlist_recall"),
-        )
+        return _recall_row(
+            ranked.limit(_QRM_K).select("vec_id"),
+            ranked.limit(_QRM_SHORTLIST).select("vec_id"),
+            exact,
+            _QRM_K,
+        ).select(F.lit(method).alias("method"), "*")
 
     return (
         row("binary", bin_ranked)

@@ -62,6 +62,40 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
     assert real is not r16_history  # sanity: we really swapped it
 
     changed = [
+        "pq_recall_at_k",
+        "pq_recall_trained",
+        "quant_recall_matrix",
+        "ann_recall_at_k",
+        "pq_operating_point",
+        "dim_ablation_recall",
+        "ivf_recall_clustered",
+        "ivf_pq_clustered_curve",
+        "ivf_pq_operating_curve",
+        "filtered_recall_curve",
+        "bitext_mining_eval",
+        "topk_ivf_pq",
+        "stream_static_join",
+        "stream_sessionize",
+        "stream_sketch_quantiles",
+        "stream_lsh_dedup",
+        "assoc_rules",
+        "ccnet_buckets",
+        "dup_span_removal",
+        "centroid_outlier_prune",
+        "csv_roundtrip",
+        "jsonl_roundtrip",
+        "orc_roundtrip",
+        "schema_evolution",
+        "stream_ingest_index",
+        "pq_encode_trained",
+        "semdedup_trained",
+        "topk_l2",
+        "kmeans_fit_assign",
+        "kmeans_assign",
+        "kmeans_lloyd3",
+        "pq_encode",
+        "topk_pq_adc",
+        "topk_pq_rerank",
         "semdedup",
         "semdedup_uncapped",
         "semdedup_capped",
@@ -75,43 +109,9 @@ def test_window_rotate_matches_pinned_window(monkeypatch):
         "topk_ivf_binary",
         "topk_ivf_cascade",
         "topk_ivf_batch",
-        "quant_recall_matrix",
         "topk_ivf_pq_trained",
-        "ivf_pq_operating_curve",
-        "pq_operating_point",
-        "ann_recall_at_k",
         "hard_negative_mining",
         "ann_ivf_hier",
-        "filtered_recall_curve",
-        "ivf_delta_assign",
-        "ivf_chain_assign",
-        "topk_ivf_tombstone",
-        "topk_ivf_lifecycle",
-        "pq_encode_delta",
-        "stream_ivf_maintain",
-        "stream_ivf_compact",
-        "pq_recall_at_k",
-        "pagerank3",
-        "pagerank3_shuffle",
-        "triangle_count",
-        "suppression_filter",
-        "curation_attrition",
-        "dim_ablation_recall",
-        "bfs_khops",
-        "bpe_train",
-        "dsir_weights",
-        "dup_substring_spans",
-        "boilerplate_strip",
-        "curation_pipeline",
-        "bigram_logprob",
-        "collocations_pmi",
-        "neardup_clusters",
-        "minhash_lsh_pairs",
-        "minhash_jaccard_estimate",
-        "sorted_neighborhood",
-        "shingle_containment",
-        "dedup_quality_keep",
-        "stream_stream_join",
     ]
     window, prov = window_rotate.compute_window(changed, 50)
     assert window == _WINDOW
