@@ -686,11 +686,12 @@ def _adc_sql_expr(prefix: str = "codes.") -> str:
     )
 
 
-def _topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC top-k: a fixed query vector scores each encoded vector as the
-    SUM of per-subspace lookup distances.  The 8x16 LUT is computed
-    driver-side from the query vector + codebooks, quantized to 1e-4, and
-    inlined as literals (identical literals go into the oracle SQL, see
+def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADC ranking: a fixed query vector scores each encoded vector as the
+    SUM of per-subspace lookup distances, ordered by (distance, vec_id);
+    callers cut it at their own k.  The 8x16 LUT is computed driver-side
+    from the query vector + codebooks, quantized to 1e-4, and inlined as
+    literals (identical literals go into the oracle SQL, see
     ``_pq_lut``).  The scan reads only the 8 int codes — this is why PQ
     wins at 100 TB: the hot loop touches 8 bytes/vector, not 256, and the
     LUT is a k*m-value broadcast literal."""
@@ -705,20 +706,17 @@ def _topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact decimal result to DOUBLE, which rounds to the identical
     # nearest double.
     adc = _adc_spark_expr()
-    return (
-        codes.selectExpr(
-            "vec_id",
-            f"CAST(FLOOR(({adc}) * 10000 + 0.5) / 10000 AS DOUBLE) AS adc_dist",
-        )
-        .orderBy("adc_dist", "vec_id")
-        .limit(10)
-    )
+    return codes.selectExpr(
+        "vec_id",
+        f"CAST(FLOOR(({adc}) * 10000 + 0.5) / 10000 AS DOUBLE) AS adc_dist",
+    ).orderBy("adc_dist", "vec_id")
 
 
-def _topk_pq_adc_sql() -> str:
-    # The oracle consumes the SAME quantized LUT literals the Spark
-    # expression does; only the codes are computed in-database (and
-    # pq_encode is independently oracle-proven green).
+def _pq_adc_top_sql(k: int) -> str:
+    """DuckDB twin of ``_pq_adc_ranked(...).limit(k)``.  The oracle
+    consumes the SAME quantized LUT literals the Spark expression does;
+    only the codes are computed in-database (and pq_encode is
+    independently oracle-proven green)."""
     enc = _pq_encode_sql()
     adc = _adc_sql_expr()
     return f"""
@@ -726,8 +724,13 @@ WITH codes AS ({enc})
 SELECT codes.vec_id, CAST(FLOOR(({adc}) * 10000 + 0.5) / 10000 AS DOUBLE) AS adc_dist
 FROM codes
 ORDER BY adc_dist, vec_id
-LIMIT 10
+LIMIT {k}
 """
+
+
+def _topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ADC top-10 over the 8-byte codes."""
+    return _pq_adc_ranked(spark, sf_dir).limit(10)
 
 
 SPECS["pq_encode"] = QuerySpec(
@@ -737,7 +740,7 @@ SPECS["pq_encode"] = QuerySpec(
 )
 SPECS["topk_pq_adc"] = QuerySpec(
     _topk_pq_adc,
-    _topk_pq_adc_sql(),
+    _pq_adc_top_sql(10),
     "PQ asymmetric-distance top-k over 8-byte codes (ANN memory scale path)",
 )
 
@@ -2305,35 +2308,15 @@ SPECS["embedding_drift"] = QuerySpec(
 # both arms reuse proven machinery (shared LUT literals, the
 # kmeans-style list-fold L2).
 
-# k of both PQ recall rows: it sets the exact and the trained-ADC top-k
-# limits and the recall denominators.  pq_recall_at_k's approximate side
-# is topk_pq_adc's own top-10, so k must stay 10.
+# k of both PQ recall rows: it sets the ADC and exact top-k limits and
+# the recall denominators.  Both rows also score an ADC shortlist of
+# _PQ_SHORTLIST vectors against the same exact top-k.
 _PQ_RECALL_K = 10
+_PQ_SHORTLIST = 100
 
 
-def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    approx = _topk_pq_adc(spark, sf_dir).select("vec_id")
-    codes = _pq_encode(spark, sf_dir)
-    adc = _adc_spark_expr()
-    short100 = (
-        codes.selectExpr(
-            "vec_id",
-            f"CAST(FLOOR(({adc}) * 10000 + 0.5) / 10000 AS DOUBLE) AS adc_dist",
-        )
-        .orderBy("adc_dist", "vec_id")
-        .limit(100)
-        .select("vec_id")
-    )
-    exact = _exact_l2_topk(spark, sf_dir)
-    return _recall_row(approx, short100, exact, _PQ_RECALL_K)
-
-
-def _pq_recall_sql() -> str:
-    qv = "[" + ", ".join(repr(x) for x in _pq_query_vec()) + "]::DOUBLE[]"
-    return f"""
-WITH approx AS (SELECT vec_id FROM ({_topk_pq_adc_sql()})),
-q AS (SELECT {qv} AS qv),
-exact AS (
+# DuckDB twin of _exact_l2_topk; reads a q(qv) CTE
+_EXACT_L2_TOPK_CTE_TMPL = """exact AS (
   SELECT vec_id FROM (
     SELECT e.vec_id,
            FLOOR(list_sum(list_transform(range(1, len(e.embedding) + 1),
@@ -2342,24 +2325,49 @@ exact AS (
     FROM embeddings e, q
   )
   ORDER BY d2, vec_id
-  LIMIT 10
-)
+  LIMIT {k}
+)"""
+
+
+def _recall_row_sql() -> str:
+    """DuckDB twin of :func:`_recall_row` over ``approx``/``short100``/
+    ``exact`` CTEs, at k = ``_PQ_RECALL_K``."""
+    k = float(_PQ_RECALL_K)
+    return f"""h AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
+      FROM approx JOIN exact USING (vec_id)),
+sh AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_short_hits
+       FROM short100 JOIN exact USING (vec_id))
+SELECT h.n_hits, CAST(h.n_hits AS DOUBLE) / {k} AS recall,
+       sh.n_short_hits,
+       CAST(sh.n_short_hits AS DOUBLE) / {k} AS shortlist_recall
+FROM h CROSS JOIN sh
+"""
+
+
+def _pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = _pq_adc_ranked(spark, sf_dir)
+    return _recall_row(
+        ranked.limit(_PQ_RECALL_K).select("vec_id"),
+        ranked.limit(_PQ_SHORTLIST).select("vec_id"),
+        _exact_l2_topk(spark, sf_dir),
+        _PQ_RECALL_K,
+    )
+
+
+def _pq_recall_sql() -> str:
+    qv = "[" + ", ".join(repr(x) for x in _pq_query_vec()) + "]::DOUBLE[]"
+    return f"""
+WITH approx AS (SELECT vec_id FROM ({_pq_adc_top_sql(_PQ_RECALL_K)})),
+q AS (SELECT {qv} AS qv),
+{_EXACT_L2_TOPK_CTE_TMPL.format(k=_PQ_RECALL_K)}
 , short100 AS (
   SELECT codes.vec_id,
          CAST(FLOOR(({_adc_sql_expr()}) * 10000 + 0.5) / 10000 AS DOUBLE) AS adc_dist
   FROM ({_pq_encode_sql()}) codes
   ORDER BY adc_dist, vec_id
-  LIMIT 100
+  LIMIT {_PQ_SHORTLIST}
 ),
-h AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-      FROM approx JOIN exact USING (vec_id)),
-sh AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_short_hits
-       FROM short100 JOIN exact USING (vec_id))
-SELECT h.n_hits, CAST(h.n_hits AS DOUBLE) / 10.0 AS recall,
-       sh.n_short_hits,
-       CAST(sh.n_short_hits AS DOUBLE) / 10.0 AS shortlist_recall
-FROM h CROSS JOIN sh
-"""
+{_recall_row_sql()}"""
 
 
 SPECS["pq_recall_at_k"] = QuerySpec(
@@ -2420,19 +2428,6 @@ def _recall_row(
     )
 
 
-_EXACT_L2_TOP10_CTE_TMPL = """exact AS (
-  SELECT vec_id FROM (
-    SELECT e.vec_id,
-           FLOOR(list_sum(list_transform(range(1, len(e.embedding) + 1),
-                 i -> (e.embedding[i] - q.qv[i]) * (e.embedding[i] - q.qv[i])))
-                 * 10000 + 0.5) / 10000 AS d2
-    FROM embeddings e, q
-  )
-  ORDER BY d2, vec_id
-  LIMIT 10
-)"""
-
-
 def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     a2, trained = _pq_trained_parts(spark, sf_dir)
     q = _pq_query_vec()
@@ -2454,14 +2449,13 @@ def _pq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.sum("ld_q").alias("adc_q"))
     )
-    approx = (
-        dists.orderBy("adc_q", "vec_id").limit(_PQ_RECALL_K).select("vec_id")
+    ranked = dists.orderBy("adc_q", "vec_id")
+    return _recall_row(
+        ranked.limit(_PQ_RECALL_K).select("vec_id"),
+        ranked.limit(_PQ_SHORTLIST).select("vec_id"),
+        _exact_l2_topk(spark, sf_dir),
+        _PQ_RECALL_K,
     )
-    short100 = (
-        dists.orderBy("adc_q", "vec_id").limit(100).select("vec_id")
-    )
-    exact = _exact_l2_topk(spark, sf_dir)
-    return _recall_row(approx, short100, exact, _PQ_RECALL_K)
 
 
 def _pq_recall_trained_sql() -> str:
@@ -2487,18 +2481,10 @@ dists AS (
   FROM a2 JOIN lut l ON a2.sub_j = l.sub_j AND a2.code = l.code
   GROUP BY a2.vec_id
 ),
-approx AS (SELECT vec_id FROM dists ORDER BY adc_q, vec_id LIMIT 10),
-short100 AS (SELECT vec_id FROM dists ORDER BY adc_q, vec_id LIMIT 100),
-{_EXACT_L2_TOP10_CTE_TMPL},
-h AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits
-      FROM approx JOIN exact USING (vec_id)),
-sh AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_short_hits
-       FROM short100 JOIN exact USING (vec_id))
-SELECT h.n_hits, CAST(h.n_hits AS DOUBLE) / 10.0 AS recall,
-       sh.n_short_hits,
-       CAST(sh.n_short_hits AS DOUBLE) / 10.0 AS shortlist_recall
-FROM h CROSS JOIN sh
-"""
+approx AS (SELECT vec_id FROM dists ORDER BY adc_q, vec_id LIMIT {_PQ_RECALL_K}),
+short100 AS (SELECT vec_id FROM dists ORDER BY adc_q, vec_id LIMIT {_PQ_SHORTLIST}),
+{_EXACT_L2_TOPK_CTE_TMPL.format(k=_PQ_RECALL_K)},
+{_recall_row_sql()}"""
 
 
 SPECS["pq_recall_trained"] = QuerySpec(

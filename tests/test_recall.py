@@ -4,6 +4,8 @@ other plan module counts hits itself."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from signal_messenger_vector_database_spark.io.sources import local_rows
@@ -12,6 +14,7 @@ from signal_messenger_vector_database_spark.plans.recall import (
     recall_curve,
     zero_filled,
 )
+from tests.conftest import SF_SMALL
 from tests.test_materialize import _engine_lines
 
 _HIT_COUNT = (
@@ -102,3 +105,26 @@ def test_recall_curve(spark, shape):
         (4, 12, 0.6, 3, 0.75, 0.5),
         (8, 2, 0.1, 0, 0.0, 0.0),
     ]
+
+
+def test_pq_recall_k_has_one_owner(spark, monkeypatch):
+    """Both PQ recall rows take every top-k limit and recall denominator
+    from _PQ_RECALL_K, in Spark and in the oracle SQL; only the
+    shortlist keeps its own length."""
+    from signal_messenger_vector_database_spark.io import materialize
+    from signal_messenger_vector_database_spark.plans import vectorops as v
+    monkeypatch.setattr(v, "_PQ_RECALL_K", 5)
+    rows = (
+        (v._pq_recall_at_k, v._pq_recall_sql),
+        (v._pq_recall_trained, v._pq_recall_trained_sql),
+    )
+    for build, render in rows:
+        with materialize.scope():
+            plan = build(spark, SF_SMALL)._jdf.queryExecution().analyzed().toString()
+        # approx, shortlist, and the exact top-k on both sides of the row
+        limits = sorted(int(n) for n in re.findall(r"GlobalLimit (\d+)", plan))
+        assert limits == [5, 5, 5, 100], build.__name__
+        assert re.findall(r"/ (\d+\.\d+)\)", plan) == ["5.0", "5.0"]
+        sql = render()
+        assert sorted(int(n) for n in re.findall(r"LIMIT (\d+)", sql)) == [5, 5, 100]
+        assert re.findall(r"/ (\d+\.\d+) AS", sql) == ["5.0", "5.0"]

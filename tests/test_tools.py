@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import subprocess
 import sys
 
 import pytest
@@ -376,8 +378,8 @@ def test_connect_smoke_gate_and_slice_names():
 
 
 def test_warmup_dir_sits_beside_the_target_scale(tmp_path):
-    """Warm-up passes (bench.py, tools/decomp_probe.py, tools/opt_probe.py)
-    read the sf0.001 fixture beside $SPARK_GRAFT_SF_DIR, not a fixed
+    """Warm-up passes (bench.py, tools/scaling_probe.py) read the sf0.001
+    fixture beside $SPARK_GRAFT_SF_DIR, not a fixed
     path; with no such sibling they warm up on the target itself."""
     from signal_messenger_vector_database_spark.io.sources import warmup_dir
 
@@ -385,5 +387,60 @@ def test_warmup_dir_sits_beside_the_target_scale(tmp_path):
     assert warmup_dir(str(tmp_path / "sf0.1")) == str(tmp_path / "sf0.1")
     (tmp_path / "sf0.001").mkdir()
     assert warmup_dir(str(tmp_path / "sf0.1")) == str(tmp_path / "sf0.001")
-    for path in ("bench.py", "tools/decomp_probe.py", "tools/opt_probe.py"):
+    for path in ("bench.py", "tools/scaling_probe.py"):
         assert "testdata/sf0.001" not in open(os.path.join(REPO, path)).read(), path
+
+
+# --- the timing probe --------------------------------------------------------
+
+
+def test_one_session_factory_and_one_event_log_parser():
+    """Tools take their session from session.get_spark; the only two
+    that build their own are connect_smoke.py (a Spark Connect remote)
+    and oracle_check.py (the hostile local[3] layout).  The Spark event
+    log has one parser, perfbench/spans.py."""
+    tools = os.path.join(REPO, "tools")
+    builders = sorted(
+        f
+        for f in os.listdir(tools)
+        if f.endswith(".py")
+        and "SparkSession.builder" in open(os.path.join(tools, f)).read()
+    )
+    assert builders == ["connect_smoke.py", "oracle_check.py"]
+    marker = "SparkListener" + "JobStart"
+    parsers = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "perfbench"]
+        parsers += [
+            os.path.relpath(os.path.join(root, f), REPO)
+            for f in files
+            if f.endswith(".py") and marker in open(os.path.join(root, f)).read()
+        ]
+    assert parsers == []
+
+
+def test_probe_times_phases_through_spans(tmp_path):
+    """Two runs of one cheap query at sf0.001: a build/plan/action line
+    per run, then perfbench/spans.py's layer metrics as one JSON line,
+    with the query's noop write among the joined jobs.  The event-log
+    dir is gone when the probe exits."""
+    from tests.conftest import SF_SMALL
+
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF_SMALL,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        TMPDIR=str(tmp_path),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "scaling_probe.py"), "--runs=2", "tokenize"],
+        env=env, capture_output=True, text=True, timeout=600, check=True,
+    ).stdout.splitlines()
+    runs = [line for line in out if line.startswith("tokenize ")]
+    assert len(runs) == 2, out
+    for line in runs:
+        assert re.search(r"build=\S+ plan=\S+ action=\S+ total=\S+s$", line), line
+    rec = json.loads(out[-1])
+    assert rec["query"] == "tokenize" and rec["runs"] == 2
+    assert rec["spark_exec.jobs"] >= 1 and rec["plans.build_s"] > 0
+    assert not list(tmp_path.glob("smvd_probe_eventlog_*"))

@@ -1,37 +1,60 @@
-"""Empirical scaling probe: time the flagship scale operators at 1x, 4x,
-and 16x the sf0.1 fixture volume and report the observed growth ratios.
+"""Per-query timing probe: times named catalog queries, or a wave of
+them, at the fixture scale or at 1x/4x/16x replicas of it.
 
-The fixtures top out at sf0.1, which is enough for correctness but says
-nothing about how the plans GROW.  This tool replicates documents/
-embeddings k-fold into /tmp (doc_id/vec_id offset per replica so keys
-stay unique; each replica's text gets a one-token suffix and each
-replica's embedding is ROTATED by the replica index — norm-preserving,
-and a rotation's cosine against the original is ~0 for this data — so
-the near-dup/similarity DENSITY stays constant per capita.  A k-fold
-stack of IDENTICAL rows would grow the true near-dup output itself
-quadratically by construction and measure the data, not the plan: the
-first run of this probe did exactly that and "found" embedding_neardup
-going 8.5x on 4x data purely because every replica pair was a genuine
-dup).  Each query is warmed once untimed (plan compilation/codegen
-dominates sub-second queries), then timed cold-cache at every scale.
-A scale-safe plan should grow ~linearly in rows modulo fixed job
-overhead; anything super-linear is flagged.
+Each run is an op of ``perfbench/spans.py``'s ``Tracer``, in three
+phases: ``build`` (the catalog call, eager jobs included), ``plan``
+(``executedPlan()``) and ``action`` (a noop write).  The Spark event log
+is on (a temp dir, removed at exit); once the session stops, spans'
+event-log join gives one JSON line per query and scale: phase seconds,
+eager jobs, jobs, stages, tasks, busy cores, shuffle and spill.  Each
+query is warmed up once, untimed, on ``warmup_dir`` of its first dir.
+``SMVD_IVF_MEMO=0``: every number is unamortized (bench.py amortizes).
 
-Usage: python tools/scaling_probe.py [--scales 1,4,16] [--out SCALING.md]
+Named queries run at ``$SPARK_GRAFT_SF_DIR`` unless ``--scales`` is
+given; a wave (wave 1 when no query is named) runs at 1x/4x/16x unless
+``--scales`` says otherwise.  Replicas of the base scale live under a
+dir keyed by the base, with doc_id/vec_id offset per replica so keys
+stay unique; each replica's text is decorrelated and its embedding
+ROTATED by the replica index (norm-preserving, cosine ~0 against the
+original), so near-dup/similarity DENSITY stays constant per capita.
+A stack of IDENTICAL rows grows the true near-dup output quadratically
+and measures the data, not the plan: the first run of this probe
+"found" embedding_neardup going 8.5x on 4x data that way.  A scale-safe
+plan grows ~linearly modulo fixed job overhead.
+
+Usage: python tools/scaling_probe.py [--runs=N] [--scales=1,4,16 | --wave=W] q1 q2 ...
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.append(os.path.join(REPO, "perfbench"))  # spans
 
-BASE = "/root/testdata/sf0.1"
+from signal_messenger_vector_database_spark.io.sources import DEFAULT_SF_DIR  # noqa: E402
+
+# the scale the probes time and replicate: $SPARK_GRAFT_SF_DIR, else
+# bench.py's default sf0.1 beside the default fixture dir
+BASE = os.environ.get(
+    "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.1")
+)
 WORK = "/tmp/smvd_scaling_probe"
+
+
+def replica_root(work: str) -> str:
+    """``work``'s subdirectory for replicas of BASE: keyed by the base
+    dir, so a cached replica of one base never serves a run on another."""
+    base = os.path.abspath(BASE)
+    digest = hashlib.md5(base.encode()).hexdigest()[:8]
+    return os.path.join(work, f"{os.path.basename(base)}-{digest}")
+
 
 # (query name, tables it reads) — documents/embeddings only, so the probe
 # replicates just those.
@@ -377,7 +400,7 @@ def build_scaled_subst(spark, k: int) -> str:
     sets, so the banded join's growth is the PLAN's."""
     from pyspark.sql import functions as F
 
-    out = os.path.join(WORK, f"s{k}")
+    out = os.path.join(replica_root(WORK), f"s{k}")
     if os.path.exists(os.path.join(out, "_OK1")):
         return out
     shutil.rmtree(out, ignore_errors=True)
@@ -416,7 +439,7 @@ def build_scaled(spark, k: int) -> str:
     """Replicate documents + embeddings k-fold with unique ids."""
     from pyspark.sql import functions as F
 
-    out = os.path.join(WORK, f"x{k}")
+    out = os.path.join(replica_root(WORK), f"x{k}")
     if os.path.exists(os.path.join(out, "_OK4")):
         return out
     shutil.rmtree(out, ignore_errors=True)
@@ -544,84 +567,118 @@ def build_scaled(spark, k: int) -> str:
     return out
 
 
+WAVES = {
+    "1": PROBES, "2": PROBES_WAVE2, "3": PROBES_WAVE3, "4": PROBES_WAVE4,
+    "5": PROBES_WAVE5, "6": PROBES_WAVE6, "7": PROBES_WAVE7, "8": PROBES_WAVE8,
+    "9": PROBES_WAVE9, "10": PROBES_WAVE10, "11": PROBES_WAVE11,
+    "12": PROBES_WAVE12, "13": PROBES_WAVE13, "17": PROBES_WAVE17,
+    "18": PROBES_WAVE18, "20": PROBES_WAVE20, "20b": PROBES_WAVE20B,
+    "20c": PROBES_WAVE20C, "28": PROBES_WAVE28,
+}
+USAGE = "usage: scaling_probe.py [--runs=N] [--scales=1,4,16 | --wave=W] q1 q2 ..."
+
+
 def main() -> None:
-    # per-operator COLD cost is the probe's contract; the r12 session
-    # memo would amortize seam consumers after the first and break
-    # comparability with the historical SCALING.md series
-    os.environ["SMVD_IVF_MEMO"] = "0"
-    scales = [1, 4, 16]
-    waves = {
-        "1": PROBES,
-        "2": PROBES_WAVE2,
-        "3": PROBES_WAVE3,
-        "4": PROBES_WAVE4,
-        "5": PROBES_WAVE5,
-        "6": PROBES_WAVE6,
-        "7": PROBES_WAVE7,
-        "8": PROBES_WAVE8,
-        "9": PROBES_WAVE9,
-        "10": PROBES_WAVE10,
-        "11": PROBES_WAVE11,
-        "12": PROBES_WAVE12,
-        "13": PROBES_WAVE13,
-        "17": PROBES_WAVE17,
-        "18": PROBES_WAVE18,
-        "20": PROBES_WAVE20,
-        "20b": PROBES_WAVE20B,
-        "20c": PROBES_WAVE20C,
-        "28": PROBES_WAVE28,
-    }
-    probes = PROBES
+    runs, scales, wave, names = 1, None, None, []
     for a in sys.argv[1:]:
-        if a.startswith("--scales="):
+        if a.startswith("--runs="):
+            runs = int(a.split("=", 1)[1])
+        elif a.startswith("--scales="):
             scales = [int(x) for x in a.split("=", 1)[1].split(",")]
         elif a.startswith("--wave="):
             wave = a.split("=", 1)[1]
-            if wave not in waves:
-                sys.exit(f"unknown wave {wave!r}; choose one of {sorted(waves)}")
-            probes = waves[wave]
+            if wave not in WAVES:
+                sys.exit(f"unknown wave {wave!r}; choose one of {sorted(WAVES)}")
+        elif a.startswith("--"):
+            sys.exit(f"unrecognized argument {a!r}\n{USAGE}")
         else:
-            sys.exit(f"unrecognized argument {a!r} (use --scales=1,4,16 --wave=N)")
-
-    from signal_messenger_vector_database_spark.session import get_spark
+            names.append(a)
+    if wave is not None and names:
+        sys.exit(f"name queries or a wave, not both\n{USAGE}")
+    if not names:
+        names = WAVES[wave or "1"]
+        scales = scales or [1, 4, 16]
 
     import __spark_entry__ as entry
 
-    spark = get_spark("scaling-probe")
-    spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"not in the catalog: {unknown}")
 
-    dirs = {k: build_scaled(spark, k) for k in scales}
-    # substituted-vocab twin dirs, built only when this run probes a
-    # unigram-set operator (wave 20c)
-    sdirs = (
-        {k: build_scaled_subst(spark, k) for k in scales}
-        if any(p in SUBST_PROBES for p in probes)
-        else {}
+    # per-query COLD cost is the probe's contract; the session memo would
+    # amortize seam consumers after the first and break comparability
+    # with the historical SCALING.md series
+    os.environ["SMVD_IVF_MEMO"] = "0"
+    log_dir = tempfile.mkdtemp(prefix="smvd_probe_eventlog_")
+    # the event log is a launch-time setting: it goes in before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir=file://{log_dir} "
+        "--conf spark.eventLog.compress=false --conf spark.eventLog.rolling.enabled=false "
+        "pyspark-shell"
     )
+    try:
+        _probe(qs, names, scales, runs, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
-    def probe_dir(name: str, k: int) -> str:
-        return sdirs[k] if name in SUBST_PROBES and sdirs else dirs[k]
 
-    # untimed warmup: plan compilation + codegen caches
-    for name in probes:
-        qs[name](spark, probe_dir(name, scales[0])).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        spark.catalog.clearCache()
+def _probe(qs, names, scales, runs, log_dir) -> None:
+    import spans
 
-    results: dict[str, dict[int, float]] = {}
-    for name in probes:
-        results[name] = {}
-        for k in scales:
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[name](spark, probe_dir(name, k)).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            results[name][k] = round(dt, 2)
-            print(f"{name:28s} x{k:<3d} {dt:7.2f}s", flush=True)
+    from signal_messenger_vector_database_spark.io.sources import warmup_dir
+    from signal_messenger_vector_database_spark.session import get_spark
 
-    print(json.dumps({n: r for n, r in results.items()}))
+    spark = get_spark("scaling-probe")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+
+    dirs, subst = {os.path.basename(BASE): BASE}, {}
+    if scales is not None:
+        dirs = {f"x{k}": build_scaled(spark, k) for k in scales}
+        # substituted-vocab twin dirs, built only when this run probes a
+        # unigram-set operator (wave 20c)
+        if any(n in SUBST_PROBES for n in names):
+            subst = {f"x{k}": build_scaled_subst(spark, k) for k in scales}
+
+    def probe_dir(name: str, at: str) -> str:
+        return subst[at] if name in SUBST_PROBES and subst else dirs[at]
+
+    # untimed warm-up: plan compilation + codegen caches
+    for name in names:
+        qs[name](spark, warmup_dir(probe_dir(name, next(iter(dirs))))).write.format(
+            "noop"
+        ).mode("overwrite").save()
+
+    tracer = spans.Tracer()
+    tracer.sc = sc
+    ops: dict[tuple[str, str], list[str]] = {}
+    for name in names:
+        for at in dirs:
+            for i in range(runs):
+                spark.catalog.clearCache()
+                op = f"{name}|{at}|{i}"
+                with tracer.span("op", op) as total:
+                    with tracer.phase("build") as build:
+                        df = qs[name](spark, probe_dir(name, at))
+                    with tracer.phase("plan") as plan:
+                        df._jdf.queryExecution().executedPlan()
+                    with tracer.phase("action") as action:
+                        df.write.format("noop").mode("overwrite").save()
+                ops.setdefault((name, at), []).append(op)
+                secs = [r["end"] - r["start"] for r in (build, plan, action, total)]
+                print(
+                    f"{name:28s} {at:6s} run={i}: build={secs[0]:.2f} "
+                    f"plan={secs[1]:.2f} action={secs[2]:.2f} total={secs[3]:.2f}s",
+                    flush=True,
+                )
+    spark.stop()
+
+    jobs = spans.job_metrics(spans.read_event_log(log_dir))
+    for (name, at), op_ids in ops.items():
+        rec = {"query": name, "at": at, "runs": len(op_ids)}
+        rec.update(spans.layer_metrics(tracer, jobs, op_ids))
+        print(json.dumps(rec))
 
 
 if __name__ == "__main__":

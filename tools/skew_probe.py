@@ -38,14 +38,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-BASE = "/root/testdata/sf0.1"
+from scaling_probe import BASE, replica_root  # noqa: E402
+
 WORK = "/tmp/smvd_skew_probe"
 
 
 def build_skewed(spark, k: int) -> str:
     from pyspark.sql import functions as F
 
-    out = os.path.join(WORK, f"x{k}")
+    out = os.path.join(replica_root(WORK), f"x{k}")
     if os.path.exists(os.path.join(out, "_OK1")):
         return out
     shutil.rmtree(out, ignore_errors=True)

@@ -52,7 +52,9 @@ def _fixed_batch(spark):
     from the history (plan cost, not data cost)."""
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").filter(
+    from scaling_probe import BASE
+
+    docs = spark.read.parquet(os.path.join(BASE, "documents.parquet")).filter(
         F.col("doc_id") < BATCH_DOCS
     )
     subst = F.array_join(
